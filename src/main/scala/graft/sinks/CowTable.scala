@@ -359,23 +359,28 @@ object CowTable {
   val KindDv = "dv"
   private val DvDirName = "__dv"
 
-  /** Compute + persist one commit's signed changelog into a STAGING
-    * directory (the expensive join runs here, outside any lock);
-    * [[publishChangeLog]] renames it into `_changes/<id>/` only after
-    * the commit's based-on verification passes — an aborted commit
-    * must never leave a servable sidecar for an id that never
-    * committed (a feed consumer would apply changes that never took
-    * effect).
+  /** Persist one commit's signed changelog frame (table columns then
+    * [[ChangeOper]]) into a STAGING directory (the expensive work runs
+    * here, outside the manifest lock); [[publishChangeLog]] renames it
+    * into `_changes/<id>/` only after the commit's based-on
+    * verification passes — an aborted commit must never leave a
+    * servable sidecar for an id that never committed (a feed consumer
+    * would apply changes that never took effect).
     */
   private def stageChangeLog(
-      spark: SparkSession, root: String, id: Long,
-      before: DataFrame, after: DataFrame, keyCols: Seq[String]): Path = {
+      spark: SparkSession, root: String, id: Long, log: DataFrame): Path = {
     val staging = new Path(
       s"$root/$ChangesDir/.tmp-$id-${java.util.UUID.randomUUID()}")
-    Cdc.changelogSigned(before, after, keyCols, ChangeOper)
-      .write.mode("overwrite").parquet(staging.toString)
+    log.write.mode("overwrite").parquet(staging.toString)
     staging
   }
+
+  /** `df`'s rows as changelog rows of kind `oper` (D/I), in the
+    * canonical sidecar column order: table schema, then [[ChangeOper]].
+    */
+  private def signedRows(m: CowManifest, df: DataFrame, oper: String): DataFrame =
+    df.withColumn(ChangeOper, lit(oper))
+      .select((m.schema.fieldNames.toSeq :+ ChangeOper).map(col): _*)
 
   private def publishChangeLog(
       spark: SparkSession, root: String, id: Long, staging: Path): Unit = {
@@ -615,8 +620,12 @@ object CowTable {
           : Boolean = size > ManifestMemoMax
     }
 
-  /** Spec hook: manifest PARSES (Spark parquet jobs) per qualified
-    * root — `DeltaManifestSpec` pins one parse per (root, id) per JVM.
+  /** Manifest PARSES (memo misses that read a manifest or checkpoint
+    * dir — driver-side or distributed, see [[manifestFrame]]) per
+    * qualified root. Consumed as a MONOTONIC delta (PlanDump's
+    * `parses=`, `DeltaManifestSpec`'s one parse per (root, id) per
+    * JVM), so it is never cleared: it grows by one entry per distinct
+    * root that ever parsed.
     */
   private[graft] val manifestParses =
     new java.util.concurrent.ConcurrentHashMap[String, Long]()
@@ -718,9 +727,6 @@ object CowTable {
     hit match {
       case Some((_, m)) => m
       case None =>
-        // diagnostics only — bounded unlike the LRU'd memo (a long
-        // driver over many ephemeral roots must not grow it forever)
-        if (manifestParses.size > 1024) manifestParses.clear()
         manifestParses.merge(qroot, 1L, (a, b) => a + b)
         // a committed checkpoint short-circuits the delta chain: the
         // full resolved list in one parse, no base needed (what lets
@@ -1748,22 +1754,16 @@ object CowTable {
     if (eff.toDDL == m.schemaDdl) return true // no-op ALTER — id unconsumed
     val unsafe = bloomUnsafeCols(m, eff)
     val files = m.allFiles.map(stripUnsafeStats(_, unsafe))
-    acquireCommitLock(spark, root, id)
-    try {
-      if (committedIds(spark, root).exists(_ >= id)) return false
-      commitManifest(spark, root, id, Some(m.id), None) {
+    leasedCommit(spark, root, id, m, keep) {
+      Leased.Rewrite(files, () =>
         // a pure ADD/widen that drops no carried stats changes no
         // entry — the schema rides the delta's own header
         if (deltaEligible(Some(m), m.partCols, unsafe.isEmpty))
           writeManifestDelta(spark, root, id, m, eff.toDDL,
             Nil, Set.empty, mappingForAdds(Some(m), eff))
         else writeManifest(spark, root, id, m.partCols, eff.toDDL, files,
-          mappingForAdds(Some(m), eff))
-      }
-    } finally releaseCommitLock(spark, root, id)
-    vacuum(spark, root, keep, Map(
-      id -> files.map(_.path), m.id -> m.allFiles.map(_.path)))
-    true
+          mappingForAdds(Some(m), eff)))
+    }
   }
 
   /** Column names a CHECK-constraint predicate references (top-level
@@ -2036,21 +2036,15 @@ object CowTable {
     }
     val newSchema = StructType(newFields)
     if (newSchema.toDDL == m.schemaDdl) return true // no-op
-    acquireCommitLock(spark, root, id)
-    try {
-      if (committedIds(spark, root).exists(_ >= id)) return false
-      commitManifest(spark, root, id, Some(m.id), None) {
+    leasedCommit(spark, root, id, m, keep) {
+      Leased.Rewrite(m.allFiles, () =>
         // a reorder changes no entry at all — pure schema delta
         if (deltaEligible(Some(m), m.partCols, statsPreserved = true))
           writeManifestDelta(spark, root, id, m, newSchema.toDDL,
             Nil, Set.empty, mappingOf(Some(m)))
         else writeManifest(spark, root, id, m.partCols, newSchema.toDDL,
-          m.allFiles, mappingOf(Some(m)))
-      }
-    } finally releaseCommitLock(spark, root, id)
-    vacuum(spark, root, keep, Map(
-      id -> m.allFiles.map(_.path), m.id -> m.allFiles.map(_.path)))
-    true
+          m.allFiles, mappingOf(Some(m))))
+    }
   }
 
   /** `ALTER TABLE … DROP COLUMN` as a METADATA-ONLY commit: carried
@@ -2104,17 +2098,11 @@ object CowTable {
     val files = m.allFiles.map(f => f.copy(
       mins = f.mins - name, maxs = f.maxs - name,
       blooms = f.blooms - name, nulls = f.nulls - name))
-    acquireCommitLock(spark, root, id)
-    try {
-      if (committedIds(spark, root).exists(_ >= id)) return false
-      commitManifest(spark, root, id, Some(m.id), None) {
+    leasedCommit(spark, root, id, m, keep) {
+      Leased.Rewrite(files, () =>
         writeManifest(spark, root, id, m.partCols, newSchema.toDDL,
-          files, (m.colMap - name, m.retiredPhys :+ m.phys(name)))
-      }
-    } finally releaseCommitLock(spark, root, id)
-    vacuum(spark, root, keep, Map(
-      id -> files.map(_.path), m.id -> m.allFiles.map(_.path)))
-    true
+          files, (m.colMap - name, m.retiredPhys :+ m.phys(name))))
+    }
   }
 
   // -------------------------------------------------------------------
@@ -3878,24 +3866,6 @@ object CowTable {
   // Commit concurrency: per-id lease + based-on verification
   // -------------------------------------------------------------------
 
-  /** Opt-in SINGLE-WRITER fast path (-Dgraft.cow.singleWriter=true):
-    * the operator guarantees exactly one writer process per table, so
-    * the per-id lease and the table-wide manifest lock — whose only
-    * job is excluding CONCURRENT writers — are skipped, saving four
-    * filesystem round-trips per commit (two create-if-absent, two
-    * deletes; each ~50-100 ms on an object store, where they dominate
-    * a small commit's latency). Based-on verification still runs (it
-    * is a pure listing), so a VIOLATED promise — two writers despite
-    * the flag — still fails loud on any interleaving the listing
-    * observes; only the narrow verify→publish window the lock closes
-    * is reopened, which is exactly the contract the flag's name
-    * states. Default off; the oracle queries and specs exercise the
-    * locked path.
-    */
-  private def singleWriter: Boolean =
-    sys.props.get("graft.cow.singleWriter")
-      .exists(v => v == "true" || v == "1")
-
   private def lockPath(root: String, id: Long) =
     new Path(s"$root/_commit-$id.lock")
 
@@ -3960,7 +3930,6 @@ object CowTable {
 
   private def acquireCommitLock(
       spark: SparkSession, root: String, id: Long): Unit = {
-    if (singleWriter) return
     atomicCreate(spark, root, lockPath(root, id),
       new CowConcurrentCommitException(
         s"commit $id at $root: another writer holds the id lease — " +
@@ -3970,7 +3939,6 @@ object CowTable {
 
   private def releaseCommitLock(
       spark: SparkSession, root: String, id: Long): Unit = {
-    if (singleWriter) return
     hfs(spark, root).delete(lockPath(root, id), false)
   }
 
@@ -3991,7 +3959,6 @@ object CowTable {
     */
   private def acquireManifestLock(
       spark: SparkSession, root: String, id: Long): Unit = {
-    if (singleWriter) return
     val waitSec = sys.props.get("graft.cow.manifestLockWaitSec")
       .flatMap(_.toLongOption).getOrElse(60L)
     val deadline = System.nanoTime() + waitSec * 1000000000L
@@ -4013,10 +3980,8 @@ object CowTable {
     }
   }
 
-  private def releaseManifestLock(spark: SparkSession, root: String): Unit = {
-    if (singleWriter) return
+  private def releaseManifestLock(spark: SparkSession, root: String): Unit =
     hfs(spark, root).delete(manifestLockPath(root), false)
-  }
 
   /** Crash repair: remove a commit lease leaked by a writer that died
     * mid-commit (lock present, no `manifest-<id>/_SUCCESS`). The
@@ -4379,8 +4344,9 @@ object CowTable {
           val stub = CowManifest(id, partCols, newDdl, fresh,
             commitMapping._1, commitMapping._2)
           val after = dfFor(spark, root, stub, stub.files)
-          Some(stageChangeLog(spark, root, id,
-            before.getOrElse(after.limit(0)), after, changeLogKeys))
+          Some(stageChangeLog(spark, root, id, Cdc.changelogSigned(
+            before.getOrElse(after.limit(0)), after, changeLogKeys,
+            ChangeOper)))
         }
       commitManifest(spark, root, id, prev.map(_.id), stagedLog) {
         // DELTA when the carried entries are byte-identical to the
@@ -4430,6 +4396,79 @@ object CowTable {
       stagedLog.foreach(publishChangeLog(spark, root, id, _))
       writeManifestBody
     } finally releaseManifestLock(spark, root)
+  }
+
+  /** What a [[leasedCommit]] body decided, under the lease. */
+  private sealed trait Leased
+  private object Leased {
+    /** Nothing to commit: `id` stays unconsumed. `dropBatch` removes
+      * the `batch-<id>` dir the body wrote before finding no change.
+      */
+    final case class NoCommit(dropBatch: Boolean) extends Leased
+    /** The in-place form cannot be exact here: the lease is released,
+      * then `cow` (the copy-on-write twin) answers the call.
+      */
+    final case class Cow(cow: () => Boolean) extends Leased
+    /** Snapshot `id` = the base's entries verbatim plus `adds` (the
+      * adds-only shape every merge-on-read commit has), with
+      * `changeLog` (table columns then [[ChangeOper]]) staged as its
+      * sidecar.
+      */
+    final case class Adds(adds: Seq[CowFile],
+        changeLog: Option[DataFrame]) extends Leased
+    /** A metadata-only commit: `files` is the new snapshot's entry
+      * list and `write` publishes its manifest.
+      */
+    final case class Rewrite(files: Seq[CowFile], write: () => Unit)
+        extends Leased
+  }
+
+  /** The in-place commit skeleton on base `m`: take the per-id lease,
+    * re-check the id (an FS listing, no Spark job), run `body`, then
+    * act on its [[Leased]] outcome — stage the changelog, publish the
+    * manifest through [[commitManifest]], release the lease, and
+    * vacuum with the two snapshots' entries already known. Returns
+    * false when `id` is already committed.
+    */
+  private def leasedCommit(
+      spark: SparkSession, root: String, id: Long, m: CowManifest,
+      keep: Int)(body: => Leased): Boolean = {
+    var vacuumKnown: Map[Long, Seq[String]] = Map.empty
+    var leased = true
+    acquireCommitLock(spark, root, id)
+    try {
+      if (committedIds(spark, root).exists(_ >= id)) return false
+      body match {
+        case Leased.NoCommit(dropBatch) =>
+          if (dropBatch)
+            hfs(spark, root).delete(new Path(s"$root/$BatchPrefix$id"), true)
+          return true
+        case Leased.Cow(cow) =>
+          releaseCommitLock(spark, root, id)
+          leased = false // the finally must not delete a lease a
+                         // concurrent same-id writer may re-acquire
+          return cow()
+        case Leased.Adds(adds, changeLog) =>
+          val stagedLog = changeLog.map(stageChangeLog(spark, root, id, _))
+          commitManifest(spark, root, id, Some(m.id), stagedLog) {
+            // every previous entry (data, tombstones, older DVs)
+            // carries over verbatim
+            if (deltaEligible(Some(m), m.partCols, statsPreserved = true))
+              writeManifestDelta(spark, root, id, m, m.schemaDdl,
+                adds, Set.empty, mappingOf(Some(m)))
+            else writeManifest(spark, root, id, m.partCols, m.schemaDdl,
+              m.allFiles ++ adds, mappingOf(Some(m)))
+          }
+          vacuumKnown = Map(id -> (m.allFiles ++ adds).map(_.path),
+            m.id -> m.allFiles.map(_.path))
+        case Leased.Rewrite(files, write) =>
+          commitManifest(spark, root, id, Some(m.id), None)(write())
+          vacuumKnown = Map(id -> files.map(_.path),
+            m.id -> m.allFiles.map(_.path))
+      }
+    } finally if (leased) releaseCommitLock(spark, root, id)
+    vacuum(spark, root, keep, vacuumKnown)
+    true
   }
 
 
@@ -4514,8 +4553,8 @@ object CowTable {
         None
       } else {
         val after = dfFor(spark, root, stub, stub.files)
-        Some(stageChangeLog(spark, root, id, after.limit(0), after,
-          changeLogKeys))
+        Some(stageChangeLog(spark, root, id, Cdc.changelogSigned(
+          after.limit(0), after, changeLogKeys, ChangeOper)))
       }
     }
   }
@@ -5849,15 +5888,10 @@ object CowTable {
       s"SET column '$c' is not a table column"))
     m.partCols.foreach(p => require(!set.contains(p),
       s"UPDATE SET must not assign partition column '$p'"))
-    var vacuumKnown: Map[Long, Seq[String]] = Map.empty
-    var lockHeld = false
-    acquireCommitLock(spark, root, id)
-    lockHeld = true
-    try {
-      if (committedIds(spark, root).exists(_ >= id)) return false
+    def underLease(): Leased = {
       val candidates =
         if (prune.isEmpty) m.files else keptFiles(spark, m, prune)
-      if (candidates.isEmpty) return true
+      if (candidates.isEmpty) return Leased.NoCommit(dropBatch = false)
       val fields = m.schema.fields.toSeq
       val candScan = resolved(spark, root, m, candidates, prune)
       // same loud-failure guard as the COW twin (see checkedAssignments)
@@ -5905,13 +5939,9 @@ object CowTable {
           case (cols, t) =>
             !ni.select(cols.map(col): _*).intersect(t).isEmpty
         }
-      if (collides || tombCollides) {
-        releaseCommitLock(spark, root, id)
-        lockHeld = false // the finally must not delete a lease a
-                         // concurrent same-id writer may re-acquire
-        return updateWhere(spark, root, id, cond, set, prune, keep,
-          changeLogKeys = changeLogKeys)
-      }
+      if (collides || tombCollides)
+        return Leased.Cow(() => updateWhere(spark, root, id, cond, set,
+          prune, keep, changeLogKeys = changeLogKeys))
       // CHECK constraints bind the NEW images exactly as they bind the
       // COW twin's rewritten rows (commitPartitionsFrom enforces there)
       // — without this the MOR path would commit an UPDATE the
@@ -5932,41 +5962,22 @@ object CowTable {
       val freshTombs = collectEntries(spark, tombDir, id, m.schema,
         m.partCols, colMap = m.colMap)
         .map(_.copy(kind = KindTombstone))
-      if (freshData.isEmpty && freshTombs.isEmpty) {
-        hfs(spark, root).delete(new Path(batchDir), true)
-        return true // nothing changed — id unconsumed
-      }
-      val stagedLog =
+      if (freshData.isEmpty && freshTombs.isEmpty)
+        Leased.NoCommit(dropBatch = true) // nothing changed
+      else Leased.Adds(freshTombs ++ freshData,
         if (changeLogKeys.isEmpty) None
         else {
-          val staging = new Path(
-            s"$root/$ChangesDir/.tmp-$id-${java.util.UUID.randomUUID()}")
           val dStub = CowManifest(id, m.partCols, m.schemaDdl,
             freshTombs.map(_.copy(kind = KindData)),
             m.colMap, m.retiredPhys)
           val iStub = CowManifest(id, m.partCols, m.schemaDdl,
             freshData, m.colMap, m.retiredPhys)
-          dfFor(spark, root, dStub, dStub.files)
-            .withColumn(ChangeOper, lit("D"))
-            .unionByName(dfFor(spark, root, iStub, iStub.files)
-              .withColumn(ChangeOper, lit("I")))
-            .select((m.schema.fieldNames.toSeq :+ ChangeOper).map(col): _*)
-            .write.mode("overwrite").parquet(staging.toString)
-          Some(staging)
-        }
-      commitManifest(spark, root, id, Some(m.id), stagedLog) {
-        if (deltaEligible(Some(m), m.partCols, statsPreserved = true))
-          writeManifestDelta(spark, root, id, m, m.schemaDdl,
-            freshTombs ++ freshData, Set.empty, mappingOf(Some(m)))
-        else writeManifest(spark, root, id, m.partCols, m.schemaDdl,
-          m.allFiles ++ freshTombs ++ freshData, mappingOf(Some(m)))
-      }
-      vacuumKnown = Map(
-        id -> (m.allFiles ++ freshTombs ++ freshData).map(_.path),
-        m.id -> m.allFiles.map(_.path))
-    } finally if (lockHeld) releaseCommitLock(spark, root, id)
-    vacuum(spark, root, keep, vacuumKnown)
-    true
+          Some(signedRows(m, dfFor(spark, root, dStub, dStub.files), "D")
+            .unionByName(signedRows(m,
+              dfFor(spark, root, iStub, iStub.files), "I")))
+        })
+    }
+    leasedCommit(spark, root, id, m, keep)(underLease())
   }
 
   /** PREDICATE UPDATE with POSITIONAL deletion vectors — the update
@@ -6042,15 +6053,10 @@ object CowTable {
     Seq("path", "positions").foreach(c => require(!m.partCols.contains(c),
       s"DV update: partition column '$c' collides with the deletion-" +
         "vector sidecar schema — use updateWhereMor for this table"))
-    var vacuumKnown: Map[Long, Seq[String]] = Map.empty
-    var lockHeld = false
-    acquireCommitLock(spark, root, id)
-    lockHeld = true
-    try {
-      if (committedIds(spark, root).exists(_ >= id)) return false
+    def underLease(): Leased = {
       val candidates =
         if (prune.isEmpty) m.files else keptFiles(spark, m, prune)
-      if (candidates.isEmpty) return true
+      if (candidates.isEmpty) return Leased.NoCommit(dropBatch = false)
       val fields = m.schema.fields.toSeq
       val visible = visibleWithPos(spark, root, m, candidates, prune)
       val setChecked = checkedAssignments(visible, m, setOf(visible))
@@ -6073,12 +6079,10 @@ object CowTable {
           case (cols, t) =>
             !ni.select(cols.map(col): _*).intersect(t).isEmpty
         }
-      if (tombCollides) {
-        releaseCommitLock(spark, root, id)
-        lockHeld = false // a concurrent same-id writer may re-acquire
-        return updateWhereBy(spark, root, id, condOf, setOf, prune, keep,
-          changeLogKeys = changeLogKeys, setsSubquery = setsSubquery)
-      }
+      if (tombCollides)
+        return Leased.Cow(() => updateWhereBy(spark, root, id, condOf,
+          setOf, prune, keep, changeLogKeys = changeLogKeys,
+          setsSubquery = setsSubquery))
       // same enforcement as the COW twin and updateWhereMor
       enforceChecks(ni, checkConstraints(spark, root),
         s"DV update $id at $root")
@@ -6089,40 +6093,18 @@ object CowTable {
         .filter(m.schema.fieldNames.contains)
       val freshData = collectEntries(spark, batchDir, id, m.schema,
         m.partCols, effBloomCols, colMap = m.colMap)
-      if (freshData.isEmpty && freshDv.isEmpty) {
-        hfs(spark, root).delete(new Path(batchDir), true)
-        return true // nothing changed — id unconsumed
-      }
-      val stagedLog =
+      if (freshData.isEmpty && freshDv.isEmpty)
+        Leased.NoCommit(dropBatch = true) // nothing changed
+      else Leased.Adds(freshDv ++ freshData,
         if (changeLogKeys.isEmpty) None
         else {
-          val staging = new Path(
-            s"$root/$ChangesDir/.tmp-$id-${java.util.UUID.randomUUID()}")
           val iStub = CowManifest(id, m.partCols, m.schemaDdl,
             freshData, m.colMap, m.retiredPhys)
-          changed
-            .withColumn(ChangeOper, lit("D"))
-            .select((m.schema.fieldNames.toSeq :+ ChangeOper).map(col): _*)
-            .unionByName(dfFor(spark, root, iStub, iStub.files)
-              .withColumn(ChangeOper, lit("I"))
-              .select((m.schema.fieldNames.toSeq :+ ChangeOper)
-                .map(col): _*))
-            .write.mode("overwrite").parquet(staging.toString)
-          Some(staging)
-        }
-      commitManifest(spark, root, id, Some(m.id), stagedLog) {
-        if (deltaEligible(Some(m), m.partCols, statsPreserved = true))
-          writeManifestDelta(spark, root, id, m, m.schemaDdl,
-            freshDv ++ freshData, Set.empty, mappingOf(Some(m)))
-        else writeManifest(spark, root, id, m.partCols, m.schemaDdl,
-          m.allFiles ++ freshDv ++ freshData, mappingOf(Some(m)))
-      }
-      vacuumKnown = Map(
-        id -> (m.allFiles ++ freshDv ++ freshData).map(_.path),
-        m.id -> m.allFiles.map(_.path))
-    } finally if (lockHeld) releaseCommitLock(spark, root, id)
-    vacuum(spark, root, keep, vacuumKnown)
-    true
+          Some(signedRows(m, changed, "D").unionByName(
+            signedRows(m, dfFor(spark, root, iStub, iStub.files), "I")))
+        })
+    }
+    leasedCommit(spark, root, id, m, keep)(underLease())
   }
 
   /** COPY-ON-WRITE multi-clause MERGE: [[graft.operators.MergeInto]]
@@ -6339,7 +6321,7 @@ object CowTable {
     * manifest, removed = paths it dropped). `n_rows` is the DATA
     * files' count sum — exact when the snapshot has no outstanding
     * delete debt (`tombstone_files == 0 AND dv_files == 0`), an upper
-    * bound otherwise, same caveat as [[countRows]]. Reads only
+    * bound otherwise, same caveat as [[countFast]]. Reads only
     * manifests: O(retained snapshots × files), zero data bytes.
     */
   def history(spark: SparkSession, root: String,
@@ -6434,46 +6416,6 @@ object CowTable {
         coalesce(col(c), lit(0L)).as(c)): _*)
   }
 
-  /** Metadata-only row count: the manifest already knows every data
-    * file's row count, so a tombstone-free table answers `count(*)`
-    * without touching a single data file — the aggregate-pushdown
-    * trick table formats use. None when tombstones are outstanding
-    * (their matched-row counts are unknown until a read or fold).
-    */
-  def countRows(spark: SparkSession, root: String): Option[Long] =
-    currentManifest(spark, root).flatMap(m =>
-      if (m.tombstones.nonEmpty || m.dvs.nonEmpty) None
-      else Some(m.files.map(_.rows).sum))
-
-  /** Metadata-only global (min, max) of a column, in Spark string
-    * form: the fold of the per-file envelopes. An absent per-file
-    * stat means UNKNOWN, so the fold is only sound when every file
-    * reports — None when any file lacks the stat (unsupported type,
-    * long-string max dropped, all-NULL file), when any pair is
-    * incomparable (NaN), or when tombstones are outstanding (a
-    * deleted row may BE the extreme).
-    */
-  def minMaxOf(
-      spark: SparkSession, root: String, colName: String): Option[(String, String)] =
-    currentManifest(spark, root).flatMap { m =>
-      val dtOpt = m.schema.fields.find(_.name == colName).map(_.dataType)
-      (dtOpt, m.tombstones.isEmpty && m.dvs.isEmpty && m.files.nonEmpty) match {
-        case (Some(dt), true) =>
-          def fold(vals: Seq[Option[String]], keepLeft: Int => Boolean) =
-            if (vals.exists(_.isEmpty)) None
-            else vals.flatten.foldLeft(Option(vals.flatten.head)) {
-              case (Some(a), b) =>
-                statCompare(dt, a, b).map(c => if (keepLeft(c)) a else b)
-              case (None, _) => None
-            }
-          for {
-            lo <- fold(m.files.map(_.mins.get(colName)), _ <= 0)
-            hi <- fold(m.files.map(_.maxs.get(colName)), _ >= 0)
-          } yield (lo, hi)
-        case _ => None
-      }
-    }
-
   // -------------------------------------------------------------------
   // Merge-on-read deletes
   // -------------------------------------------------------------------
@@ -6515,10 +6457,7 @@ object CowTable {
     val cols = (keyCols ++ partCols).distinct
     cols.foreach(c => require(m.schema.fieldNames.contains(c),
       s"tombstone column $c is not a table column"))
-    var vacuumKnown: Map[Long, Seq[String]] = Map.empty
-    acquireCommitLock(spark, root, id)
-    try {
-      if (committedIds(spark, root).exists(_ >= id)) return false // ID-only recheck: FS listing, no Spark job
+    leasedCommit(spark, root, id, m, keep) {
       val tombSchema = StructType(cols.map(c => m.schema(c)))
       val tombDir = s"$root/$BatchPrefix$id/__tomb"
       val distinctKeys = keys.select(cols.map(col): _*).distinct()
@@ -6527,7 +6466,7 @@ object CowTable {
       val fresh = collectEntries(spark, tombDir, id, tombSchema, partCols,
         colMap = m.colMap)
         .map(_.copy(kind = KindTombstone))
-      val stagedLog =
+      Leased.Adds(fresh,
         if (!changeLog) None
         else {
           // the batch's changelog is pure D rows: the CURRENT visible
@@ -6536,32 +6475,11 @@ object CowTable {
           val touched = touchedKeys(keys, partCols)
           val before = resolved(spark, root, m,
             m.files.filter(f => touched.contains(m.partKeyOf(f))))
-          val staging = new Path(
-            s"$root/$ChangesDir/.tmp-$id-${java.util.UUID.randomUUID()}")
-          before
+          Some(signedRows(m, before
             .join(broadcast(keys.select(keyCols.map(col): _*).distinct()),
-              keyCols, "left_semi")
-            .withColumn(ChangeOper, lit("D"))
-            // canonical sidecar column order: table schema then _oper
-            .select((m.schema.fieldNames.toSeq :+ ChangeOper).map(col): _*)
-            .write.mode("overwrite").parquet(staging.toString)
-          Some(staging)
-        }
-      commitManifest(spark, root, id, Some(m.id), stagedLog) {
-        // deletes only ADD: every previous entry (data and tombstones)
-        // carries over verbatim — the adds-only delta shape
-        if (deltaEligible(Some(m), partCols, statsPreserved = true))
-          writeManifestDelta(spark, root, id, m, m.schemaDdl,
-            fresh, Set.empty, mappingOf(Some(m)))
-        else writeManifest(spark, root, id, partCols, m.schemaDdl,
-          m.allFiles ++ fresh, mappingOf(Some(m)))
-      }
-      vacuumKnown = Map(
-        id -> (m.allFiles ++ fresh).map(_.path),
-        m.id -> m.allFiles.map(_.path))
-    } finally releaseCommitLock(spark, root, id)
-    vacuum(spark, root, keep, vacuumKnown)
-    true
+              keyCols, "left_semi"), "D"))
+        })
+    }
   }
 
   /** KEYED delete as POSITIONAL deletion vectors — the positional
@@ -6608,47 +6526,21 @@ object CowTable {
     Seq("path", "positions").foreach(c => require(!m.partCols.contains(c),
       s"DV delete: partition column '$c' collides with the deletion-" +
         "vector sidecar schema — use deleteKeysMor for this table"))
-    var vacuumKnown: Map[Long, Seq[String]] = Map.empty
-    acquireCommitLock(spark, root, id)
-    try {
-      if (committedIds(spark, root).exists(_ >= id)) return false
+    def underLease(): Leased = {
       val touched = touchedKeys(keys, partCols)
       val candidates = m.files.filter(f => touched.contains(m.partKeyOf(f)))
-      if (candidates.isEmpty) return true // no partition can match — id unconsumed
+      if (candidates.isEmpty) return Leased.NoCommit(dropBatch = false)
       val visible = visibleWithPos(spark, root, m, candidates, Nil)
       val k = broadcast(keys.select(keyCols.map(col): _*).distinct())
       val matched0 = visible.join(k,
         keyCols.map(c => visible(c) <=> k(c)).reduce(_ && _), "left_semi")
       val matched = if (changeLog) matched0.localCheckpoint() else matched0
       val fresh = writeDvSidecar(spark, root, m, id, matched)
-      if (fresh.isEmpty) {
-        hfs(spark, root).delete(new Path(s"$root/$BatchPrefix$id"), true)
-        return true // no row matched — id unconsumed
-      }
-      val stagedLog =
-        if (!changeLog) None
-        else {
-          val staging = new Path(
-            s"$root/$ChangesDir/.tmp-$id-${java.util.UUID.randomUUID()}")
-          matched
-            .withColumn(ChangeOper, lit("D"))
-            .select((m.schema.fieldNames.toSeq :+ ChangeOper).map(col): _*)
-            .write.mode("overwrite").parquet(staging.toString)
-          Some(staging)
-        }
-      commitManifest(spark, root, id, Some(m.id), stagedLog) {
-        if (deltaEligible(Some(m), partCols, statsPreserved = true))
-          writeManifestDelta(spark, root, id, m, m.schemaDdl,
-            fresh, Set.empty, mappingOf(Some(m)))
-        else writeManifest(spark, root, id, partCols, m.schemaDdl,
-          m.allFiles ++ fresh, mappingOf(Some(m)))
-      }
-      vacuumKnown = Map(
-        id -> (m.allFiles ++ fresh).map(_.path),
-        m.id -> m.allFiles.map(_.path))
-    } finally releaseCommitLock(spark, root, id)
-    vacuum(spark, root, keep, vacuumKnown)
-    true
+      if (fresh.isEmpty) Leased.NoCommit(dropBatch = true) // no row matched
+      else Leased.Adds(fresh,
+        if (changeLog) Some(signedRows(m, matched, "D")) else None)
+    }
+    leasedCommit(spark, root, id, m, keep)(underLease())
   }
 
   /** PREDICATE MERGE-ON-READ delete — deletion-vector economics for
@@ -6688,57 +6580,32 @@ object CowTable {
     if (committedIds(spark, root).exists(_ >= id)) return false
     val m = currentManifest(spark, root).getOrElse(
       throw new IllegalStateException(s"no committed snapshot at $root"))
-    var vacuumKnown: Map[Long, Seq[String]] = Map.empty
-    acquireCommitLock(spark, root, id)
-    try {
-      if (committedIds(spark, root).exists(_ >= id)) return false
+    def underLease(): Leased = {
       val candidates =
         if (prune.isEmpty) m.files else keptFiles(spark, m, prune)
-      if (candidates.isEmpty) return true // nothing can match — id unconsumed
+      if (candidates.isEmpty) return Leased.NoCommit(dropBatch = false)
       val matches = resolved(spark, root, m, candidates, prune).where(cond)
       val tombDir = s"$root/$BatchPrefix$id/__tomb"
       writeBatch(matches, tombDir, m.partCols, Nil, colMap = m.colMap)
       val fresh = collectEntries(spark, tombDir, id, m.schema, m.partCols,
         colMap = m.colMap)
         .map(_.copy(kind = KindTombstone))
-      if (fresh.isEmpty) {
-        // no row matched: leave no uncommitted batch dir behind and
-        // return with the id unconsumed, like deleteWhere's empty case
-        hfs(spark, root).delete(new Path(s"$root/$BatchPrefix$id"), true)
-        return true
-      }
-      val stagedLog =
+      // no row matched: leave no uncommitted batch dir behind, like
+      // deleteWhere's empty case
+      if (fresh.isEmpty) Leased.NoCommit(dropBatch = true)
+      else Leased.Adds(fresh,
         if (!changeLog) None
         else {
-          val staging = new Path(
-            s"$root/$ChangesDir/.tmp-$id-${java.util.UUID.randomUUID()}")
           // read the WRITTEN tombstones back rather than re-running the
           // candidate scan: one pass over O(matched rows), and the
           // sidecar is bit-identical to what readers will subtract
           val stub = CowManifest(id, m.partCols, m.schemaDdl,
             fresh.map(_.copy(kind = KindData)),
             m.colMap, m.retiredPhys)
-          dfFor(spark, root, stub, stub.files)
-            .withColumn(ChangeOper, lit("D"))
-            .select((m.schema.fieldNames.toSeq :+ ChangeOper).map(col): _*)
-            .write.mode("overwrite").parquet(staging.toString)
-          Some(staging)
-        }
-      commitManifest(spark, root, id, Some(m.id), stagedLog) {
-        // a MOR delete only ADDS tombstones: every previous entry
-        // (data and tombstones) carries over verbatim
-        if (deltaEligible(Some(m), m.partCols, statsPreserved = true))
-          writeManifestDelta(spark, root, id, m, m.schemaDdl,
-            fresh, Set.empty, mappingOf(Some(m)))
-        else writeManifest(spark, root, id, m.partCols, m.schemaDdl,
-          m.allFiles ++ fresh, mappingOf(Some(m)))
-      }
-      vacuumKnown = Map(
-        id -> (m.allFiles ++ fresh).map(_.path),
-        m.id -> m.allFiles.map(_.path))
-    } finally releaseCommitLock(spark, root, id)
-    vacuum(spark, root, keep, vacuumKnown)
-    true
+          Some(signedRows(m, dfFor(spark, root, stub, stub.files), "D"))
+        })
+    }
+    leasedCommit(spark, root, id, m, keep)(underLease())
   }
 
   private val DvFpCol = "__dv_fp"
@@ -6885,50 +6752,22 @@ object CowTable {
     Seq("path", "positions").foreach(c => require(!m.partCols.contains(c),
       s"DV delete: partition column '$c' collides with the deletion-" +
         "vector sidecar schema — use deleteWhereMor for this table"))
-    var vacuumKnown: Map[Long, Seq[String]] = Map.empty
-    acquireCommitLock(spark, root, id)
-    try {
-      if (committedIds(spark, root).exists(_ >= id)) return false
+    def underLease(): Leased = {
       val candidates =
         if (prune.isEmpty) m.files else keptFiles(spark, m, prune)
-      if (candidates.isEmpty) return true // nothing can match — id unconsumed
+      if (candidates.isEmpty) return Leased.NoCommit(dropBatch = false)
       val visible = visibleWithPos(spark, root, m, candidates, prune)
       val matched0 = visible.where(coalesce(condOf(visible), lit(false)))
       // two consumers when a changelog is kept (the DV aggregation and
       // the D-row sidecar) — pin so the candidate scan runs once
       val matched = if (changeLog) matched0.localCheckpoint() else matched0
       val fresh = writeDvSidecar(spark, root, m, id, matched)
-      if (fresh.isEmpty) {
-        hfs(spark, root).delete(new Path(s"$root/$BatchPrefix$id"), true)
-        return true // no row matched — id unconsumed
-      }
-      val stagedLog =
-        if (!changeLog) None
-        else {
-          val staging = new Path(
-            s"$root/$ChangesDir/.tmp-$id-${java.util.UUID.randomUUID()}")
-          // the matched rows ARE the before-images — pure D, no diff
-          matched
-            .withColumn(ChangeOper, lit("D"))
-            .select((m.schema.fieldNames.toSeq :+ ChangeOper).map(col): _*)
-            .write.mode("overwrite").parquet(staging.toString)
-          Some(staging)
-        }
-      commitManifest(spark, root, id, Some(m.id), stagedLog) {
-        // a DV delete only ADDS sidecars: every previous entry (data,
-        // tombstones, older DVs) carries over verbatim
-        if (deltaEligible(Some(m), m.partCols, statsPreserved = true))
-          writeManifestDelta(spark, root, id, m, m.schemaDdl,
-            fresh, Set.empty, mappingOf(Some(m)))
-        else writeManifest(spark, root, id, m.partCols, m.schemaDdl,
-          m.allFiles ++ fresh, mappingOf(Some(m)))
-      }
-      vacuumKnown = Map(
-        id -> (m.allFiles ++ fresh).map(_.path),
-        m.id -> m.allFiles.map(_.path))
-    } finally releaseCommitLock(spark, root, id)
-    vacuum(spark, root, keep, vacuumKnown)
-    true
+      if (fresh.isEmpty) Leased.NoCommit(dropBatch = true) // no row matched
+      // the matched rows ARE the before-images: a pure-D sidecar
+      else Leased.Adds(fresh,
+        if (changeLog) Some(signedRows(m, matched, "D")) else None)
+    }
+    leasedCommit(spark, root, id, m, keep)(underLease())
   }
 
   /** Retire all outstanding tombstones AND positional deletion vectors

@@ -436,7 +436,7 @@ class CowTableSpec extends SparkSpec {
       "rewritten partition lost its bloom filters")
   }
 
-  test("metadata aggregates and plan shape: countRows/minMaxOf answer " +
+  test("metadata aggregates and plan shape: countFast/minMaxFast answer " +
       "from the manifest (and refuse when tombstones make them unsound); " +
       "the skipping read's residual filter reaches the parquet scan") {
     val root = tmp()
@@ -444,20 +444,20 @@ class CowTableSpec extends SparkSpec {
       .select($"id", ($"id" % 10).cast("double").as("v"))
       .repartitionByRange(4, $"id")
     CowTable.commitFull(df, root, 1L, Nil, sortCols = Seq("id"))
-    assert(CowTable.countRows(spark, root).contains(1000L))
-    assert(CowTable.minMaxOf(spark, root, "id").contains(("0", "999")))
-    assert(CowTable.minMaxOf(spark, root, "v").contains(("0.0", "9.0")))
-    assert(CowTable.minMaxOf(spark, root, "nope").isEmpty)
+    assert(CowTable.countFast(spark, root).contains(1000L))
+    assert(CowTable.minMaxFast(spark, root, "id").contains(("0", "999")))
+    assert(CowTable.minMaxFast(spark, root, "v").contains(("0.0", "9.0")))
+    assert(CowTable.minMaxFast(spark, root, "nope").isEmpty)
 
     // outstanding tombstones make both unsound → both refuse
     CowTable.deleteKeysMor(spark, root, 2L,
       Seq(999L).toDF("id"), Seq("id"), Nil)
-    assert(CowTable.countRows(spark, root).isEmpty)
-    assert(CowTable.minMaxOf(spark, root, "id").isEmpty)
+    assert(CowTable.countFast(spark, root).isEmpty)
+    assert(CowTable.minMaxFast(spark, root, "id").isEmpty)
     // ...and come back after a fold
     assert(CowTable.foldTombstones(spark, root, 3L))
-    assert(CowTable.countRows(spark, root).contains(999L))
-    assert(CowTable.minMaxOf(spark, root, "id").contains(("0", "998")))
+    assert(CowTable.countFast(spark, root).contains(999L))
+    assert(CowTable.minMaxFast(spark, root, "id").contains(("0", "998")))
 
     // the typed residual predicate is PUSHED to the parquet scan
     val plan = CowTable.readWhereBetween(spark, root, "id",
@@ -604,7 +604,7 @@ class CowTableSpec extends SparkSpec {
     assert(CowTable.read(spark, root).get
       .where($"id" === 5L).count() == 1)
     // metadata-only count == actual count (no tombstones outstanding)
-    assert(CowTable.countRows(spark, root)
+    assert(CowTable.countFast(spark, root)
       .contains(CowTable.read(spark, root).get.count()))
   }
 
@@ -1104,31 +1104,6 @@ class CowTableSpec extends SparkSpec {
       .where($"id" === 1L).select("score").as[Double].head() == 11.0)
     assert(CowTable.read(spark, root).get
       .where($"id" === 1L).select("score").as[Double].head() == 12.0)
-  }
-
-  test("single-writer fast path: commits work without lock files and " +
-      "based-on verification still rejects a stale base") {
-    import graft.sinks.CowConcurrentCommitException
-    val root = tmp()
-    System.setProperty("graft.cow.singleWriter", "true")
-    try {
-      CowTable.commitFull(base3, root, 1L, Seq("part"))
-      val stale = CowTable.currentManifest(spark, root)
-      CowTable.upsert(spark, root, 2L,
-        Seq((1L, "p1", "a", 77.0)).toDF("id", "part", "name", "score"),
-        Seq("id"), Seq("part"))
-      // the flag only removes lock-file round-trips; the listing-based
-      // verification still fails a commit built from a stale manifest
-      intercept[CowConcurrentCommitException] {
-        CowTable.commitPartitionsFrom(stale,
-          Seq((1L, "p1", "a", 10.0)).toDF("id", "part", "name", "score"),
-          Set(CowTable.partKey(Seq("part"), Map("part" -> "p1"))),
-          root, 3L, Seq("part"))
-      }
-      assert(CowTable.read(spark, root).get.where($"id" === 1L)
-        .select("score").as[Double].head() == 77.0)
-      assert(CowTable.committedIds(spark, root) == Seq(1L, 2L))
-    } finally System.clearProperty("graft.cow.singleWriter")
   }
 
   test("change-logged append of an EXISTING key skips the pure-I " +

@@ -68,6 +68,24 @@ class DeltaManifestSpec extends SparkSpec {
       "memo served a deleted table's manifest")
   }
 
+  test("the parse counter never clears itself: past 1,024 roots no " +
+      "key vanishes and a real parse still counts exactly once") {
+    val root = tmp()
+    CowTable.commitFull(rows3, root, 1L, Seq("part"))
+    val qroot = fs(root).makeQualified(new Path(root)).toString
+    val synthetic = (0 until 1025).map(i => s"synthetic:/parse-counter/$i")
+    synthetic.foreach(CowTable.manifestParses.put(_, 1L))
+    try {
+      CowTable.clearManifestMemoForTest()
+      val before = CowTable.manifestParses.getOrDefault(qroot, 0L)
+      assert(CowTable.currentManifest(spark, root).get.id == 1L)
+      assert(synthetic.forall(CowTable.manifestParses.containsKey),
+        "a parse cleared the counter's other keys")
+      val after = CowTable.manifestParses.getOrDefault(qroot, 0L)
+      assert(after == before + 1, s"parses went $before -> $after")
+    } finally synthetic.foreach(CowTable.manifestParses.remove)
+  }
+
   test("delta-shaped commits write O(delta) manifest rows; resolution " +
       "equals the full list, warm and cold") {
     val root = tmp()
