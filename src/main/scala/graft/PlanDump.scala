@@ -73,8 +73,8 @@ object PlanDump {
         new java.io.File(outDir, s"$name.txt"), "UTF-8")
       try {
         w.println(s"== $name @ $sfDir ==")
-        w.println(df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode))
+        w.println(stable(df.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)))
       } finally w.close()
       if (!planOnly) {
         spark.sparkContext.setJobDescription(s"plandump: $name (eval)")
@@ -94,5 +94,26 @@ object PlanDump {
       Console.out.flush()
     }
     spark.stop()
+  }
+
+  /** Plan text with what differs between two runs of the same code
+    * masked, so two dumps of one commit are byte-identical. Expression
+    * and exchange ids count up with session history (and with work on
+    * other threads), so each is renumbered by first appearance, which
+    * keeps which ids are equal; UUIDs (part-file names) and the random
+    * digits `Files.createTempDirectory` appends to a temp dir's name
+    * are masked.
+    */
+  private def stable(plan: String): String = {
+    def renumber(text: String, id: String): String = {
+      val seen = scala.collection.mutable.HashMap.empty[String, Int]
+      s"$id(\\d+)".r.replaceAllIn(text, m =>
+        id + seen.getOrElseUpdate(m.group(1), seen.size + 1))
+    }
+    val tmp = java.util.regex.Pattern.quote(
+      new java.io.File(System.getProperty("java.io.tmpdir")).getPath)
+    renumber(renumber(plan, "#"), "plan_id=")
+      .replaceAll("\\p{XDigit}{8}(-\\p{XDigit}{4}){3}-\\p{XDigit}{12}", "<uuid>")
+      .replaceAll(s"($tmp/[^/\\s,\\])]*?)\\d+(?=[/\\s,\\])]|$$)", "$1<n>")
   }
 }

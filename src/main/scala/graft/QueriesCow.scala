@@ -47,6 +47,11 @@ object QueriesCow {
     d.toString
   }
 
+  // scratch catalog names are unique within the JVM's one session and
+  // the same in every run of the same queries, so plans name them
+  // alike from run to run
+  private val scratchCats = new java.util.concurrent.atomic.AtomicLong(0)
+
   /** A per-run SCRATCH CATALOG for the named-table oracle rows: a
     * unique catalog name registered over its own temp warehouse
     * (namespace `g`). The run's tables stay ALIVE under the returned
@@ -72,8 +77,7 @@ object QueriesCow {
     */
   private[graft] def scratchCat(
       spark: SparkSession, tag: String): (String, String) = {
-    val cat = tag + java.util.UUID.randomUUID().toString
-      .replace("-", "").take(10)
+    val cat = tag + scratchCats.incrementAndGet()
     val wh = scratch(s"wh_$cat")
     spark.conf.set(s"spark.sql.catalog.$cat",
       classOf[graft.catalog.CowCatalog].getName)

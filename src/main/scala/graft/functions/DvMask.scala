@@ -36,6 +36,9 @@ final class SerializableHadoopConf(@transient var value: Configuration)
     value = new Configuration(false)
     value.readFields(in)
   }
+  // constant: plans print it, and an identity hash would make two
+  // runs' plan text differ
+  override def toString: String = "SerializableHadoopConf"
 }
 
 /** The positional-deletion-vector membership test as ONE codegen'd

@@ -2310,19 +2310,12 @@ object CowTable {
     if (range.isEmpty) return None
     val fs = hfs(spark, root)
     val dirs = range.map(i => s"$root/$ChangesDir/$i")
-    if (!dirs.forall(d => fs.exists(new Path(s"$d/_SUCCESS")))) return None
+    val found = dirs.iterator.map(d => sidecarSchema(spark, fs, d))
+      .takeWhile(_.nonEmpty).flatten.toVector
+    if (found.size < dirs.size) return None
     // nullability varies with the writer (an empty fold sidecar vs a
     // delete's semi-join) — compare and read under the relaxed form
-    def relax(dt: DataType): DataType = dt match {
-      case s: StructType => StructType(
-        s.fields.map(f => f.copy(dataType = relax(f.dataType), nullable = true)))
-      case a: ArrayType => a.copy(relax(a.elementType), containsNull = true)
-      case m: MapType =>
-        m.copy(relax(m.keyType), relax(m.valueType), valueContainsNull = true)
-      case other => other
-    }
-    val schemas = dirs
-      .map(d => relax(spark.read.parquet(d).schema).asInstanceOf[StructType])
+    val schemas = found.map(relaxed)
     // schema evolved mid-range: servable anyway when every older
     // sidecar's schema UPCASTS into the newest (the same SchemaCompat
     // widening gate the table's carried data files passed at commit) —
@@ -2365,9 +2358,46 @@ object CowTable {
     if (!committedIds(spark, root).contains(id)) None
     else {
       val d = s"$root/$ChangesDir/$id"
-      if (!hfs(spark, root).exists(new Path(s"$d/_SUCCESS"))) None
-      else Some(spark.read.parquet(d).withColumnRenamed(ChangeOper, operCol))
+      sidecarSchema(spark, hfs(spark, root), d).map(s =>
+        spark.read.schema(s).parquet(d).withColumnRenamed(ChangeOper, operCol))
     }
+  }
+
+  /** A complete `_changes/<id>` sidecar's schema, from one data file's
+    * footer ([[Bridge.footerSchema]]: driver-side, no Spark job) — None
+    * when the dir is missing or has no `_SUCCESS`. The one listing is
+    * also the `_SUCCESS` probe. A footer without a Spark schema falls
+    * back to Spark's inference.
+    */
+  private def sidecarSchema(
+      spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
+      dir: String): Option[StructType] = {
+    val kids =
+      try fs.listStatus(new Path(dir))
+      catch { case _: java.io.FileNotFoundException => return None }
+    if (!kids.exists(_.getPath.getName == "_SUCCESS")) None
+    else Some(kids.map(_.getPath)
+      .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+      .sortBy(_.getName).headOption
+      .flatMap(p => org.apache.spark.sql.graftbridge.Bridge
+        .footerSchema(spark, p.toString))
+      .getOrElse(spark.read.parquet(dir).schema))
+  }
+
+  /** `s` with every field, element and value nullable — the form
+    * Spark's file reader gives a schema, so two writers' schemas that
+    * differ only in nullability compare equal.
+    */
+  private def relaxed(s: StructType): StructType = {
+    def relax(dt: DataType): DataType = dt match {
+      case s: StructType => relaxed(s)
+      case a: ArrayType => a.copy(relax(a.elementType), containsNull = true)
+      case m: MapType =>
+        m.copy(relax(m.keyType), relax(m.valueType), valueContainsNull = true)
+      case other => other
+    }
+    StructType(s.fields.map(f => f.copy(dataType = relax(f.dataType),
+      nullable = true)))
   }
 
   /** Net a concatenation of per-batch SIGNED changelogs down to the
@@ -2526,12 +2556,23 @@ object CowTable {
     // to logical so the anti-join matches the logical read
     val rev = colMap.filter { case (l, p) => l != p }.map(_.swap)
     tombs
-      .groupBy(f =>
-        spark.read.parquet(entryPath(root, f.path)).columns.toSeq)
+      .map { f =>
+        val p = entryPath(root, f.path)
+        p -> org.apache.spark.sql.graftbridge.Bridge.footerSchema(spark, p)
+          .map(relaxed)
+          .getOrElse(spark.read.parquet(p).schema)
+      }
+      .groupBy(_._2.fieldNames.toSeq)
       .toSeq.sortBy(_._1.mkString("\u0001"))
-      .map { case (physCols, fs) =>
-        val raw = spark.read.parquet(
-          fs.map(f => entryPath(root, f.path)): _*)
+      .map { case (physCols, group) =>
+        val paths = group.map(_._1)
+        // one footer schema per group is the common case; files whose
+        // column TYPES differ under the same names keep the inferring
+        // read, which picks one of them as before
+        val raw = group.map(_._2).distinct match {
+          case Seq(schema) => spark.read.schema(schema).parquet(paths: _*)
+          case _ => spark.read.parquet(paths: _*)
+        }
         val logical = physCols.map(c => rev.getOrElse(c, c))
         logical -> raw.select(physCols.zip(logical).map {
           case (ph, lg) => raw(ph).as(lg) }: _*)
@@ -3193,9 +3234,7 @@ object CowTable {
       values.exists(v => mayMatch(m.schema, f, colName, Some(v), Some(v))))
     if (!byStats.exists(_.blooms.contains(colName))) byStats
     else {
-      // ONE 1-row job for every value's hashes (a job per value would
-      // put |values| sequential scheduler round-trips on the serving
-      // path this API exists for)
+      // every value's hashes from ONE driver-side evaluation
       val hashes = bloomHashesOfAll(spark, values, dt)
       byStats.filter(f => f.blooms.get(colName).forall(words =>
         hashes.exists(h => h.nonEmpty && bloomHasValue(words, h)) ||
@@ -3204,13 +3243,13 @@ object CowTable {
   }
 
   /** The [[bloomHashesOf]] canonicalize-and-hash for a whole value
-    * list in ONE 1-row Spark job. Uncastable values yield Nil (no
-    * bloom pruning for them), like the single-value form.
+    * list in ONE evaluation over [[oneRow]]. Uncastable values yield Nil
+    * (no bloom pruning for them), like the single-value form.
     */
-  private def bloomHashesOfAll(
+  private[graft] def bloomHashesOfAll(
       spark: SparkSession, values: Seq[String],
       dt: DataType): Seq[Seq[Long]] = {
-    val row = spark.range(1).select(values.zipWithIndex.map { case (v, i) =>
+    val row = oneRow(spark).select(values.zipWithIndex.map { case (v, i) =>
       val canon = lit(v).cast(dt).cast("string")
       struct(canon.isNull.as("nul"),
         array((0 until BloomHashes).map(k =>
@@ -3375,9 +3414,10 @@ object CowTable {
   private val BloomHashes = 4
 
   /** The raw `xxhash64(k, value)` hashes of a lookup value — computed
-    * BY SPARK (one 1-row job) so the read side can never drift from
-    * the write side's `xxhash64(k, cast(col as string))`; reduced
-    * modulo each FILE's own filter size at check time.
+    * BY SPARK's own expressions (evaluated on the driver over
+    * [[oneRow]]) so the read side can never drift from the write side's
+    * `xxhash64(k, cast(col as string))`; reduced modulo each FILE's own
+    * filter size at check time.
     *
     * The bound is CANONICALIZED through the column's own type first
     * (`cast(cast(v as dt) as string)`): the write side hashed the
@@ -3387,15 +3427,23 @@ object CowTable {
     * live file — the envelope layer's BigDecimal compare is tolerant
     * of exactly this, and the two pruners must agree.
     */
-  private def bloomHashesOf(
+  private[graft] def bloomHashesOf(
       spark: SparkSession, value: String, dt: DataType): Seq[Long] = {
     val canon = lit(value).cast(dt).cast("string")
-    val row = spark.range(1).select(
+    val row = oneRow(spark).select(
       (0 until BloomHashes).map(k => xxhash64(lit(k), canon)): _*)
       .first()
     if (row.anyNull) Nil // uncastable bound: no bloom pruning
     else (0 until BloomHashes).map(row.getLong)
   }
+
+  /** A one-row frame over a `LocalRelation`: a projection of it folds
+    * on the driver (`ConvertToLocalRelation`), so `first()` launches no
+    * Spark job — `spark.range(1)` would launch one per call.
+    */
+  private def oneRow(spark: SparkSession): DataFrame =
+    spark.createDataFrame(java.util.List.of(Row(0)),
+      StructType(Seq(StructField("i", IntegerType))))
 
   private def bloomHasValue(words: Seq[Long], hashes: Seq[Long]): Boolean = {
     val m = words.size.toLong * 64

@@ -131,15 +131,38 @@ object Bridge {
         length = length))
   }
 
+  /** The Spark schema a parquet file's writer stored in its footer
+    * (the `org.apache.spark.sql.parquet.row.metadata` key — the same key
+    * `ParquetFileFormat`'s schema inference reads first), read on the
+    * DRIVER from the footer alone: no Spark job, unlike
+    * `spark.read.parquet(path).schema`, whose `mergeSchemasInParallel`
+    * launches one even for one file. None when the footer carries no
+    * Spark schema (foreign parquet) — callers fall back to inference,
+    * whose parquet-to-Spark type conversion handles that case.
+    */
+  def footerSchema(
+      spark: org.apache.spark.sql.SparkSession,
+      path: String): Option[org.apache.spark.sql.types.StructType] = {
+    val conf = spark.asInstanceOf[classic.SparkSession]
+      .sessionState.newHadoopConf()
+    val footer = org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+      conf, new org.apache.hadoop.fs.Path(path),
+      org.apache.parquet.format.converter.ParquetMetadataConverter
+        .SKIP_ROW_GROUPS)
+    Option(footer.getFileMetaData.getKeyValueMetaData
+        .get("org.apache.spark.sql.parquet.row.metadata"))
+      .flatMap(json => scala.util.Try(
+        org.apache.spark.sql.types.DataType.fromJson(json)
+          .asInstanceOf[org.apache.spark.sql.types.StructType]).toOption)
+  }
+
   /** Spark's OWN parquet reader, DRIVER-SIDE, over an explicit file
     * list — the READ mirror of [[writeParquetDriverSide]]: take the
-    * schema from the first footer's Spark row-metadata key (one
-    * driver-local footer read; `ParquetFileFormat.inferSchema` is NOT
-    * usable here — `mergeSchemasInParallel` launches a Spark job even
-    * for one file), drain every row through the same machinery
-    * [[parquetRowReader]] wraps, and hand the result back as a
-    * DataFrame over a `LocalRelation`. No Spark job is launched by
-    * this call, and none by downstream use: Project/Filter/Limit over
+    * schema from the first file's [[footerSchema]], drain every row
+    * through the same machinery [[parquetRowReader]] wraps, and hand
+    * the result back as a DataFrame over a `LocalRelation`. No Spark
+    * job is launched by this call, and none by downstream use:
+    * Project/Filter/Limit over
     * a LocalRelation fold driver-locally (`ConvertToLocalRelation`),
     * and a bare collect uses `LocalTableScanExec.executeCollect`. For
     * control-plane datasets of O(commit) rows (cow manifests under the
@@ -164,16 +187,7 @@ object Bridge {
       maxRows: Long = Long.MaxValue)
       : Option[org.apache.spark.sql.DataFrame] = {
     val cs = spark.asInstanceOf[classic.SparkSession]
-    val conf = cs.sessionState.newHadoopConf()
-    val footer = org.apache.parquet.hadoop.ParquetFileReader.readFooter(
-      conf, files.head.getPath,
-      org.apache.parquet.format.converter.ParquetMetadataConverter
-        .SKIP_ROW_GROUPS)
-    Option(footer.getFileMetaData.getKeyValueMetaData
-        .get("org.apache.spark.sql.parquet.row.metadata"))
-      .flatMap(json => scala.util.Try(
-        org.apache.spark.sql.types.DataType.fromJson(json)
-          .asInstanceOf[org.apache.spark.sql.types.StructType]).toOption)
+    footerSchema(spark, files.head.getPath.toString)
       .flatMap { schema =>
         val read = parquetRowReader(spark, schema,
           new org.apache.spark.sql.types.StructType(), Map.empty)

@@ -4,6 +4,7 @@ import java.nio.file.Files
 import org.apache.hadoop.fs.Path
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.sinks.CowTable
 
 /** Round-20 pin: COLD manifest parses run DRIVER-SIDE (zero Spark
@@ -123,5 +124,118 @@ class DriverManifestReadSpec extends SparkSpec {
         case None => sys.props.remove(prop): Unit
       }
     }
+  }
+
+  /** A table with TWO tombstone schema groups at its head: a key
+    * tombstone (id, part) and a full-row one (id, part, score).
+    */
+  private def tombstoned(): String = {
+    val root = tmp()
+    CowTable.commitFull(rows3, root, 1L, Seq("part"), keep = 100)
+    assert(CowTable.deleteKeysMor(spark, root, 2L,
+      Seq((1L, "p1")).toDF("id", "part"), Seq("id"), Seq("part"),
+      keep = 100))
+    assert(CowTable.deleteWhereMor(spark, root, 3L, col("id") === 4L,
+      keep = 100))
+    val m = CowTable.currentManifest(spark, root).get
+    assert(m.tombstones.size == 2, "one key and one full-row tombstone")
+    root
+  }
+
+  test("tombstone schemas come from the footers: a head read over key " +
+      "and full-row tombstones is BUILT with zero Spark jobs") {
+    val root = tombstoned()
+    val (jobs, df) = jobsDuring(CowTable.read(spark, root).get)
+    assert(jobs == 0L,
+      s"building a read over 2 tombstone groups launched $jobs Spark jobs")
+    assert(df.select("id", "part", "score").as[(Long, String, Double)]
+      .collect().toSet ==
+      Set((2L, "p1", 20.0), (3L, "p2", 30.0), (5L, "p3", 50.0)))
+  }
+
+  test("tombstone groups alias physical to logical names after a " +
+      "rename, still with zero Spark jobs") {
+    val root = tombstoned()
+    assert(CowTable.renameColumn(spark, root, 4L, "id", "key", keep = 100))
+    val m = CowTable.currentManifest(spark, root).get
+    assert(m.tombstones.size == 2 && m.mapped,
+      "the rename keeps both tombstones and maps key -> physical id")
+    val (jobs, df) = jobsDuring(CowTable.read(spark, root).get)
+    assert(jobs == 0L,
+      s"building a renamed-table read launched $jobs Spark jobs")
+    assert(df.select("key", "part", "score").as[(Long, String, Double)]
+      .collect().toSet ==
+      Set((2L, "p1", 20.0), (3L, "p2", 30.0), (5L, "p3", 50.0)))
+  }
+
+  test("changelog frames are built with zero Spark jobs and keep the " +
+      "schema Spark's inference gives the sidecar") {
+    val root = tmp()
+    CowTable.commitFull(rows3, root, 1L, Seq("part"), keep = 100,
+      changeLogKeys = Seq("id"))
+    CowTable.upsert(spark, root, 2L,
+      Seq((1L, "p1", 11.0), (6L, "p2", 60.0)).toDF("id", "part", "score"),
+      Seq("id"), Seq("part"), keep = 100, changeLog = true)
+    val (jobs, (log, feed)) = jobsDuring {
+      (CowTable.changeLogFor(spark, root, 2L).get,
+        CowTable.changeFeedFromLog(spark, root, 1L, 2L, Seq("id")).get)
+    }
+    assert(jobs == 0L, s"building changelog frames launched $jobs jobs")
+    val inferred = spark.read.parquet(s"$root/${CowTable.ChangesDir}/2")
+    assert(log.schema ==
+      inferred.withColumnRenamed(CowTable.ChangeOper, "oper").schema)
+    assert(feed.schema == StructType(
+      inferred.schema.filterNot(_.name == CowTable.ChangeOper) :+
+        StructField("oper", StringType, nullable = true)))
+    assert(feed.select("id", "oper").as[(Long, String)].collect().toSet ==
+      Set((1L, "U"), (6L, "I")))
+  }
+
+  test("Bloom probes hash on the driver: filesForIn launches no Spark " +
+      "job, and the hashes equal a spark.range(1) evaluation's") {
+    val root = tmp()
+    CowTable.commitFull(rows3, root, 1L, Seq("part"), keep = 100,
+      bloomCols = Seq("id"))
+    val values = Seq("1", "4", "99")
+    val (jobs, kept) = jobsDuring {
+      (CowTable.filesForIn(spark, root, "id", values),
+        CowTable.filesForRange(spark, root, "id", Some("4"), Some("4")))
+    }
+    assert(jobs == 0L, s"Bloom probes launched $jobs Spark jobs")
+    assert(kept._1.map(_.part("part")).toSet == Set("p1", "p2"))
+    assert(kept._2.map(_.part("part")) == Seq("p2"))
+    def onRange(v: String) = {
+      val canon = lit(v).cast(LongType).cast("string")
+      spark.range(1).select((0 until 4).map(k =>
+        xxhash64(lit(k), coalesce(canon, lit("")))): _*)
+        .first().toSeq.map(_.asInstanceOf[Long])
+    }
+    assert(CowTable.bloomHashesOfAll(spark, values, LongType) ==
+      values.map(onRange))
+    assert(values.forall(v =>
+      CowTable.bloomHashesOf(spark, v, LongType) == onRange(v)))
+  }
+
+  test("footerSchema gives the schema Spark infers for a Spark-written " +
+      "file, and None for a footer without a Spark schema") {
+    import org.apache.spark.sql.graftbridge.Bridge
+    val dir = tmp()
+    rows3.write.parquet(s"$dir/spark")
+    val file = new java.io.File(s"$dir/spark").listFiles()
+      .map(_.getPath).filter(_.endsWith(".parquet")).head
+    val footer = Bridge.footerSchema(spark, file)
+    assert(footer.isDefined)
+    assert(spark.read.schema(footer.get).parquet(file).schema ==
+      spark.read.parquet(file).schema)
+    val msg = org.apache.parquet.schema.MessageTypeParser
+      .parseMessageType("message m { required int64 id; }")
+    val foreign = new Path(s"$dir/foreign.parquet")
+    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(foreign).withType(msg)
+      .withConf(spark.sessionState.newHadoopConf()).build()
+    try w.write(new org.apache.parquet.example.data.simple
+      .SimpleGroupFactory(msg).newGroup().append("id", 7L))
+    finally w.close()
+    assert(Bridge.footerSchema(spark, foreign.toString).isEmpty)
   }
 }
