@@ -26,11 +26,4 @@ object Tables {
           org.apache.spark.sql.functions.expr("ts DIV 1000")))
     else raw
   }
-
-  /** Register every table as a temp view (the reference's curated-layer
-    * idiom: createOrReplaceTempView per input, then spark.sql — see
-    * reference jobs/curated/facts/sales_fact/dl_ct_gosales_sales_fact_01.py:49-53).
-    */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
 }

@@ -32,7 +32,6 @@ final case class TableDef(
 
   def columnNames: Seq[String] = columns.map(_.name)
   def mergeKeys: Seq[String] = columns.filter(_.isMergeKey).map(_.name)
-  def maskedColumns: Seq[String] = columns.filter(_.isMasked).map(_.name)
   def partitionKeys: Seq[String] = columns.filter(_.isPartitionKey).map(_.name)
 
   /** Generated extraction SELECT — the analog of the reference's

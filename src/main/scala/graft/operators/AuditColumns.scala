@@ -25,7 +25,4 @@ object AuditColumns {
       .withColumn("source", lit(source))
       .withColumn("oper", lit("I"))
       .withColumn("table_id", lit(tableId))
-
-  val auditColumnNames: Seq[String] =
-    Seq("ins_tmstmp", "upd_tmstmp", "batch_id", "source", "oper", "table_id")
 }

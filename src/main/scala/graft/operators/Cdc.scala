@@ -106,18 +106,6 @@ object Cdc {
       .unionByName(nullKeyed)
   }
 
-  /** Metadata-driven variant: merge keys from the declared schema
-    * (`ColumnDef.isMergeKey` — the `merge_column` contract), matching
-    * [[Merge.upsertFor]].
-    */
-  def applyFor(
-      target: DataFrame,
-      batch: DataFrame,
-      tdef: graft.meta.TableDef,
-      operCol: String = "oper",
-      versionCol: Option[String] = None): DataFrame =
-    apply(target, batch, tdef.mergeKeys, operCol, versionCol)
-
   /** Snapshot diff → CDC changelog: the INVERSE of [[apply]]. Compares
     * two states of a table keyed by `keyCols` and emits one row per
     * difference: `I` (key only in `after`), `D` (key only in `before`,

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Column-level encryption/masking (SURVEY §2.2 R2; reference:
@@ -24,13 +24,6 @@ object Mask {
 
   def decryptColumn(c: Column, key: String, mode: String = "ECB"): Column =
     aes_decrypt(unbase64(c), lit(key), lit(mode)).cast("string")
-
-  /** Masks the configured columns of a frame (metadata-driven, analog of
-    * the reference's masking_column list).
-    */
-  def maskColumns(df: DataFrame, columns: Seq[String], key: String): DataFrame =
-    columns.foldLeft(df)((acc, name) =>
-      acc.withColumn(name, encryptColumn(col(name), key)))
 
   /** SHA-256 one-way masking for join-safe pseudonymization. */
   def hashColumn(c: Column, salt: String = ""): Column =

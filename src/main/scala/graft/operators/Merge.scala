@@ -532,16 +532,6 @@ object Merge {
       Some(operCol), fromCol, toCol, currentCol, tiebreak)
   }
 
-  /** Metadata-driven SCD-2: merge keys from the declared schema
-    * (`ColumnDef.isMergeKey`), same contract as [[upsertFor]].
-    */
-  def scd2For(
-      target: DataFrame,
-      updates: DataFrame,
-      tdef: graft.meta.TableDef,
-      effCol: String): DataFrame =
-    scd2(target, updates, tdef.mergeKeys, effCol)
-
   /** Point-in-time dimension lookup — the READ side of [[scd2]]: enrich
     * each fact with the dimension version effective AT THE FACT'S OWN
     * TIME, i.e. the version whose `[effective_from, effective_to)`

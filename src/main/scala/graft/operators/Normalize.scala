@@ -35,12 +35,6 @@ object Normalize {
   def fuzzyKey(c: Column): Column =
     lower(regexp_replace(trim(c), " ", ""))
 
-  /** Collapse internal whitespace runs to single spaces + trim — the
-    * cleanup a text pipeline wants before tokenization.
-    */
-  def collapseWhitespace(c: Column): Column =
-    regexp_replace(regexp_replace(c, "\\s+", " "), "^ | $", "")
-
   /** Winsorize a numeric column: clip values outside the [loQ, hiQ]
     * exact quantiles to the quantile bounds — the standard outlier
     * treatment before training on heavy-tailed numerics (vs dropping

@@ -1436,16 +1436,15 @@ object CowTable {
     val newId = cur + 1
     val target = manifest(spark, root, toId)
     val base = manifest(spark, root, cur)
-    acquireCommitLock(spark, root, newId)
-    try {
-      commitManifest(spark, root, newId, Some(cur), None) {
-        writeManifest(spark, root, newId, target.partCols,
-          target.schemaDdl, target.allFiles, mappingOf(Some(target)))
+    val committed =
+      leasedCommit(spark, root, newId, Some(base), Some(cur), Some(keep)) {
+        Leased.Rewrite(target.allFiles, target.partCols, target.schemaDdl,
+          mappingOf(Some(target)))
       }
-    } finally releaseCommitLock(spark, root, newId)
-    vacuum(spark, root, keep, Map(
-      newId -> target.allFiles.map(_.path),
-      cur -> base.allFiles.map(_.path)))
+    if (!committed)
+      throw new CowConcurrentCommitException(
+        s"restore at $root: commit $newId landed first — restore " +
+          "against the new head (nothing was published)")
     newId
   }
 
@@ -1570,14 +1569,14 @@ object CowTable {
       // before the clone's first commit (setBucketSpec's own rule)
       bucketSpecOf(spark, sourceRoot)
         .foreach(bs => setBucketSpec(spark, targetRoot, bs))
-      acquireCommitLock(spark, targetRoot, 1L)
-      try {
-        commitManifest(spark, targetRoot, 1L, None, None) {
-          writeManifest(spark, targetRoot, 1L, m.partCols, m.schemaDdl,
-            entries, mappingOf(Some(m)))
+      cloneCommitted =
+        leasedCommit(spark, targetRoot, 1L, None, None, keep = None) {
+          Leased.Rewrite(entries, m.partCols, m.schemaDdl, mappingOf(Some(m)))
         }
-      } finally releaseCommitLock(spark, targetRoot, 1L)
-      cloneCommitted = true
+      if (!cloneCommitted)
+        throw new CowConcurrentCommitException(
+          s"shallow clone target $targetRoot: another writer committed " +
+            "its first snapshot first (nothing was published)")
       // provenance at the target: what releaseCloneFence / DROP reads.
       // Written AFTER the commit — a crash in between leaves a clone
       // whose drop cannot auto-release (the documented legacy state,
@@ -1752,17 +1751,11 @@ object CowTable {
     val eff = effSchemaOf(Some(m), newSchema)
     validateEvolution(m, eff, m.partCols)
     if (eff.toDDL == m.schemaDdl) return true // no-op ALTER — id unconsumed
-    val unsafe = bloomUnsafeCols(m, eff)
-    val files = m.allFiles.map(stripUnsafeStats(_, unsafe))
-    leasedCommit(spark, root, id, m, keep) {
-      Leased.Rewrite(files, () =>
-        // a pure ADD/widen that drops no carried stats changes no
-        // entry — the schema rides the delta's own header
-        if (deltaEligible(Some(m), m.partCols, unsafe.isEmpty))
-          writeManifestDelta(spark, root, id, m, eff.toDDL,
-            Nil, Set.empty, mappingForAdds(Some(m), eff))
-        else writeManifest(spark, root, id, m.partCols, eff.toDDL, files,
-          mappingForAdds(Some(m), eff)))
+    // a pure ADD/widen that drops no carried stats changes no entry —
+    // the schema rides the delta's own header
+    leasedCommit(spark, root, id, Some(m), Some(m.id), Some(keep)) {
+      Leased.Adds(Nil, eff.toDDL, mappingForAdds(Some(m), eff),
+        statsUnsafe = bloomUnsafeCols(m, eff))
     }
   }
 
@@ -1851,23 +1844,13 @@ object CowTable {
               newName +: u.nameParts.tail)
         }.sql
     }
-    acquireCommitLock(spark, root, id)
-    try {
-      if (committedIds(spark, root).exists(_ >= id)) return false
-      if (repointed != checks)
+    leasedCommit(spark, root, id, Some(m), Some(m.id), Some(keep)) {
+      val repoint = repointed != checks
+      if (repoint)
         writePendingChecks(spark, root, id, oldName, newName, repointed)
-      try commitManifest(spark, root, id, Some(m.id), None) {
-        writeManifest(spark, root, id, newPartCols, newSchema.toDDL,
-          files, (newMap, m.retiredPhys))
-      } catch { case t: Throwable =>
-        fs.delete(pendingChecksPath(root, id), false)
-        throw t
-      }
-      if (repointed != checks) adoptPendingChecks(spark, root, id)
-    } finally releaseCommitLock(spark, root, id)
-    vacuum(spark, root, keep, Map(
-      id -> files.map(_.path), m.id -> m.allFiles.map(_.path)))
-    true
+      Leased.Rewrite(files, newPartCols, newSchema.toDDL,
+        (newMap, m.retiredPhys), pendingChecks = repoint)
+    }
   }
 
   // ---- pending-constraint protocol (atomic RENAME re-point) ----
@@ -2036,14 +2019,9 @@ object CowTable {
     }
     val newSchema = StructType(newFields)
     if (newSchema.toDDL == m.schemaDdl) return true // no-op
-    leasedCommit(spark, root, id, m, keep) {
-      Leased.Rewrite(m.allFiles, () =>
-        // a reorder changes no entry at all — pure schema delta
-        if (deltaEligible(Some(m), m.partCols, statsPreserved = true))
-          writeManifestDelta(spark, root, id, m, newSchema.toDDL,
-            Nil, Set.empty, mappingOf(Some(m)))
-        else writeManifest(spark, root, id, m.partCols, newSchema.toDDL,
-          m.allFiles, mappingOf(Some(m))))
+    // a reorder changes no entry at all — pure schema delta
+    leasedCommit(spark, root, id, Some(m), Some(m.id), Some(keep)) {
+      Leased.Adds(Nil, newSchema.toDDL, mappingOf(Some(m)))
     }
   }
 
@@ -2098,10 +2076,9 @@ object CowTable {
     val files = m.allFiles.map(f => f.copy(
       mins = f.mins - name, maxs = f.maxs - name,
       blooms = f.blooms - name, nulls = f.nulls - name))
-    leasedCommit(spark, root, id, m, keep) {
-      Leased.Rewrite(files, () =>
-        writeManifest(spark, root, id, m.partCols, newSchema.toDDL,
-          files, (m.colMap - name, m.retiredPhys :+ m.phys(name))))
+    leasedCommit(spark, root, id, Some(m), Some(m.id), Some(keep)) {
+      Leased.Rewrite(files, m.partCols, newSchema.toDDL,
+        (m.colMap - name, m.retiredPhys :+ m.phys(name)))
     }
   }
 
@@ -3807,18 +3784,6 @@ object CowTable {
     sys.props.get("graft.cow.manifest.checkpoint")
       .flatMap(_.toIntOption).getOrElse(8)
 
-  /** May a commit against `base` write a DELTA manifest? Requires an
-    * unchanged partitioning (deltas carry entries by reference under
-    * the base's partition keys), `statsPreserved` (carried entries
-    * byte-identical — a widening that drops carried blooms/min-max
-    * must rewrite every entry, i.e. checkpoint), and chain headroom.
-    */
-  private def deltaEligible(base: Option[CowManifest],
-      partCols: Seq[String], statsPreserved: Boolean): Boolean =
-    statsPreserved && base.exists(b =>
-      b.partCols == partCols &&
-        b.chainDepth < manifestCheckpointInterval)
-
   private def mbaseMarker(root: String, id: Long, baseId: Long) =
     new Path(root, s"$MbasePrefix$id=$baseId")
 
@@ -3829,14 +3794,18 @@ object CowTable {
     * its marker, so [[vacuum]]'s chain-retention rule can never
     * misread a delta as a full manifest and prune its base; a crashed
     * attempt's orphan marker is swept like a dead lease). The caller
-    * guarantees [[deltaEligible]] and that the final entry list equals
-    * `base.allFiles -- removedParts ++ adds` with carried entries
-    * byte-identical.
+    * ([[leasedCommit]]) guarantees an unchanged partitioning, chain
+    * headroom, and that `resolvedAll` — the snapshot's full entry
+    * list — equals `base.allFiles -- removedParts ++ adds` with carried
+    * entries byte-identical: head totals derive from it, and the memo
+    * is seeded with it so the first post-commit read skips the parse
+    * AND the chain walk.
     */
   private def writeManifestDelta(
       spark: SparkSession, root: String, id: Long, base: CowManifest,
       ddl: String, adds: Seq[CowFile], removedParts: Set[String],
-      mapping: (Map[String, String], Seq[String])): Unit = {
+      mapping: (Map[String, String], Seq[String]),
+      resolvedAll: Seq[CowFile]): Unit = {
     require(id > base.id,
       s"delta manifest $id must build on an earlier base, got ${base.id}")
     val fs = hfs(spark, root)
@@ -3847,16 +3816,6 @@ object CowTable {
     try fs.create(mbaseMarker(root, id, base.id), false).close()
     catch { case e: java.io.IOException =>
       if (!fs.exists(mbaseMarker(root, id, base.id))) throw e }
-    // the writer knows the resolved list (carried-by-reference minus
-    // removed partitions, plus the adds — the exact resolution
-    // manifestAt would compute); head totals derive from it, and the
-    // memo is seeded with it so the first post-commit read skips the
-    // parse AND the chain walk
-    val carried =
-      if (removedParts.isEmpty) base.allFiles
-      else base.allFiles.filterNot(f =>
-        removedParts.contains(partKey(base.partCols, f.part)))
-    val resolvedAll = carried ++ adds
     writeManifestAt(spark, s"$root/$ManifestPrefix$id", base.partCols,
       ddl, adds, mapping, baseId = Some(base.id),
       removedParts = removedParts.toSeq.sorted,
@@ -4174,17 +4133,19 @@ object CowTable {
     * change — carried blooms on such columns are dropped (pruning
     * degrades, correctness holds; integer widenings keep theirs).
     *
-    * CONCURRENCY: commits are optimistic. The per-id lease
-    * ([[acquireCommitLock]]) makes same-id races one-winner — the
-    * loser throws [[CowConcurrentCommitException]] before writing
-    * anything. Cross-id races (two writers committing different ids
-    * against the same base snapshot) are excluded by the table-wide
-    * [[acquireManifestLock]]: based-on verification (current manifest
-    * still the snapshot `carried` was computed from) and the manifest
-    * write sit in one short critical section, so the window where two
-    * different-id writers both pass the check cannot exist. A failed
-    * verification aborts with the same exception, sidecar unpublished,
-    * and the caller recomputes against the new base.
+    * CONCURRENCY: commits are optimistic, and every table commit —
+    * this one, appends, merge-on-read DML, schema changes, restore,
+    * clone and WAP publish — runs the one skeleton [[leasedCommit]].
+    * The per-id lease ([[acquireCommitLock]]) makes same-id races
+    * one-winner — the loser throws [[CowConcurrentCommitException]]
+    * before writing anything. Cross-id races (two writers committing
+    * different ids against the same base snapshot) are excluded by the
+    * table-wide [[acquireManifestLock]]: based-on verification (current
+    * manifest still the snapshot `carried` was computed from) and the
+    * manifest write sit in one short critical section, so the window
+    * where two different-id writers both pass the check cannot exist.
+    * A failed verification aborts with the same exception, sidecar
+    * unpublished, and the caller recomputes against the new base.
     *
     * `changeLogKeys` (non-empty = enabled) emits the batch's signed
     * row-level changelog ([[Cdc.changelogSigned]] of the touched
@@ -4227,7 +4188,7 @@ object CowTable {
     * the caller computed `rewrite`/`touched` from. Every derived entry
     * point (upsert, applyCdc, fold, compact, …) reads the manifest
     * once, computes its rewrite from it, and passes that SAME manifest
-    * here, so the based-on verification in [[commitManifest]] checks
+    * here, so the based-on verification in [[leasedCommit]] checks
     * against the snapshot the rewrite actually used. Re-reading
     * `currentManifest` at commit time instead would open a lost-update
     * window: a concurrent commit landing between the caller's read and
@@ -4269,9 +4230,6 @@ object CowTable {
     val payload = split.map { case (s, _) => rewrite.drop(s) }
       .getOrElse(rewrite)
     val prev = base
-    // filled on commit success: the manifests this writer holds in
-    // memory, so the post-commit vacuum re-reads none (see vacuum)
-    var vacuumKnown: Map[Long, Seq[String]] = Map.empty
     // replay guard — see scaladoc: rewriting a committed batch's files
     // would rename them out from under later manifests
     if (prev.exists(_.id >= id)) return false
@@ -4295,33 +4253,8 @@ object CowTable {
     prev.foreach(p => validateEvolution(p, effSchema, partCols,
       fullRewrite = relayout &&
         p.allFiles.map(p.partKeyOf).toSet.subsetOf(touched)))
-    acquireCommitLock(spark, root, id)
-    try {
-      // post-lease recheck: a racer (or replay) may have committed this
-      // id while we raced for the lease — same no-op as the replay
-      // guard. Only the ID matters, so this is a pure FS listing
-      // (committedIds), not a manifest read — keeping a Spark job out
-      // of every commit
-      if (committedIds(spark, root).exists(_ >= id)) return false
+    leasedCommit(spark, root, id, prev, prev.map(_.id), Some(keep)) {
       val batchDir = s"$root/$BatchPrefix$id"
-      // a FRESH `_retrykeep-<id>` marker shields a parked retry / WAP
-      // re-point stage's ONLY data under batch-<id>; the overwrite
-      // below would destroy it (r19 review: the commitAppendOnto /
-      // stageAppend guard applied to the DML/full-rewrite path too —
-      // upsert, applyCdc, deleteKeysMor, commitFull all land here).
-      // KNOWN WINDOW (ADVICE r19, best-effort by design): markers are
-      // created by retry claim() WITHOUT the commit lock, so one
-      // appearing between this check and writeBatch below is still
-      // overwritten — the same check-then-write window as the
-      // pre-existing stageAppend guard. Closing it would require
-      // claim() to take the per-id commit lock, serializing every
-      // retry attempt behind unrelated commits; the retry path's own
-      // id-skip (appendWithRetryImpl avoids ids under foreign fresh
-      // markers) keeps the window to a crash-then-reclaim race.
-      if (freshRetryKeep(hfs(spark, root), root, id))
-        throw new CowConcurrentCommitException(
-          s"commit $id at $root: an in-flight retry holds this id's " +
-            "batch dir — commit under a different id")
       writeBatch(rewrite, batchDir, partCols, sortCols, split,
         colMap = commitMapping._1)
       // bloom columns INHERIT from the previous snapshot when the caller
@@ -4374,10 +4307,6 @@ object CowTable {
       // widens (the file is kept, the aggregate refuses) — never wrong.
       val bloomUnsafe = prev.map(bloomUnsafeCols(_, effSchema))
         .getOrElse(Set.empty[String])
-      val carried = prev.map(p =>
-        p.allFiles.filterNot(f => allTouched.contains(p.partKeyOf(f)))
-          .map(stripUnsafeStats(_, bloomUnsafe))
-      ).getOrElse(Nil)
       // the changelog JOIN runs here, outside the manifest lock; only
       // the rename publishes it
       val stagedLog =
@@ -4396,54 +4325,23 @@ object CowTable {
             before.getOrElse(after.limit(0)), after, changeLogKeys,
             ChangeOper)))
         }
-      commitManifest(spark, root, id, prev.map(_.id), stagedLog) {
-        // DELTA when the carried entries are byte-identical to the
-        // base's (no stat-dropping widening, no relayout): O(touched)
-        // manifest rows instead of O(table files) — the commit-IO
-        // shape that holds at millions of files; a full manifest
-        // checkpoints the chain every manifestCheckpointInterval links
-        if (!relayout &&
-            deltaEligible(prev, partCols, bloomUnsafe.isEmpty))
-          writeManifestDelta(spark, root, id, prev.get, effSchema.toDDL,
-            fresh, allTouched, commitMapping)
-        else
-          writeManifest(spark, root, id, partCols, effSchema.toDDL,
-            fresh ++ carried, commitMapping)
+      prev match {
+        // the touched partitions' new content against the base: a
+        // DELTA when the carried entries stay byte-identical, O(touched)
+        // manifest rows instead of O(table files)
+        case Some(_) if !relayout =>
+          Leased.Adds(fresh, effSchema.toDDL, commitMapping, stagedLog,
+            removedParts = allTouched, statsUnsafe = bloomUnsafe)
+        // a first commit, or a relayout (whose partitioning may change):
+        // the full list
+        case _ =>
+          val carried = prev.toSeq.flatMap(p => p.allFiles
+            .filterNot(f => allTouched.contains(p.partKeyOf(f)))
+            .map(stripUnsafeStats(_, bloomUnsafe)))
+          Leased.Rewrite(carried ++ fresh, partCols, effSchema.toDDL,
+            commitMapping, stagedLog)
       }
-      vacuumKnown = Map(id -> (fresh ++ carried).map(_.path)) ++
-        prev.map(p => p.id -> p.allFiles.map(_.path))
-    } finally releaseCommitLock(spark, root, id)
-    vacuum(spark, root, keep, vacuumKnown)
-    true
-  }
-
-  /** The shared critical section every commit path ends with: under
-    * the table-wide manifest lock, verify the current manifest is
-    * still `basedOn` (cross-id lost-update guard — see
-    * [[acquireManifestLock]]), publish the staged changelog sidecar if
-    * any, and run the manifest write. On a failed verification the
-    * staged sidecar is discarded and nothing was published.
-    */
-  private def commitManifest(
-      spark: SparkSession, root: String, id: Long,
-      basedOn: Option[Long], stagedLog: Option[Path])(
-      writeManifestBody: => Unit): Unit = {
-    acquireManifestLock(spark, root, id)
-    try {
-      // only the latest ID is compared, so the verification is a pure
-      // FS listing — no manifest parquet read (a Spark job) inside the
-      // critical section
-      val latest = committedIds(spark, root).lastOption
-      if (latest != basedOn) {
-        discardChangeLog(spark, root, stagedLog)
-        throw new CowConcurrentCommitException(
-          s"commit $id at $root: based on snapshot $basedOn but current " +
-            s"is $latest — recompute against the new base " +
-            "and retry (nothing was published)")
-      }
-      stagedLog.foreach(publishChangeLog(spark, root, id, _))
-      writeManifestBody
-    } finally releaseManifestLock(spark, root)
+    }
   }
 
   /** What a [[leasedCommit]] body decided, under the lease. */
@@ -4457,65 +4355,158 @@ object CowTable {
       * then `cow` (the copy-on-write twin) answers the call.
       */
     final case class Cow(cow: () => Boolean) extends Leased
-    /** Snapshot `id` = the base's entries verbatim plus `adds` (the
-      * adds-only shape every merge-on-read commit has), with
-      * `changeLog` (table columns then [[ChangeOper]]) staged as its
-      * sidecar.
+    /** A snapshot to publish under `ddl` and `mapping`. `changeLog` is
+      * its sidecar, already staged by [[stageChangeLog]]; `retire`
+      * lists files the commit consumes, deleted once the manifest is
+      * written.
       */
-    final case class Adds(adds: Seq[CowFile],
-        changeLog: Option[DataFrame]) extends Leased
-    /** A metadata-only commit: `files` is the new snapshot's entry
-      * list and `write` publishes its manifest.
+    sealed trait Commit extends Leased {
+      def ddl: String
+      def mapping: (Map[String, String], Seq[String])
+      def changeLog: Option[Path]
+      def retire: Seq[Path]
+      def pendingChecks: Boolean = false
+    }
+    /** Snapshot `id` = the base's entries outside `removedParts` (with
+      * the stats of `statsUnsafe` columns stripped — see
+      * [[bloomUnsafeCols]]) followed by `adds`, under the base's
+      * partitioning: a DELTA manifest against the base when every
+      * carried entry is byte-identical and the chain has headroom
+      * ([[manifestCheckpointInterval]]), else a full one.
       */
-    final case class Rewrite(files: Seq[CowFile], write: () => Unit)
-        extends Leased
+    final case class Adds(
+        adds: Seq[CowFile], ddl: String,
+        mapping: (Map[String, String], Seq[String]),
+        changeLog: Option[Path] = None,
+        removedParts: Set[String] = Set.empty,
+        statsUnsafe: Set[String] = Set.empty,
+        retire: Seq[Path] = Nil) extends Commit
+    /** Snapshot `id` = exactly `files` under `partCols`, written as a
+      * full manifest. `pendingChecks`: the body staged the table's new
+      * CHECK set as `_checks.tsv.pending-<id>` ([[writePendingChecks]]);
+      * it is adopted once the manifest is written and deleted if the
+      * commit fails.
+      */
+    final case class Rewrite(
+        files: Seq[CowFile], partCols: Seq[String], ddl: String,
+        mapping: (Map[String, String], Seq[String]),
+        changeLog: Option[Path] = None,
+        retire: Seq[Path] = Nil,
+        override val pendingChecks: Boolean = false) extends Commit
   }
 
-  /** The in-place commit skeleton on base `m`: take the per-id lease,
-    * re-check the id (an FS listing, no Spark job), run `body`, then
-    * act on its [[Leased]] outcome — stage the changelog, publish the
-    * manifest through [[commitManifest]], release the lease, and
-    * vacuum with the two snapshots' entries already known. Returns
-    * false when `id` is already committed.
+  /** The adds-only outcome every merge-on-read commit has: base `m`'s
+    * entries verbatim plus `adds`, with `changeLog` (table columns then
+    * [[ChangeOper]]) staged as the sidecar.
+    */
+  private def morAdds(
+      spark: SparkSession, root: String, id: Long, m: CowManifest,
+      adds: Seq[CowFile], changeLog: Option[DataFrame]): Leased =
+    Leased.Adds(adds, m.schemaDdl, mappingOf(Some(m)),
+      changeLog.map(stageChangeLog(spark, root, id, _)))
+
+  /** The commit skeleton every table commit runs:
+    *  1. take the per-id lease ([[acquireCommitLock]]) and re-check the
+    *     id (an FS listing, no Spark job) — false when `id` is already
+    *     committed;
+    *  1. refuse an id whose `batch-<id>` a fresh `_retrykeep-<id>`
+    *     marker shields;
+    *  1. run `body` and act on its [[Leased]] outcome: under the
+    *     table-wide manifest lock ([[acquireManifestLock]]) verify the
+    *     head is still `basedOn` (the cross-id lost-update guard; on a
+    *     mismatch the staged changelog is discarded and nothing is
+    *     published), publish the changelog, and write the manifest —
+    *     delta or full — from the outcome's data;
+    *  1. release the lease and, unless `keep` is None, vacuum with the
+    *     new snapshot's and `base`'s entries already known.
+    *
+    * `base` is the manifest the body computed from: None for a table's
+    * first commit, or when the caller holds only the base's id (a WAP
+    * publish). A clone's first commit passes `keep = None`: nothing is
+    * retained against, and the clone fence must see a failure only
+    * when the manifest did not land.
     */
   private def leasedCommit(
-      spark: SparkSession, root: String, id: Long, m: CowManifest,
-      keep: Int)(body: => Leased): Boolean = {
+      spark: SparkSession, root: String, id: Long,
+      base: Option[CowManifest], basedOn: Option[Long], keep: Option[Int])(
+      body: => Leased): Boolean = {
+    val fs = hfs(spark, root)
     var vacuumKnown: Map[Long, Seq[String]] = Map.empty
     var leased = true
     acquireCommitLock(spark, root, id)
     try {
       if (committedIds(spark, root).exists(_ >= id)) return false
+      // a FRESH `_retrykeep-<id>` marker shields a parked retry / WAP
+      // re-point stage's ONLY data under batch-<id>; a body writing
+      // there (or a no-change call dropping the dir) would destroy it.
+      // Stale markers are crashed leftovers vacuum sweeps. KNOWN WINDOW
+      // (ADVICE.md, best-effort by design): markers are created by
+      // retry claim() WITHOUT this lease, so one appearing between this
+      // check and the body's write is still overwritten. Closing it
+      // would require claim() to take the per-id lease, serializing
+      // every retry attempt behind unrelated commits; the retry path's
+      // own id-skip (appendWithRetryImpl avoids ids under foreign fresh
+      // markers) keeps the window to a crash-then-reclaim race.
+      if (freshRetryKeep(fs, root, id))
+        throw new CowConcurrentCommitException(
+          s"commit $id at $root: an in-flight retry holds this id's " +
+            "batch dir — commit under a different id")
       body match {
         case Leased.NoCommit(dropBatch) =>
-          if (dropBatch)
-            hfs(spark, root).delete(new Path(s"$root/$BatchPrefix$id"), true)
+          if (dropBatch) fs.delete(new Path(s"$root/$BatchPrefix$id"), true)
           return true
         case Leased.Cow(cow) =>
           releaseCommitLock(spark, root, id)
           leased = false // the finally must not delete a lease a
                          // concurrent same-id writer may re-acquire
           return cow()
-        case Leased.Adds(adds, changeLog) =>
-          val stagedLog = changeLog.map(stageChangeLog(spark, root, id, _))
-          commitManifest(spark, root, id, Some(m.id), stagedLog) {
-            // every previous entry (data, tombstones, older DVs)
-            // carries over verbatim
-            if (deltaEligible(Some(m), m.partCols, statsPreserved = true))
-              writeManifestDelta(spark, root, id, m, m.schemaDdl,
-                adds, Set.empty, mappingOf(Some(m)))
-            else writeManifest(spark, root, id, m.partCols, m.schemaDdl,
-              m.allFiles ++ adds, mappingOf(Some(m)))
+        case c: Leased.Commit =>
+          val (partCols, files) = (c, base) match {
+            case (a: Leased.Adds, Some(b)) =>
+              (b.partCols, b.allFiles
+                .filterNot(f => a.removedParts.contains(b.partKeyOf(f)))
+                .map(stripUnsafeStats(_, a.statsUnsafe)) ++ a.adds)
+            case (r: Leased.Rewrite, _) => (r.partCols, r.files)
+            case _ => throw new IllegalArgumentException(
+              s"commit $id at $root: an adds-only commit needs its base")
           }
-          vacuumKnown = Map(id -> (m.allFiles ++ adds).map(_.path),
-            m.id -> m.allFiles.map(_.path))
-        case Leased.Rewrite(files, write) =>
-          commitManifest(spark, root, id, Some(m.id), None)(write())
-          vacuumKnown = Map(id -> files.map(_.path),
-            m.id -> m.allFiles.map(_.path))
+          try {
+            acquireManifestLock(spark, root, id)
+            try {
+              // only the latest ID is compared, so the verification is
+              // a pure FS listing — no manifest parquet read (a Spark
+              // job) inside the critical section
+              val latest = committedIds(spark, root).lastOption
+              if (latest != basedOn) {
+                discardChangeLog(spark, root, c.changeLog)
+                throw new CowConcurrentCommitException(
+                  s"commit $id at $root: based on snapshot $basedOn but " +
+                    s"current is $latest — recompute against the new " +
+                    "base and retry (nothing was published)")
+              }
+              c.changeLog.foreach(publishChangeLog(spark, root, id, _))
+              (c, base) match {
+                case (a: Leased.Adds, Some(b)) if a.statsUnsafe.isEmpty &&
+                    b.chainDepth < manifestCheckpointInterval =>
+                  writeManifestDelta(spark, root, id, b, a.ddl, a.adds,
+                    a.removedParts, a.mapping, files)
+                case _ =>
+                  writeManifest(spark, root, id, partCols, c.ddl, files,
+                    c.mapping)
+              }
+            } finally releaseManifestLock(spark, root)
+          } catch { case t: Throwable =>
+            if (c.pendingChecks)
+              fs.delete(pendingChecksPath(root, id), false)
+            throw t
+          }
+          if (c.pendingChecks) adoptPendingChecks(spark, root, id)
+          c.retire.foreach(fs.delete(_, true))
+          vacuumKnown = Map(id -> files.map(_.path)) ++
+            base.map(b => b.id -> b.allFiles.map(_.path))
       }
     } finally if (leased) releaseCommitLock(spark, root, id)
-    vacuum(spark, root, keep, vacuumKnown)
+    keep.foreach(vacuum(spark, root, _, vacuumKnown))
     true
   }
 
@@ -4710,26 +4701,9 @@ object CowTable {
     val effSchema = effSchemaOf(Some(p), batch.schema)
     validateEvolution(p, effSchema, partCols)
     val commitMapping = mappingForAdds(Some(p), effSchema)
-    var vacuumKnown: Map[Long, Seq[String]] = Map.empty
-    var committed = false
-    acquireCommitLock(spark, root, id)
-    try {
-      if (committedIds(spark, root).exists(_ >= id)) return false // ID-only recheck: FS listing, no Spark job
+    leasedCommit(spark, root, id, Some(p), Some(p.id), Some(keep)) {
       val batchDir = s"$root/$BatchPrefix$id"
       val fs = hfs(spark, root)
-      if (!protectStage) {
-        // explicit-id writers (the streaming sink's pinned-id protocol
-        // can legitimately target any future id) must honor a FRESH
-        // `_retrykeep-<id>` marker exactly as stageAppend does: in the
-        // crash window of publishStagedWithRetry the marked dir holds
-        // an adopted stage's ONLY data, and writeBatch below would
-        // overwrite it (ADVICE r18). Stale markers are crashed
-        // leftovers vacuum sweeps.
-        if (freshRetryKeep(fs, root, id))
-          throw new CowConcurrentCommitException(
-            s"commit $id at $root: an in-flight retry holds this id's " +
-              "batch dir — commit under a different id")
-      }
       if (protectStage) {
         // a PENDING WAP STAGE parked on this very id: batch-<id> is
         // that stage's only data and the restage below would overwrite
@@ -4858,36 +4832,21 @@ object CowTable {
       recordStaged(StagedAppendBatch(id, fresh, effSchema.toDDL,
         commitMapping._1, checks))
       onStagedForTest()
-      // carried files lose blooms AND min/max stats on string-form-
-      // changing widenings exactly as in commitPartitions (a stale
-      // bloom would false-negative against probes hashed under the
-      // new schema; a stale stat would false-skip the envelope test)
-      val bloomUnsafe = bloomUnsafeCols(p, effSchema)
-      val carried = p.allFiles
-        .map(stripUnsafeStats(_, bloomUnsafe))
       val stagedLog = stagePureInsertLog(spark, root, p, fresh,
         effSchema, partCols, id, changeLogKeys, changeLogRequired,
         s"append batch $id")
-      commitManifest(spark, root, id, Some(p.id), stagedLog) {
-        // an append is the ideal delta: adds-only, O(batch) rows —
-        // per-micro-batch ingest commits stay O(Δ) at any table size
-        if (deltaEligible(Some(p), partCols, bloomUnsafe.isEmpty))
-          writeManifestDelta(spark, root, id, p, effSchema.toDDL,
-            fresh, Set.empty, commitMapping)
-        else
-          writeManifest(spark, root, id, partCols, effSchema.toDDL,
-            fresh ++ carried, commitMapping)
-      }
-      committed = true
-      // landed: the manifest references the files now, which is the
-      // durable protection — the marker has done its job
-      if (protectStage) fs.delete(retryKeepPath(root, id), false)
-      vacuumKnown = Map(
-        id -> (fresh ++ carried).map(_.path),
-        p.id -> p.allFiles.map(_.path))
-    } finally releaseCommitLock(spark, root, id)
-    if (committed) vacuum(spark, root, keep, vacuumKnown)
-    committed
+      // an append is the ideal delta: adds-only, O(batch) rows —
+      // per-micro-batch ingest commits stay O(Δ) at any table size.
+      // Carried files lose blooms AND min/max stats on string-form-
+      // changing widenings exactly as in commitPartitions (a stale
+      // bloom would false-negative against probes hashed under the new
+      // schema; a stale stat would false-skip the envelope test). Once
+      // the manifest references the files — the durable protection —
+      // a claim marker has done its job.
+      Leased.Adds(fresh, effSchema.toDDL, commitMapping, stagedLog,
+        statsUnsafe = bloomUnsafeCols(p, effSchema),
+        retire = if (protectStage) Seq(retryKeepPath(root, id)) else Nil)
+    }
   }
 
   /** APPEND with BOUNDED AUTOMATIC RETRY on lost commit races —
@@ -4914,8 +4873,7 @@ object CowTable {
     *
     * After a lease loss with an UNMOVED head the winner is still
     * publishing, so the loop polls the frontier (every 50 ms, up to
-    * `graft.cow.appendRetryWaitMs`, default 2000) before burning the
-    * next attempt against the same busy lease.
+    * 2 s) before burning the next attempt against the same busy lease.
     */
   def appendWithRetry(
       batch: DataFrame,
@@ -4930,11 +4888,6 @@ object CowTable {
     appendWithRetryImpl(batch, root, partCols, keep, sortCols, bloomCols,
       changeLogKeys, changeLogRequired, maxAttempts, () => ())
 
-  /** [[appendWithRetry]] with a test seam: `onStagedForTest` fires
-    * after an attempt's batch is staged and BEFORE its manifest race —
-    * the deterministic window a spec uses to land a competing commit
-    * and pin the staged-reuse path.
-    */
   /** Poll the frontier until it moves past `seen` or `waitMs` elapses —
     * the shared backoff of the retry loops: a busy lease with an
     * unmoved head means the winner is mid-publish, and re-attempting
@@ -4952,15 +4905,20 @@ object CowTable {
       Thread.sleep(50)
   }
 
+  /** [[appendWithRetry]] with test seams: `onStagedForTest` fires
+    * after an attempt's batch is staged and BEFORE its manifest race —
+    * the deterministic window a spec uses to land a competing commit
+    * and pin the staged-reuse path — and `waitMs` bounds the poll
+    * between attempts.
+    */
   private[graft] def appendWithRetryImpl(
       batch: DataFrame, root: String, partCols: Seq[String],
       keep: Int, sortCols: Seq[String], bloomCols: Seq[String],
       changeLogKeys: Seq[String], changeLogRequired: Boolean,
-      maxAttempts: Int, onStagedForTest: () => Unit): Long = {
+      maxAttempts: Int, onStagedForTest: () => Unit,
+      waitMs: Long = 2000L): Long = {
     require(maxAttempts >= 1, s"maxAttempts must be >= 1, got $maxAttempts")
     val spark = batch.sparkSession
-    val waitMs = sys.props.get("graft.cow.appendRetryWaitMs")
-      .flatMap(_.toLongOption).getOrElse(2000L)
     var staged: Option[StagedAppendBatch] = None
     var lastConflict: Option[CowConcurrentCommitException] = None
     var attempt = 0
@@ -5241,20 +5199,16 @@ object CowTable {
         s"publish of staged commit $id at $root (constraints changed " +
           "since stage)")
     }
-    acquireCommitLock(spark, root, id)
-    try {
-      if (committedIds(spark, root).exists(_ >= id))
-        throw new CowConcurrentCommitException(
-          s"staged commit $id at $root: a commit with id >= $id already " +
-            "exists — discard the stage and re-stage with a fresh id")
-      commitManifest(spark, root, id, basedOn, stagedLog) {
-        writeManifest(spark, root, id, m.partCols, m.schemaDdl,
-          m.allFiles, mappingOf(Some(m)))
-      }
-    } finally releaseCommitLock(spark, root, id)
-    fs.delete(new Path(stagedManifestDir(root, id)), true)
-    fs.delete(metaP, false)
-    vacuum(spark, root, keep, Map(id -> m.allFiles.map(_.path)))
+    // the staged rows verbatim; the stage's manifest and meta are
+    // consumed by the commit
+    val committed = leasedCommit(spark, root, id, None, basedOn, Some(keep)) {
+      Leased.Rewrite(m.allFiles, m.partCols, m.schemaDdl, mappingOf(Some(m)),
+        stagedLog, retire = Seq(new Path(stagedManifestDir(root, id)), metaP))
+    }
+    if (!committed)
+      throw new CowConcurrentCommitException(
+        s"staged commit $id at $root: a commit with id >= $id already " +
+          "exists — discard the stage and re-stage with a fresh id")
   }
 
   /** [[publishStaged]] with BOUNDED AUTO-RETRY on a lost race — the
@@ -5286,13 +5240,15 @@ object CowTable {
     publishStagedWithRetryImpl(spark, root, id, keep, maxAttempts,
       () => ())
 
-  /** [[publishStagedWithRetry]] with the same test seam as
+  /** [[publishStagedWithRetry]] with the same test seams as
     * [[appendWithRetryImpl]]: `onStagedForTest` fires between an
-    * attempt's staging/adoption and its manifest race.
+    * attempt's staging/adoption and its manifest race, and `waitMs`
+    * bounds the poll between attempts.
     */
   private[graft] def publishStagedWithRetryImpl(
       spark: SparkSession, root: String, id: Long, keep: Int,
-      maxAttempts: Int, onStagedForTest: () => Unit): Long = {
+      maxAttempts: Int, onStagedForTest: () => Unit,
+      waitMs: Long = 2000L): Long = {
     val first =
       try { publishStaged(spark, root, id, keep); return id }
       catch { case e: CowConcurrentCommitException => e }
@@ -5352,8 +5308,6 @@ object CowTable {
     }
     val stageBloomCols = freshAtStage.flatMap(_.blooms.keys).distinct
     var lastConflict = first
-    val waitMs = sys.props.get("graft.cow.appendRetryWaitMs")
-      .flatMap(_.toLongOption).getOrElse(2000L)
     var attempt = 0
     while (attempt < maxAttempts) {
       attempt += 1
@@ -6012,7 +5966,7 @@ object CowTable {
         .map(_.copy(kind = KindTombstone))
       if (freshData.isEmpty && freshTombs.isEmpty)
         Leased.NoCommit(dropBatch = true) // nothing changed
-      else Leased.Adds(freshTombs ++ freshData,
+      else morAdds(spark, root, id, m, freshTombs ++ freshData,
         if (changeLogKeys.isEmpty) None
         else {
           val dStub = CowManifest(id, m.partCols, m.schemaDdl,
@@ -6025,7 +5979,8 @@ object CowTable {
               dfFor(spark, root, iStub, iStub.files), "I")))
         })
     }
-    leasedCommit(spark, root, id, m, keep)(underLease())
+    leasedCommit(spark, root, id, Some(m), Some(m.id), Some(keep))(
+      underLease())
   }
 
   /** PREDICATE UPDATE with POSITIONAL deletion vectors — the update
@@ -6143,7 +6098,7 @@ object CowTable {
         m.partCols, effBloomCols, colMap = m.colMap)
       if (freshData.isEmpty && freshDv.isEmpty)
         Leased.NoCommit(dropBatch = true) // nothing changed
-      else Leased.Adds(freshDv ++ freshData,
+      else morAdds(spark, root, id, m, freshDv ++ freshData,
         if (changeLogKeys.isEmpty) None
         else {
           val iStub = CowManifest(id, m.partCols, m.schemaDdl,
@@ -6152,7 +6107,8 @@ object CowTable {
             signedRows(m, dfFor(spark, root, iStub, iStub.files), "I")))
         })
     }
-    leasedCommit(spark, root, id, m, keep)(underLease())
+    leasedCommit(spark, root, id, Some(m), Some(m.id), Some(keep))(
+      underLease())
   }
 
   /** COPY-ON-WRITE multi-clause MERGE: [[graft.operators.MergeInto]]
@@ -6505,7 +6461,7 @@ object CowTable {
     val cols = (keyCols ++ partCols).distinct
     cols.foreach(c => require(m.schema.fieldNames.contains(c),
       s"tombstone column $c is not a table column"))
-    leasedCommit(spark, root, id, m, keep) {
+    leasedCommit(spark, root, id, Some(m), Some(m.id), Some(keep)) {
       val tombSchema = StructType(cols.map(c => m.schema(c)))
       val tombDir = s"$root/$BatchPrefix$id/__tomb"
       val distinctKeys = keys.select(cols.map(col): _*).distinct()
@@ -6514,7 +6470,7 @@ object CowTable {
       val fresh = collectEntries(spark, tombDir, id, tombSchema, partCols,
         colMap = m.colMap)
         .map(_.copy(kind = KindTombstone))
-      Leased.Adds(fresh,
+      morAdds(spark, root, id, m, fresh,
         if (!changeLog) None
         else {
           // the batch's changelog is pure D rows: the CURRENT visible
@@ -6585,10 +6541,11 @@ object CowTable {
       val matched = if (changeLog) matched0.localCheckpoint() else matched0
       val fresh = writeDvSidecar(spark, root, m, id, matched)
       if (fresh.isEmpty) Leased.NoCommit(dropBatch = true) // no row matched
-      else Leased.Adds(fresh,
+      else morAdds(spark, root, id, m, fresh,
         if (changeLog) Some(signedRows(m, matched, "D")) else None)
     }
-    leasedCommit(spark, root, id, m, keep)(underLease())
+    leasedCommit(spark, root, id, Some(m), Some(m.id), Some(keep))(
+      underLease())
   }
 
   /** PREDICATE MERGE-ON-READ delete — deletion-vector economics for
@@ -6641,7 +6598,7 @@ object CowTable {
       // no row matched: leave no uncommitted batch dir behind, like
       // deleteWhere's empty case
       if (fresh.isEmpty) Leased.NoCommit(dropBatch = true)
-      else Leased.Adds(fresh,
+      else morAdds(spark, root, id, m, fresh,
         if (!changeLog) None
         else {
           // read the WRITTEN tombstones back rather than re-running the
@@ -6653,7 +6610,8 @@ object CowTable {
           Some(signedRows(m, dfFor(spark, root, stub, stub.files), "D"))
         })
     }
-    leasedCommit(spark, root, id, m, keep)(underLease())
+    leasedCommit(spark, root, id, Some(m), Some(m.id), Some(keep))(
+      underLease())
   }
 
   private val DvFpCol = "__dv_fp"
@@ -6812,10 +6770,11 @@ object CowTable {
       val fresh = writeDvSidecar(spark, root, m, id, matched)
       if (fresh.isEmpty) Leased.NoCommit(dropBatch = true) // no row matched
       // the matched rows ARE the before-images: a pure-D sidecar
-      else Leased.Adds(fresh,
+      else morAdds(spark, root, id, m, fresh,
         if (changeLog) Some(signedRows(m, matched, "D")) else None)
     }
-    leasedCommit(spark, root, id, m, keep)(underLease())
+    leasedCommit(spark, root, id, Some(m), Some(m.id), Some(keep))(
+      underLease())
   }
 
   /** Retire all outstanding tombstones AND positional deletion vectors

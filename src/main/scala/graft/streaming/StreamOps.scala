@@ -401,41 +401,6 @@ object StreamOps {
           batch, keyCols, partCols, versionCol)
     }
 
-  /** Streaming CDC apply into a COW table — [[cdcSink]] at
-    * partition-granular write cost (D rows route to their key's
-    * bucket).
-    */
-  def cowCdcSink(
-      changelog: DataFrame,
-      targetRoot: String,
-      keyCols: Seq[String],
-      partCols: Seq[String],
-      checkpoint: String,
-      operCol: String = "oper",
-      versionCol: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery =
-    foreachBatchSink(changelog, checkpoint) { (batch, id) =>
-      if (!batch.isEmpty)
-        graft.sinks.CowTable.applyCdc(batch.sparkSession, targetRoot, id,
-          batch, keyCols, partCols, operCol, versionCol)
-    }
-
-  /** Streaming SCD-2 CDC into a COW table — [[scd2CdcSink]] with
-    * per-bucket history rewrites instead of full-dimension snapshots.
-    */
-  def cowScd2CdcSink(
-      changes: DataFrame,
-      targetRoot: String,
-      keyCols: Seq[String],
-      partCols: Seq[String],
-      effCol: String,
-      checkpoint: String,
-      operCol: String = "oper"): org.apache.spark.sql.streaming.StreamingQuery =
-    foreachBatchSink(changes, checkpoint) { (batch, id) =>
-      if (!batch.isEmpty)
-        graft.sinks.CowTable.applyScd2Cdc(batch.sparkSession, targetRoot,
-          id, batch, keyCols, partCols, effCol, operCol)
-    }
-
   /** One micro-batch of STREAMING NEAR-DUP DETECTION against a
     * persisted, growing minhash index — the streaming face of
     * [[graft.operators.Dedup.minhashIncrementalPairs]]: probe the

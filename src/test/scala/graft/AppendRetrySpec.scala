@@ -195,18 +195,15 @@ class AppendRetrySpec extends SparkSpec {
       spark.sessionState.newHadoopConf())
     // a crashed writer leaked the lease for the next id
     fs.create(new Path(s"$root/_commit-2.lock"), false).close()
-    val prevWait = sys.props.put("graft.cow.appendRetryWaitMs", "1")
-    try {
-      val e = intercept[CowConcurrentCommitException] {
-        CowTable.appendWithRetry(
-          Seq((7L, "mine")).toDF("id", "v"), root, Nil, maxAttempts = 2)
-      }
-      assert(e.getMessage.contains("breakCommitLock"))
-      assert(CowTable.read(spark, root).get.count() == 1)
-    } finally prevWait match {
-      case Some(v) => sys.props.put("graft.cow.appendRetryWaitMs", v)
-      case None => sys.props.remove("graft.cow.appendRetryWaitMs")
+    val e = intercept[CowConcurrentCommitException] {
+      CowTable.appendWithRetryImpl(
+        Seq((7L, "mine")).toDF("id", "v"), root, Nil,
+        keep = 2, sortCols = Nil, bloomCols = Nil, changeLogKeys = Nil,
+        changeLogRequired = false, maxAttempts = 2,
+        onStagedForTest = () => (), waitMs = 1)
     }
+    assert(e.getMessage.contains("breakCommitLock"))
+    assert(CowTable.read(spark, root).get.count() == 1)
   }
 
   test("read-dependent DML still surfaces the conflict: a MERGE racing " +

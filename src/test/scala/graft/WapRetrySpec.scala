@@ -150,30 +150,25 @@ class WapRetrySpec extends SparkSpec {
     val stagedNames = parquetNames(root, "batch-10")
     assert(CowTable.commitAppend(
       Seq((99L, "racer1")).toDF("id", "v"), root, 2L, Nil, keep = 9))
-    val prevWait = sys.props.put("graft.cow.appendRetryWaitMs", "1")
-    try {
-      // the single allowed attempt adopts (rename to 11) then loses to
-      // racer2 — exhaustion must put the files back under batch-10
-      intercept[CowConcurrentCommitException] {
-        CowTable.publishStagedWithRetryImpl(spark, root, 10L,
-          keep = 9, maxAttempts = 1, onStagedForTest = () =>
-            if (!CowTable.committedIds(spark, root).contains(3L))
-              assert(CowTable.commitAppend(
-                Seq((98L, "racer2")).toDF("id", "v"), root, 3L, Nil,
-                keep = 9)))
-      }
-      assert(parquetNames(root, "batch-10") == stagedNames,
-        "exhaustion must restore the staged dir")
-      assert(CowTable.stagedIds(spark, root) == Seq(10L))
-      // the stage is whole: a later retry (no competitor now) lands it
-      val landed = CowTable.publishStagedWithRetry(spark, root, 10L,
-        keep = 9)
-      assert(landed > 3L)
-      assert(CowTable.read(spark, root).get.count() == 4)
-    } finally prevWait match {
-      case Some(v) => sys.props.put("graft.cow.appendRetryWaitMs", v)
-      case None => sys.props.remove("graft.cow.appendRetryWaitMs")
+    // the single allowed attempt adopts (rename to 11) then loses to
+    // racer2 — exhaustion must put the files back under batch-10
+    intercept[CowConcurrentCommitException] {
+      CowTable.publishStagedWithRetryImpl(spark, root, 10L,
+        keep = 9, maxAttempts = 1, onStagedForTest = () =>
+          if (!CowTable.committedIds(spark, root).contains(3L))
+            assert(CowTable.commitAppend(
+              Seq((98L, "racer2")).toDF("id", "v"), root, 3L, Nil,
+              keep = 9)),
+        waitMs = 1)
     }
+    assert(parquetNames(root, "batch-10") == stagedNames,
+      "exhaustion must restore the staged dir")
+    assert(CowTable.stagedIds(spark, root) == Seq(10L))
+    // the stage is whole: a later retry (no competitor now) lands it
+    val landed = CowTable.publishStagedWithRetryImpl(spark, root, 10L,
+      keep = 9, maxAttempts = 8, onStagedForTest = () => (), waitMs = 1)
+    assert(landed > 3L)
+    assert(CowTable.read(spark, root).get.count() == 4)
   }
 
   test("a re-pointed publish and appendWithRetry both SKIP ids parked " +

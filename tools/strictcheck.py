@@ -2,11 +2,18 @@
 """Strict (bit-exact) mimic of the driver's hash compare.
 
 Usage: python3 tools/strictcheck.py <sfDir> <verifyOutDir> [name ...]
+       python3 tools/strictcheck.py --against <otherVerifyOutDir>
+           <verifyOutDir> [name ...]
 
 Like tools/check.py but with NO float tolerance: after sorting columns
 by name and rows by all columns, every value must be exactly equal
 (floats compared by bit pattern via repr). This is the bar the driver's
 hash_match applies; check.py's isclose pass is NOT sufficient.
+
+With --against, each query's Spark output is compared with the Spark
+output of the same query in another Verify run (say, of the parent
+commit) under the same rendering, instead of with DuckDB: every query
+that differs is printed, and the exit status is non-zero if any does.
 """
 import sys, os, json, glob
 import duckdb
@@ -54,9 +61,66 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     return df
 
 
+def spark_output(outdir, name):
+    """One query's Spark output under `outdir`, canonicalized; None when
+    the run wrote none."""
+    files = sorted(glob.glob(f"{outdir}/{name}/*.parquet"))
+    if not files:
+        return None
+    return canon(pd.concat([pd.read_parquet(f) for f in files],
+                           ignore_index=True))
+
+
+def difference(got, exp, got_side, exp_side):
+    """None when two canonical frames render identically, else why not."""
+    if list(got.columns) != list(exp.columns):
+        return (f"columns {got_side}={list(got.columns)} "
+                f"{exp_side}={list(exp.columns)}")
+    if len(got) != len(exp):
+        return f"rows {got_side}={len(got)} {exp_side}={len(exp)}"
+    for c in got.columns:
+        gs = np.array([cell(v) for v in got[c].tolist()])
+        es = np.array([cell(v) for v in exp[c].tolist()])
+        neq = gs != es
+        if neq.any():
+            i = int(np.argmax(neq))
+            return (f"col {c} ({got[c].dtype}/{exp[c].dtype}) "
+                    f"row {i}: {got_side}={gs[i]!r} {exp_side}={es[i]!r} "
+                    f"(n_diff={int(neq.sum())})")
+    return None
+
+
+def against(otherdir, outdir, only):
+    names = set(json.load(open(f"{outdir}/oracle_sql.json"))) | set(
+        json.load(open(f"{otherdir}/oracle_sql.json")))
+    n_same = n_diff = 0
+    for name in sorted(names):
+        if only and name not in only:
+            continue
+        try:
+            got, other = spark_output(outdir, name), spark_output(otherdir, name)
+            if got is None or other is None:
+                detail = (f"no spark output in "
+                          f"{outdir if got is None else otherdir}")
+            else:
+                detail = difference(got, other, "this", "other")
+        except Exception as e:
+            detail = f"{type(e).__name__}: {e}"
+        if detail is None:
+            n_same += 1
+        else:
+            print(f"DIFF {name}: {detail}")
+            n_diff += 1
+    print(f"\n{n_same} identical, {n_diff} differ")
+    sys.exit(1 if n_diff else 0)
+
+
 def main():
-    sfdir, outdir = sys.argv[1], sys.argv[2]
-    only = set(sys.argv[3:])
+    args = sys.argv[1:]
+    if args and args[0] == "--against":
+        against(args[1], args[2], set(args[3:]))
+    sfdir, outdir = args[0], args[1]
+    only = set(args[2:])
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sfdir}/{t}.parquet"
@@ -68,42 +132,19 @@ def main():
     for name, sql in sorted(oracle.items()):
         if only and name not in only:
             continue
-        files = sorted(glob.glob(f"{outdir}/{name}/*.parquet"))
-        if not files:
-            print(f"FAIL {name}: no spark output")
-            n_fail += 1
-            continue
         try:
-            got = canon(pd.concat([pd.read_parquet(f) for f in files],
-                                  ignore_index=True))
+            got = spark_output(outdir, name)
+            if got is None:
+                print(f"FAIL {name}: no spark output")
+                n_fail += 1
+                continue
             exp = canon(con.execute(sql).df())
         except Exception as e:
             print(f"FAIL {name}: {type(e).__name__}: {e}")
             n_fail += 1
             continue
-        if list(got.columns) != list(exp.columns):
-            print(f"FAIL {name}: columns spark={list(got.columns)} "
-                  f"duck={list(exp.columns)}")
-            n_fail += 1
-            continue
-        if len(got) != len(exp):
-            print(f"FAIL {name}: rows spark={len(got)} duck={len(exp)}")
-            n_fail += 1
-            continue
-        ok = True
-        detail = ""
-        for c in got.columns:
-            gs = np.array([cell(v) for v in got[c].tolist()])
-            es = np.array([cell(v) for v in exp[c].tolist()])
-            neq = gs != es
-            if neq.any():
-                ok = False
-                i = int(np.argmax(neq))
-                detail = (f"col {c} ({got[c].dtype}/{exp[c].dtype}) "
-                          f"row {i}: spark={gs[i]!r} duck={es[i]!r} "
-                          f"(n_diff={int(neq.sum())})")
-                break
-        if ok:
+        detail = difference(got, exp, "spark", "duck")
+        if detail is None:
             print(f"PASS {name} ({len(got)} rows)")
             n_pass += 1
         else:
