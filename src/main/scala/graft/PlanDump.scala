@@ -100,11 +100,14 @@ object PlanDump {
     * masked, so two dumps of one commit are byte-identical. Expression
     * and exchange ids count up with session history (and with work on
     * other threads), so each is renumbered by first appearance, which
-    * keeps which ids are equal; UUIDs (part-file names) and the random
-    * digits `Files.createTempDirectory` appends to a temp dir's name
-    * are masked.
+    * keeps which ids are equal; UUIDs (part-file names), the random
+    * digits `Files.createTempDirectory` appends to a temp dir's name,
+    * RDD ids and lambda class names with their identity hashes are
+    * masked. A file index lists its paths in listing order, which
+    * varies: a complete listing is sorted, and a truncated one
+    * (`..., ... N entries`) keeps only how many paths it showed.
     */
-  private def stable(plan: String): String = {
+  private[graft] def stable(plan: String): String = {
     def renumber(text: String, id: String): String = {
       val seen = scala.collection.mutable.HashMap.empty[String, Int]
       s"$id(\\d+)".r.replaceAllIn(text, m =>
@@ -112,8 +115,20 @@ object PlanDump {
     }
     val tmp = java.util.regex.Pattern.quote(
       new java.io.File(System.getProperty("java.io.tmpdir")).getPath)
-    renumber(renumber(plan, "#"), "plan_id=")
+    val listing = """InMemoryFileIndex \[([^\]]*)\]""".r
+    val masked = renumber(renumber(plan, "#"), "plan_id=")
       .replaceAll("\\p{XDigit}{8}(-\\p{XDigit}{4}){3}-\\p{XDigit}{12}", "<uuid>")
       .replaceAll(s"($tmp/[^/\\s,\\])]*?)\\d+(?=[/\\s,\\])]|$$)", "$1<n>")
+      .replaceAll("(\\w+RDD)\\[\\d+\\]", "$1[<n>]")
+      .replaceAll("\\$\\$Lambda(\\$\\d+)?/0x\\p{XDigit}+(@\\p{XDigit}+)?",
+        "\\$\\$Lambda<n>")
+    listing.replaceAllIn(masked, m => {
+      val (more, paths) = m.group(1).split(", ").toSeq
+        .partition(_.matches("""\.\.\. \d+ entries"""))
+      val shown =
+        if (more.isEmpty) paths.sorted else s"<${paths.size} shown>" +: more
+      scala.util.matching.Regex.quoteReplacement(
+        shown.mkString("InMemoryFileIndex [", ", ", "]"))
+    })
   }
 }

@@ -286,11 +286,11 @@ object QueriesCow {
   val cowScd2CdcSql: String = QueriesCurated.scd2CdcSql
 
   // -------------------------------------------------------------------
-  // Merge-on-read delete under oracle: tombstone a key slice (no data
-  // rewrite — pinned in CowTableSpec), then prove the MOR read and the
-  // post-fold COW read are the SAME table before hashing it against
-  // the plain NOT-BETWEEN filter. Read-path subtraction, fold
-  // equivalence, and manifest carry-over all sit under one row.
+  // Merge-on-read delete under oracle: mask a key slice with deletion
+  // vectors (no data rewrite — pinned in CowTableSpec), then prove the
+  // MOR read and the post-fold COW read are the SAME table before
+  // hashing it against the plain NOT-BETWEEN filter. Read-path masking,
+  // fold equivalence, and manifest carry-over all sit under one row.
   // -------------------------------------------------------------------
   def cowMorDelete(spark: SparkSession, dir: String): DataFrame = {
     val root = scratch("cow_mor")
@@ -588,11 +588,11 @@ object QueriesCow {
   // -------------------------------------------------------------------
   // SNAPSHOT HISTORY under oracle: a known commit sequence (load 500,
   // append to 1000, MOR-delete 100, fold) whose per-snapshot row
-  // counts and tombstone state are computable exactly from the source
+  // counts and delete-debt state are computable exactly from the source
   // table — the metadata-only history() must report them without
-  // reading a data byte. n_rows at the tombstoned snapshot is the
-  // documented upper bound (tombstones' matched counts are unknown
-  // until the fold).
+  // reading a data byte. n_rows at the deleted-from snapshot is the
+  // documented upper bound (the DV-masked rows still count until the
+  // fold). The oracle's column keeps its historical name.
   // -------------------------------------------------------------------
   def cowHistory(spark: SparkSession, dir: String): DataFrame = {
     val root = scratch("cow_hist")
@@ -610,7 +610,7 @@ object QueriesCow {
     require(CowTable.foldTombstones(spark, root, 4L, keep = 10))
     CowTable.history(spark, root)
       .select(col("snapshot_id"), col("n_rows"),
-        (col("tombstone_files") > 0).as("has_tombstones"))
+        (col("dv_files") > 0).as("has_tombstones"))
       .orderBy("snapshot_id")
   }
 
@@ -1038,7 +1038,7 @@ object QueriesCow {
     CowTable.commitAppend(c.where(col("c_custkey").between(801, 1200)),
       root, 2L, Seq("pb"), keep = 10)
     val n = CowTable.countFast(spark, root).getOrElse(
-      sys.error("countFast refused a tombstone-free table"))
+      sys.error("countFast refused a debt-free table"))
     val (lo, hi) = CowTable.minMaxFast(spark, root, "c_custkey").getOrElse(
       sys.error("minMaxFast refused a fully-statted numeric column"))
     spark.sql(
@@ -1076,8 +1076,8 @@ object QueriesCow {
     val m = CowTable.currentManifest(spark, root).get
     require(m.partCols == Seq("c_mktsegment"),
       s"relayout did not take: ${m.partCols}")
-    require(m.tombstones.isEmpty,
-      "the full rewrite must fold outstanding tombstones")
+    require(m.dvs.isEmpty,
+      "the full rewrite must fold outstanding deletion vectors")
     CowTable.read(spark, root).get
       .select(col("c_custkey"), col("c_mktsegment")).orderBy("c_custkey")
   }
@@ -1774,60 +1774,13 @@ object QueriesCow {
       |ORDER BY c_mktsegment, o_orderpriority""".stripMargin
 
   // -------------------------------------------------------------------
-  // MERGE-ON-READ predicate UPDATE: the same statement as
-  // cow_update_where but with deletion-vector economics — old images
-  // tombstone, new images append, ZERO partitions rewritten. The
-  // require() pins that every base data file carried by reference and
-  // the appended bytes are a small fraction of the data; the oracle
-  // replays the CASE projection through the planner-path read.
-  // -------------------------------------------------------------------
-  def cowMorUpdate(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sinks.CowV2
-    val root = scratch("cow_umor")
-    val o = Tables.load(spark, dir, "orders").select(
-      col("o_orderkey"), col("o_custkey"), col("o_orderpriority"),
-      floor(col("o_totalprice") * 100).cast("long").as("cents"))
-    CowTable.commitFull(o, root, 1L, Seq("o_orderpriority"))
-    CowTable.updateWhereMor(spark, root, 2L,
-      col("cents") >= 49000000L,
-      Map("o_custkey" -> lit(0L)),
-      prune = Seq(graft.sinks.CowRange("cents", Some("49000000"), None)))
-    val m = CowTable.currentManifest(spark, root).get
-    val appended = m.files.filter(_.path.startsWith("batch-2/"))
-    val carried = m.files.filter(_.path.startsWith("batch-1/"))
-    // SF-aware economics (r20): changed-row ratio exact at any scale,
-    // byte ratio above the parquet-overhead floor (see ByteEconFloor)
-    val changedRows =
-      appended.map(_.rows).sum + m.tombstones.map(_.rows).sum
-    val totalBytes = m.files.map(_.bytes).sum
-    require(m.tombstones.nonEmpty && appended.nonEmpty &&
-      changedRows * 4 < m.files.map(_.rows).sum &&
-      (totalBytes < ByteEconFloor ||
-        (appended.map(_.bytes).sum + m.tombstones.map(_.bytes).sum) * 4 <
-          totalBytes),
-      "MOR update did not deliver O(changed) economics")
-    require(carried.size ==
-      CowTable.manifest(spark, root, 1L).files.size,
-      "MOR update rewrote a base data file")
-    CowV2.read(spark, root).get.orderBy("o_orderkey")
-  }
-
-  val cowMorUpdateSql: String =
-    """SELECT o_orderkey,
-      |  CASE WHEN CAST(floor(o_totalprice * 100) AS BIGINT) >= 49000000
-      |       THEN 0 ELSE o_custkey END AS o_custkey,
-      |  o_orderpriority,
-      |  CAST(floor(o_totalprice * 100) AS BIGINT) AS cents
-      |FROM orders
-      |ORDER BY o_orderkey""".stripMargin
-
-  // -------------------------------------------------------------------
-  // POSITIONAL-DV predicate UPDATE (CowTable.updateWhereDv): the same
-  // statement as cow_mor_update, but the old images are masked by
-  // (file, position) instead of rewritten as full-row tombstones — no
-  // collision probes, no COW fallback on a clean table, old-row BYTES
-  // never written again. The require()s pin the economics AND that the
-  // debt is purely positional; the oracle replays the CASE projection.
+  // MERGE-ON-READ predicate UPDATE (CowTable.updateWhereDv): the same
+  // statement as cow_update_where, but the old images are masked by
+  // (file, position) deletion vectors and the new images append — ZERO
+  // partitions rewritten, old-row BYTES never written again. The
+  // require()s pin the economics AND that every base data file carried
+  // by reference; the oracle replays the CASE projection. Registered
+  // as both cow_mor_update and cow_posdv_update.
   // -------------------------------------------------------------------
   def cowPosdvUpdate(spark: SparkSession, dir: String): DataFrame = {
     val root = scratch("cow_updv")
@@ -1842,10 +1795,11 @@ object QueriesCow {
     val m = CowTable.currentManifest(spark, root).get
     val appended = m.files.filter(_.path.startsWith("batch-2/"))
     val carried = m.files.filter(_.path.startsWith("batch-1/"))
-    // SF-aware economics (r20): see cow_mor_update / ByteEconFloor
+    // SF-aware economics (r20): changed-row ratio exact at any scale,
+    // byte ratio above the parquet-overhead floor (see ByteEconFloor)
     val changedRows = appended.map(_.rows).sum + m.dvs.map(_.rows).sum
     val totalBytes = m.files.map(_.bytes).sum
-    require(m.dvs.nonEmpty && m.tombstones.isEmpty && appended.nonEmpty &&
+    require(m.dvs.nonEmpty && appended.nonEmpty &&
       changedRows * 4 < m.files.map(_.rows).sum &&
       (totalBytes < ByteEconFloor ||
         (appended.map(_.bytes).sum + m.dvs.map(_.bytes).sum) * 4 <
@@ -1857,55 +1811,24 @@ object QueriesCow {
     CowTable.read(spark, root).get.orderBy("o_orderkey")
   }
 
-  val cowPosdvUpdateSql: String = cowMorUpdateSql
-
-  // -------------------------------------------------------------------
-  // DELETION-VECTOR predicate delete (merge-on-read): the same DELETE
-  // WHERE contract as cow_delete_where, but the commit writes ONLY the
-  // matched rows as full-row tombstones — no partition rewrite. The
-  // require() pins the economics (tombstone bytes a small fraction of
-  // the data bytes a COW rewrite would have copied); the oracle pins
-  // that the planner-path read subtracts exactly the matched rows.
-  // -------------------------------------------------------------------
-  def cowDvDelete(spark: SparkSession, dir: String): DataFrame = {
-    val root = scratch("cow_dv")
-    val o = Tables.load(spark, dir, "orders").select(
-      col("o_orderkey"), col("o_custkey"), col("o_orderpriority"),
-      floor(col("o_totalprice") * 100).cast("long").as("cents"))
-    CowTable.commitFull(o, root, 1L, Seq("o_orderpriority"))
-    CowTable.deleteWhereMor(spark, root, 2L, col("cents") >= 49000000L,
-      prune = Seq(graft.sinks.CowRange("cents", Some("49000000"), None)))
-    val m = CowTable.currentManifest(spark, root).get
-    val tombBytes = m.tombstones.map(_.bytes).sum
-    val dataBytes = m.files.map(_.bytes).sum
-    // O(match) economics, SF-aware (r20): row ratio is exact at any
-    // scale; the byte ratio binds above ByteEconFloor (parquet's
-    // per-file format floor dominates a 31-row sidecar at sf0.001)
-    val tombRows = m.tombstones.map(_.rows).sum
-    val dataRows = m.files.map(_.rows).sum
-    require(m.tombstones.nonEmpty && tombRows * 4 < dataRows &&
-      (dataBytes < ByteEconFloor || tombBytes * 4 < dataBytes),
-      s"deletion-vector delete wrote $tombBytes tombstone bytes " +
-        s"($tombRows rows) against $dataBytes data bytes ($dataRows " +
-        "rows) — not the O(match) write it promises")
-    CowV2.read(spark, root).get.orderBy("o_orderkey")
-  }
-
-  val cowDvDeleteSql: String =
-    """SELECT o_orderkey, o_custkey, o_orderpriority,
-      |       CAST(floor(o_totalprice * 100) AS BIGINT) AS cents
+  val cowMorUpdateSql: String =
+    """SELECT o_orderkey,
+      |  CASE WHEN CAST(floor(o_totalprice * 100) AS BIGINT) >= 49000000
+      |       THEN 0 ELSE o_custkey END AS o_custkey,
+      |  o_orderpriority,
+      |  CAST(floor(o_totalprice * 100) AS BIGINT) AS cents
       |FROM orders
-      |WHERE NOT (CAST(floor(o_totalprice * 100) AS BIGINT) >= 49000000)
       |ORDER BY o_orderkey""".stripMargin
 
   // -------------------------------------------------------------------
   // POSITIONAL deletion vectors (CowTable.deleteWhereDv): the same
-  // DELETE WHERE as cow_dv_delete, but the sidecar records (file,
-  // row-position) pairs instead of full rows, and readers apply them
-  // as a codegen'd SCAN-STAGE mask — the require()s pin BOTH halves of
-  // the upgrade: sidecar bytes well under the full-row tombstones the
-  // same delete writes via deleteWhereMor, and a read plan with no
-  // join at all. The oracle replays the delete relationally.
+  // DELETE WHERE contract as cow_delete_where, but the commit records
+  // (file, row-position) pairs instead of rewriting partitions, and
+  // readers apply them as a codegen'd SCAN-STAGE mask — the require()s
+  // pin BOTH halves: sidecar bytes well under the data a COW rewrite
+  // would have copied, and a read plan with no join at all. The oracle
+  // replays the delete relationally. Registered as both cow_dv_delete
+  // and cow_posdv_delete.
   // -------------------------------------------------------------------
   def cowPosdvDelete(spark: SparkSession, dir: String): DataFrame = {
     val root = scratch("cow_posdv")
@@ -1922,7 +1845,7 @@ object QueriesCow {
     // byte ratio above the parquet-overhead floor (see ByteEconFloor)
     val dvRows = m.dvs.map(_.rows).sum
     val dataRows = m.files.map(_.rows).sum
-    require(m.dvs.nonEmpty && m.tombstones.isEmpty &&
+    require(m.dvs.nonEmpty &&
       dvRows * 16 < dataRows &&
       (dataBytes < ByteEconFloor || dvBytes * 16 < dataBytes),
       s"positional DV delete wrote $dvBytes sidecar bytes ($dvRows " +
@@ -1936,7 +1859,12 @@ object QueriesCow {
     out.orderBy("o_orderkey")
   }
 
-  val cowPosdvDeleteSql: String = cowDvDeleteSql
+  val cowDvDeleteSql: String =
+    """SELECT o_orderkey, o_custkey, o_orderpriority,
+      |       CAST(floor(o_totalprice * 100) AS BIGINT) AS cents
+      |FROM orders
+      |WHERE NOT (CAST(floor(o_totalprice * 100) AS BIGINT) >= 49000000)
+      |ORDER BY o_orderkey""".stripMargin
 
   // -------------------------------------------------------------------
   // STREAM-maintained JOIN view (CowStream.joinMvSink): the orders cow
@@ -2193,7 +2121,7 @@ object QueriesCow {
   // ONE DataFrame whose scan consults the manifest at planning time —
   // the range predicate below reaches the scan as an ordinary Catalyst
   // filter and still prunes files through min/max envelopes, and the
-  // outstanding MOR tombstones are subtracted. Pruning itself is
+  // outstanding deletion vectors are masked. Pruning itself is
   // byte/metric-pinned in CowV2Spec; THIS row proves the planner path
   // returns exactly the plain filtered table.
   // -------------------------------------------------------------------
@@ -2833,7 +2761,7 @@ object QueriesCow {
     "cow_join_mv" -> (cowJoinMv _),
     "cow_stream_join_mv" -> (cowStreamJoinMv _),
     "cow_delete_where" -> (cowDeleteWhere _),
-    "cow_dv_delete" -> (cowDvDelete _),
+    "cow_dv_delete" -> (cowPosdvDelete _),
     "cow_posdv_delete" -> (cowPosdvDelete _),
     "cow_catalog_sql" -> (cowCatalogSql _),
     "cow_named_dml" -> (cowNamedDml _),
@@ -2841,7 +2769,7 @@ object QueriesCow {
     "cow_parser_dml" -> (cowParserDml _),
     "cow_posdv_update" -> (cowPosdvUpdate _),
     "cow_update_where" -> (cowUpdateWhere _),
-    "cow_mor_update" -> (cowMorUpdate _),
+    "cow_mor_update" -> (cowPosdvUpdate _),
     "cow_sql_dml" -> (cowSqlDml _),
     "cow_source_read" -> (cowSourceRead _),
     "cow_bucket_join" -> (cowBucketJoin _),
@@ -2892,12 +2820,12 @@ object QueriesCow {
     "cow_stream_join_mv" -> cowStreamJoinMvSql,
     "cow_delete_where" -> cowDeleteWhereSql,
     "cow_dv_delete" -> cowDvDeleteSql,
-    "cow_posdv_delete" -> cowPosdvDeleteSql,
+    "cow_posdv_delete" -> cowDvDeleteSql,
     "cow_catalog_sql" -> cowCatalogSqlSql,
     "cow_named_dml" -> cowNamedDmlSql,
     "cow_alter_evolve" -> cowAlterEvolveSql,
     "cow_parser_dml" -> cowParserDmlSql,
-    "cow_posdv_update" -> cowPosdvUpdateSql,
+    "cow_posdv_update" -> cowMorUpdateSql,
     "cow_update_where" -> cowUpdateWhereSql,
     "cow_mor_update" -> cowMorUpdateSql,
     "cow_sql_dml" -> cowSqlDmlSql,

@@ -52,7 +52,7 @@ import graft.sinks.{CowManifest, CowManifestMeta, CowTable}
   * a named read plans through [[graft.sinks.CowFileIndex]] — manifest
   * listing, partition pruning (static + dynamic), min/max + Bloom +
   * null-count skipping, declared bucketing, and outstanding MOR
-  * debt (tombstone subtraction, positional-DV scan masks) — identical
+  * debt (positional-DV scan masks) — identical
   * to `CowV2.read`. WRITES use the `V1Write` fallback: `INSERT INTO` →
   * `commitAppend`, `INSERT OVERWRITE` → `commitFull`, dynamic
   * partition overwrite → partition-granular `commitPartitions`
@@ -769,8 +769,8 @@ object CowMetaTable {
           org.apache.spark.sql.types.StructField("n_bytes",
             org.apache.spark.sql.types.LongType)))
       case "history" => StructType(
-        Seq("snapshot_id", "data_files", "tombstone_files", "dv_files",
-          "n_rows", "bytes", "files_added", "files_removed")
+        Seq("snapshot_id", "data_files", "dv_files", "n_rows", "bytes",
+          "files_added", "files_removed")
           .map(c => org.apache.spark.sql.types.StructField(
             c, org.apache.spark.sql.types.LongType,
             nullable = false)))

@@ -93,7 +93,7 @@ object InvertedIndex {
     * additive for disjoint documents: a token's postings may span many
     * rows and probes explode them all; each (token, doc) pair lives in
     * exactly one batch, so per-doc tfs never conflict. (Re-ingesting a
-    * CHANGED document needs the merge-on-read tombstone pattern of
+    * CHANGED document needs the merge-on-read delete pattern of
     * CowTable instead — out of scope for an append-only corpus index.)
     * Same maintenance contract as Similarity.appendIndex: daily
     * pipelines index deltas, not corpora. */

@@ -28,8 +28,8 @@ import graft.catalog.CowNamedTable
   * (`RewriteDeleteFromTable` → `ReplaceData`/`WriteDelta`) runs in the
   * OPTIMIZER over a scan the operation itself must provide, which
   * would force this engine to ship a second, V2 read path — bypassing
-  * [[graft.sinks.CowFileIndex]]'s manifest pruning, the tombstone
-  * subtraction and the positional-DV scan masks that make cow reads
+  * [[graft.sinks.CowFileIndex]]'s manifest pruning and the
+  * positional-DV scan masks that make cow reads
   * correct and cheap — plus executor-side V2 file writers duplicating
   * the commit protocol. Delta chose the same seam for the same reason:
   * its DML is analyzer rules producing commands over its own

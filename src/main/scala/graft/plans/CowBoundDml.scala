@@ -262,7 +262,7 @@ final case class CowBoundUpdateCommand(
     CowBoundDml.runOwned(session, root, "UPDATE") { id =>
       if (CowSql.useMor(session, root, mode, thr))
         CowTable.updateWhereDvBy(session, root, id, condOf, setOf,
-          keep = keep, setsSubquery = subqSets)
+          keep = keep)
       else
         CowTable.updateWhereBy(session, root, id, condOf, setOf,
           keep = keep, setsSubquery = subqSets)

@@ -38,7 +38,7 @@ import graft.sinks.CowV2
   *
   * A debt-free snapshot converts to a bare `LogicalRelation` that
   * REUSES the v2 relation's output attribute ids (no projection at
-  * all); outstanding tombstones/DVs wrap the resolved read in an
+  * all); outstanding deletion vectors wrap the resolved read in an
   * id-preserving alias Project, so parent operators keep their
   * references either way.
   */
@@ -127,7 +127,7 @@ class CowCatalogRule(spark: SparkSession) extends Rule[LogicalPlan] {
     val exact: Option[(Long, Long)] =
       graft.sinks.CowTable.memoPeek(spark, t.root, t.meta.id) match {
         case Some(m) =>
-          if (m.tombstones.isEmpty && m.dvs.isEmpty)
+          if (m.dvs.isEmpty)
             Some((m.files.map(_.bytes).sum, m.files.map(_.rows).sum))
           else None
         case None if t.meta.nondataFiles.contains(0L) =>
@@ -178,8 +178,8 @@ class CowCatalogRule(spark: SparkSession) extends Rule[LogicalPlan] {
           CowV2.snapshotRelation(spark, t.root, t.manifest),
           r.output, statsTableFor(t), isStreaming = false, None)
     } else {
-      // outstanding MOR debt: the resolved read (DV scan mask +
-      // tombstone anti-join) is a subtree with fresh attribute ids —
+      // outstanding MOR debt: the resolved read (the DV scan mask) is
+      // a subtree with fresh attribute ids —
       // re-expose it under the v2 relation's ids so parents resolve.
       // Data-side planning is LAZY (round-17): only the O(sidecars)
       // non-data slice materializes at conversion — a cold filtered

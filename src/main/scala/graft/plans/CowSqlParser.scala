@@ -167,8 +167,6 @@ final case class CowDescribeDetailCommand(
       AttributeReference("partition_columns", StringType,
         nullable = false)(),
       AttributeReference("num_data_files", LongType, nullable = false)(),
-      AttributeReference("num_tombstone_files", LongType,
-        nullable = false)(),
       AttributeReference("num_dv_files", LongType, nullable = false)(),
       AttributeReference("data_file_rows", LongType, nullable = false)(),
       AttributeReference("size_bytes", LongType, nullable = false)(),
@@ -185,23 +183,21 @@ final case class CowDescribeDetailCommand(
       throw new IllegalStateException(s"no committed snapshot at $root"))
     val meta = CowTable.manifestMeta(session, root, head)
     // HEAD-ONLY when the commit carried totals (round-17): the one-row
-    // health probe then never materializes the entry list — the
-    // tombstone/DV split comes from the O(sidecars) non-data slice.
-    // Pre-r17 manifests fall back to the memoized full parse.
-    val (dataFiles, nRows, nBytes, tombs, dvs) =
-      (meta.totalFiles, meta.totalRows, meta.totalBytes) match {
-        case (Some(f), Some(r), Some(b)) =>
-          val sc = CowTable.snapshotSidecars(session, root, head)
-          (f, r, b, sc.count(_.kind == CowTable.KindTombstone).toLong,
-            sc.count(_.kind == CowTable.KindDv).toLong)
+    // health probe then never materializes the entry list — every
+    // non-data entry is a DV sidecar, so the head's non-data count is
+    // the DV count. Pre-r17 manifests fall back to the memoized full
+    // parse.
+    val (dataFiles, nRows, nBytes, dvs) =
+      (meta.totalFiles, meta.totalRows, meta.totalBytes,
+          meta.nondataFiles) match {
+        case (Some(f), Some(r), Some(b), Some(d)) => (f, r, b, d)
         case _ =>
           val m = CowTable.manifest(session, root, head)
           (m.files.size.toLong, m.files.map(_.rows).sum,
-            m.files.map(_.bytes).sum, m.tombstones.size.toLong,
-            m.dvs.size.toLong)
+            m.files.map(_.bytes).sum, m.dvs.size.toLong)
       }
     Seq(Row("cow", root, head, meta.partCols.mkString(","),
-      dataFiles, tombs, dvs, nRows, nBytes, ids.size.toLong,
+      dataFiles, dvs, nRows, nBytes, ids.size.toLong,
       CowTable.checkConstraints(session, root).size.toLong))
   }
 }

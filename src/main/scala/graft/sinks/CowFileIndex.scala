@@ -604,11 +604,9 @@ object CowV2 {
       spark: SparkSession, root: String,
       meta: CowManifestMeta, sidecars: Seq[CowFile]): DataFrame = {
     val df = spark.baseRelationToDataFrame(lazyRelation(spark, root, meta))
-    val masked = CowTable.applyDvs(spark, root, df,
+    CowTable.applyDvs(spark, root, df,
       col("_metadata.file_path"), col("_metadata.row_index"),
       sidecars.filter(_.kind == CowTable.KindDv))
-    CowTable.subtractTombstones(spark, root, masked,
-      sidecars.filter(_.kind == CowTable.KindTombstone), meta.colMap)
   }
 
   /** An ALREADY-LOADED manifest as a planner-pruned DataFrame (MOR
@@ -669,7 +667,7 @@ object CowV2 {
 
   /** The planner-native relation for one snapshot — what
     * [[graft.sinks.CowSource]] hands `spark.read.format("cow")`.
-    * A relation cannot carry the MOR tombstone anti-join, so an
+    * A relation cannot carry the deletion-vector mask, so an
     * UNFOLDED table refuses loudly (the steady state — after any COW
     * rewrite or [[CowTable.foldTombstones]] — is always servable;
     * [[CowV2.read]] serves the transient MOR state programmatically).
@@ -677,11 +675,11 @@ object CowV2 {
   private[sinks] def relationFor(
       spark: SparkSession, root: String,
       m: CowManifest): HadoopFsRelation = {
-    require(m.tombstones.isEmpty && m.dvs.isEmpty,
+    require(m.dvs.isEmpty,
       s"snapshot ${m.id} at $root has outstanding merge-on-read " +
-        "tombstones or deletion vectors — fold them " +
+        "deletion vectors — fold them " +
         "(CowTable.foldTombstones) or read through CowV2.read, which " +
-        "applies the subtraction")
+        "applies the mask")
     buildRelation(spark, root, m)
   }
 
@@ -690,14 +688,10 @@ object CowV2 {
     val relation = buildRelation(spark, root, m)
     val df = spark.baseRelationToDataFrame(relation)
     // outstanding positional deletion vectors mask inside the scan
-    // (codegen'd filter on _metadata — CowTable.applyDvs), then
-    // merge-on-read tombstones subtract rows exactly as in
-    // CowTable.resolved (null-safe, schema-grouped — key and full-row
-    // tombstone shapes may coexist); a folded table skips both
-    val masked = CowTable.applyDvs(spark, root, df,
+    // (codegen'd filter on _metadata — CowTable.applyDvs), exactly as
+    // in CowTable.resolved; a folded table skips the mask
+    CowTable.applyDvs(spark, root, df,
       col("_metadata.file_path"), col("_metadata.row_index"), m.dvs)
-    CowTable.subtractTombstones(spark, root, masked, m.tombstones,
-      m.colMap)
   }
 
   private def buildRelation(

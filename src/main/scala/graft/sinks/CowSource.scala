@@ -184,7 +184,7 @@ final class CowSource extends RelationProvider
           "concurrent commit — re-read the head and retry with a fresh id")
     // schema-only result: CreatableRelationProvider's return value is
     // vestigial, and building a READ relation here would wrongly throw
-    // on tables with outstanding MOR tombstones
+    // on tables with outstanding deletion vectors
     new BaseRelation {
       override def sqlContext: SQLContext = ctx
       override def schema: org.apache.spark.sql.types.StructType =

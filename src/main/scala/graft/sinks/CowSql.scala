@@ -82,7 +82,7 @@ object CowSql {
   private val OptimizeRe =
     s"""(?is)\\s*OPTIMIZE\\s+$Ref(?:\\s+WHERE\\s+(.+?))?\\s+ZORDER\\s+BY\\s*\\(([^)]+)\\)\\s*""".r
   // plain OPTIMIZE (no ZORDER): bin-packing compaction that also folds
-  // outstanding tombstones and deletion vectors — Delta's bare
+  // outstanding deletion vectors — Delta's bare
   // `OPTIMIZE t` surface over [[CowTable.compactPartitions]]
   private val OptimizePlainRe =
     s"""(?is)\\s*OPTIMIZE\\s+$Ref(?:\\s+WHERE\\s+(.+?))?\\s*""".r
@@ -210,8 +210,9 @@ object CowSql {
     *    ([[CowTable.deleteWhere]]/[[CowTable.updateWhere]]); steady
     *    state stays debt-free. The default, and the right call for
     *    deletes that empty most of what they touch.
-    *  - [[Mor]] — merge-on-read: a DELETE writes positional deletion
-    *    vectors ([[CowTable.deleteWhereDv]] — O(matched positions)
+    *  - [[Mor]] — merge-on-read with positional deletion vectors, the
+    *    table format's one merge-on-read delete form: a DELETE writes
+    *    them ([[CowTable.deleteWhereDv]] — O(matched positions)
     *    bytes, scan-stage mask on read), an UPDATE masks the old
     *    images positionally and appends the new ones
     *    ([[CowTable.updateWhereDv]]). Zero partitions rewritten; the
@@ -572,8 +573,7 @@ object CowSql {
         // subquery-bearing SETs force the matched-only split (ANSI)
         val subqSets = assignments.exists(a => hasSubquery(a.value))
         if (useMor(spark, root, mode, thresholdBytes))
-          CowTable.updateWhereDvBy(spark, root, id, c, sets, keep = keep,
-            setsSubquery = subqSets)
+          CowTable.updateWhereDvBy(spark, root, id, c, sets, keep = keep)
         else
           CowTable.updateWhereBy(spark, root, id, c, sets, keep = keep,
             setsSubquery = subqSets)

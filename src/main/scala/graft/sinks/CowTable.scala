@@ -125,11 +125,13 @@ final case class CowManifest(
     schema.fieldNames.map(phys).toSet ++ retiredPhys
   /** Live DATA files (what a scan reads). */
   def files: Seq[CowFile] = allFiles.filter(_.kind == CowTable.KindData)
-  /** Outstanding merge-on-read TOMBSTONE files (what a scan subtracts). */
-  def tombstones: Seq[CowFile] =
-    allFiles.filter(_.kind == CowTable.KindTombstone)
+  /** Always empty: merge-on-read deletes are positional deletion
+    * vectors only ([[dvs]]). Kept for callers that still report a
+    * tombstone count, such as the benchmark's `sinks.tombstone_files`.
+    */
+  def tombstones: Seq[CowFile] = Nil
   /** Outstanding positional DELETION-VECTOR sidecars (what a scan
-    * masks — [[CowTable.deleteWhereDv]]).
+    * masks — [[CowTable.deleteWhereDv]], [[CowTable.deleteKeysMor]]).
     */
   def dvs: Seq[CowFile] = allFiles.filter(_.kind == CowTable.KindDv)
 }
@@ -225,7 +227,7 @@ private[sinks] final case class CowManifestRow(
     // every meta column, and — unlike the entry columns — describing
     // the RESOLVED snapshot even on a delta manifest, whose writer
     // holds the resolved list in memory): live-data row/byte/file
-    // totals, the non-data (tombstone+DV) entry count, and whether
+    // totals, the non-data (DV) entry count, and whether
     // every live data file carries a planner-declarable bucket tag.
     // They make cold statistics, the MOR-debt gate, and the bucketed
     // lazy-read gate O(1) head reads instead of O(table-files) parses.
@@ -351,11 +353,10 @@ object CowTable {
   private[graft] val ChangesDir = "_changes"
   /** The sidecars' operation column (signed form: D/I). */
   private[graft] val ChangeOper = "_oper"
-  /** Manifest entry kinds: live data, merge-on-read tombstones, and
-    * positional deletion-vector sidecars.
+  /** Manifest entry kinds: live data and positional deletion-vector
+    * sidecars.
     */
   val KindData = "data"
-  val KindTombstone = "tombstone"
   val KindDv = "dv"
   private val DvDirName = "__dv"
 
@@ -1017,7 +1018,7 @@ object CowTable {
     }
 
   /** Materialize snapshot `id` NARROWED to the entries `pushed` keeps
-    * (plus every non-data entry — tombstones/DV sidecars must always
+    * (plus every non-data entry — DV sidecars must always
     * ride along for correctness). `pushed` references the typed
     * `__pp_<partCol>` columns this method adds over the entry frame;
     * [[CowLazyFileIndex.pushedOf]] builds it from the scan's partition
@@ -1078,8 +1079,8 @@ object CowTable {
   private[graft] val sidecarLoads =
     new java.util.concurrent.ConcurrentHashMap[String, Long]()
 
-  /** Snapshot `id`'s NON-DATA entries (merge-on-read tombstones + DV
-    * sidecars) WITHOUT materializing the data entry list: memo-resident
+  /** Snapshot `id`'s NON-DATA entries (the merge-on-read DV sidecars)
+    * WITHOUT materializing the data entry list: memo-resident
     * manifests answer in memory; cold ones with ONE tiny kind≠data
     * filtered job over the chain-unrolled entry frame — O(sidecars)
     * driver memory, which is the floor for serving the subtraction at
@@ -1145,8 +1146,8 @@ object CowTable {
         }
     }
 
-  /** Is snapshot `id` free of merge-on-read debt (no tombstones, no
-    * DV sidecars)? The gate the BARE-relation surfaces must pass — a
+  /** Is snapshot `id` free of merge-on-read debt (no DV sidecars)?
+    * The gate the BARE-relation surfaces must pass — a
     * relation cannot carry the subtraction ([[CowV2.relationFor]]'s
     * loud refusal); the DataFrame surfaces serve debt lazily via
     * [[snapshotSidecars]] + [[CowV2.lazyReadSnapshot]] instead.
@@ -1340,7 +1341,7 @@ object CowTable {
   def currentManifest(spark: SparkSession, root: String): Option[CowManifest] =
     committedIds(spark, root).lastOption.map(manifest(spark, root, _))
 
-  /** The current table state (merge-on-read tombstones applied). */
+  /** The current table state (deletion vectors applied). */
   def read(spark: SparkSession, root: String): Option[DataFrame] =
     currentManifest(spark, root).map(m => resolved(spark, root, m, m.files))
 
@@ -1391,7 +1392,7 @@ object CowTable {
   /** RESTORE (Delta's `RESTORE TABLE … TO VERSION AS OF`): commit a
     * NEW snapshot whose content is identical to committed snapshot
     * `toId`, BY REFERENCE — the new manifest lists exactly `toId`'s
-    * files (data AND outstanding MOR tombstones), so no data file is
+    * files (data AND outstanding deletion vectors), so no data file is
     * read, copied or rewritten and the whole operation costs one
     * manifest write whatever the table size. Restore is an UNDO that
     * PRESERVES history: the undone commits stay addressable for time
@@ -1477,7 +1478,7 @@ object CowTable {
     * the source reports via the reverse pointer).
     *
     * SCOPE: the source snapshot must be debt-free (no outstanding
-    * tombstones / deletion vectors) — their sidecars resolve file
+    * deletion vectors) — their sidecars resolve file
     * identity against THEIR table root, which a foreign-root reader
     * cannot reuse; `OPTIMIZE` folds the debt first. A source that is
     * ITSELF a clone still referencing its own source's files by
@@ -1507,9 +1508,9 @@ object CowTable {
     require(committedIds(spark, targetRoot).isEmpty,
       s"shallow clone target $targetRoot already has commits")
     val m = manifest(spark, sourceRoot, at)
-    require(m.tombstones.isEmpty && m.dvs.isEmpty,
+    require(m.dvs.isEmpty,
       s"shallow clone of $sourceRoot@$at: the snapshot carries " +
-        "outstanding merge-on-read debt (tombstones / deletion " +
+        "outstanding merge-on-read debt (deletion " +
         "vectors) whose sidecars are root-anchored — run OPTIMIZE " +
         "on the source to fold the debt, then clone")
     // clone-of-a-clone with still-foreign entries: the carried files
@@ -2051,14 +2052,6 @@ object CowTable {
       require(!(bs.keyCols :+ bs.partCol).contains(name),
         s"DROP COLUMN $name: the registered bucket layout references " +
           "it — rewrite under the new shape instead"))
-    // outstanding full-row tombstones carry the column's bytes and
-    // subtract by equality against a frame that would no longer have
-    // it (every read fails — or, after a re-ADD, matches the WRONG
-    // column); fold the debt first
-    require(m.tombstones.isEmpty,
-      s"DROP COLUMN $name at $root: outstanding merge-on-read " +
-        "tombstones reference the current columns — run OPTIMIZE to " +
-        "fold them, then drop")
     // retained change-feed sidecars store the column's write-time
     // values; a DROP + re-ADD would resurrect them through the feed
     val changesDir = new Path(root, ChangesDir)
@@ -2407,51 +2400,33 @@ object CowTable {
       } :+ col(operCol): _*)
   }
 
-  /** MERGE-ON-READ resolution: the data files' rows minus any row a
-    * tombstone of the same partitions names. The anti-join is on every
-    * tombstone column (merge keys + partition values) and broadcasts
-    * the tombstone side — outstanding tombstones are delete-batch-
-    * sized, never table-sized, and [[foldTombstones]] retires them.
-    *
-    * `ranges` (from a skipping read) prune TOMBSTONE files with the
-    * same min/max envelope test applied to data files: a tombstone row
-    * outside `[lo, hi]` on a pruning column can only delete data rows
-    * that are equally outside it (the anti-join equates every tombstone
-    * column), and those rows are removed by the caller's residual
-    * filter anyway — so a point lookup outside a tombstone's key range
-    * reads zero tombstone bytes (pinned in `CowTableSpec`). Sound ONLY
-    * because the caller applies the ranges as a residual filter; plain
-    * reads pass no ranges.
+  /** MERGE-ON-READ resolution: the data files' rows minus every row a
+    * positional deletion vector of the same partitions names. The
+    * vectors mask INSIDE the scan (a codegen'd filter, no join), and
+    * only the wanted partitions' sidecars load; [[foldTombstones]]
+    * retires them. Mapped tables materialize `_metadata` across the
+    * logical projection ([[dfForMeta]]) so the mask can still address
+    * file/pos; it drops again before the frame leaves this seam.
     */
   private def resolved(
       spark: SparkSession, root: String,
-      m: CowManifest, dataFiles: Seq[CowFile],
-      ranges: Seq[CowRange] = Nil): DataFrame = {
+      m: CowManifest, dataFiles: Seq[CowFile]): DataFrame = {
     val wanted = dataFiles.map(m.partKeyOf).toSet
-    val tombs = m.tombstones.filter(t => wanted.contains(m.partKeyOf(t)))
-      .filter(t => ranges.forall(r =>
-        mayMatch(m.schema, t, r.colName, r.lo, r.hi)))
-    // positional deletion vectors mask INSIDE the scan (a codegen'd
-    // filter, no join); only the wanted partitions' sidecars load.
-    // Mapped tables materialize `_metadata` across the logical
-    // projection (dfForMeta) so the mask can still address file/pos;
-    // it drops again before the frame leaves this seam.
     val dvFiles = m.dvs.filter(d => wanted.contains(m.partKeyOf(d)))
     val df =
       if (dvFiles.nonEmpty && m.mapped) dfForMeta(spark, root, m, dataFiles)
       else dfFor(spark, root, m, dataFiles)
-    val masked = applyDvs(spark, root, df,
+    applyDvs(spark, root, df,
       col("_metadata.file_path"), col("_metadata.row_index"), dvFiles)
       .drop("_metadata")
-    subtractTombstones(spark, root, masked, tombs, m.colMap)
   }
 
   /** Apply positional deletion vectors as a SCAN-STAGE mask: filter
     * with [[graft.functions.DvDeletedExpr]] on the scan's own
     * `_metadata` columns. The read-time cost is a codegen'd per-row
-    * binary search — no anti-join, no build/probe, no shuffle;
-    * contrast [[subtractTombstones]]'s O(tombstones ⋈ data) row-
-    * equality join, which full-row tombstones cannot avoid.
+    * binary search — no anti-join, no build/probe, no shuffle. This is
+    * the one delete form every merge-on-read read applies
+    * ([[resolved]], [[visibleWithPos]], the planner's file index).
     *
     * The DRIVER'S part here is metadata-only: it hands the expression
     * the sidecar PATHS (one manifest entry per DV commit per touched
@@ -2491,69 +2466,6 @@ object CowTable {
       rootKey, sidecars, uri.getScheme, uri.getAuthority,
       new graft.functions.SerializableHadoopConf(
         spark.sessionState.newHadoopConf()))))
-  }
-
-  /** Subtract tombstone rows from `df` — NULL-SAFE equality on every
-    * tombstone column: a full-row tombstone ([[deleteWhereMor]]) may
-    * carry NULL in any data column, and plain EqualTo would never
-    * match it — the row would survive its own delete. For key
-    * tombstones this also means an explicitly-named NULL-keyed row IS
-    * deletable. Explicit-condition anti-join output is the LEFT side
-    * verbatim, so column order is stable.
-    *
-    * Tombstone files may carry DIFFERENT column sets on one table —
-    * key tombstones (merge keys + partCols, and two deletes may use
-    * different key sets) next to full-row tombstones. One combined
-    * read would collapse them onto a single inferred schema (absent
-    * columns surfacing as NULL) and corrupt the anti-join both ways —
-    * resurrecting keyed deletes or over-deleting siblings — so files
-    * group by their OWN schema and each group anti-joins separately.
-    * The footer reads are driver-side and delete-batch-sized.
-    */
-  private[sinks] def subtractTombstones(
-      spark: SparkSession, root: String, df: DataFrame,
-      tombs: Seq[CowFile],
-      colMap: Map[String, String] = Map.empty): DataFrame =
-    tombstoneGroups(spark, root, tombs, colMap).foldLeft(df) {
-      case (acc, (cols, t)) =>
-        val cond = cols.map(c => acc(c) <=> t(c)).reduce(_ && _)
-        acc.join(broadcast(t), cond, "left_anti")
-    }
-
-  /** Tombstone files grouped by their OWN column set (one footer read
-    * per file, driver-side, delete-batch-sized), each group as one
-    * DataFrame — deterministic order so plans are stable.
-    */
-  private def tombstoneGroups(
-      spark: SparkSession, root: String,
-      tombs: Seq[CowFile],
-      colMap: Map[String, String] = Map.empty): Seq[(Seq[String], DataFrame)] = {
-    // tombstone files store PHYSICAL column names (they land through
-    // writeBatch like data files); the group key and frame alias back
-    // to logical so the anti-join matches the logical read
-    val rev = colMap.filter { case (l, p) => l != p }.map(_.swap)
-    tombs
-      .map { f =>
-        val p = entryPath(root, f.path)
-        p -> org.apache.spark.sql.graftbridge.Bridge.footerSchema(spark, p)
-          .map(relaxed)
-          .getOrElse(spark.read.parquet(p).schema)
-      }
-      .groupBy(_._2.fieldNames.toSeq)
-      .toSeq.sortBy(_._1.mkString("\u0001"))
-      .map { case (physCols, group) =>
-        val paths = group.map(_._1)
-        // one footer schema per group is the common case; files whose
-        // column TYPES differ under the same names keep the inferring
-        // read, which picks one of them as before
-        val raw = group.map(_._2).distinct match {
-          case Seq(schema) => spark.read.schema(schema).parquet(paths: _*)
-          case _ => spark.read.parquet(paths: _*)
-        }
-        val logical = physCols.map(c => rev.getOrElse(c, c))
-        logical -> raw.select(physCols.zip(logical).map {
-          case (ph, lg) => raw(ph).as(lg) }: _*)
-      }
   }
 
   /** Resolve a manifest entry path against the table root: SHALLOW
@@ -2701,15 +2613,15 @@ object CowTable {
   // -------------------------------------------------------------------
 
   /** O(manifest) COUNT(*): the sum of the live data files' row counts.
-    * EXACT only while no merge-on-read tombstones are outstanding (a
-    * tombstone subtracts rows its data file still carries) — returns
+    * EXACT only while no deletion vectors are outstanding (a vector
+    * masks rows its data file still carries) — returns
     * None then; callers fall back to a scan or [[foldTombstones]]
     * first. Never guesses.
     */
   def countFast(spark: SparkSession, root: String): Option[Long] = {
     val m = currentManifest(spark, root).getOrElse(
       throw new IllegalStateException(s"no committed snapshot at $root"))
-    if (m.tombstones.nonEmpty || m.dvs.nonEmpty) None
+    if (m.dvs.nonEmpty) None
     else Some(m.files.map(_.rows).sum)
   }
 
@@ -2720,7 +2632,7 @@ object CowTable {
     * EVERY clustering dimension at once — multi-column skipping on a
     * table whose original layout scattered both dimensions across all
     * files. Content is byte-identical table state (spec-pinned);
-    * outstanding MOR tombstones fold for free (the rewrite reads the
+    * outstanding deletion vectors fold for free (the rewrite reads the
     * resolved state). Boundaries come from `approx_percentile`
     * (sketch variance moves bytes between FILES, never rows out of
     * results — the z-order oracle contract). Replay-guarded like every
@@ -2866,7 +2778,7 @@ object CowTable {
 
   /** The `files` METADATA TABLE (Iceberg's `table$files`): one row per
     * live entry of the current snapshot with its partition rendering
-    * (hive-style `c=v/…`, escaped), kind (data/tombstone/dv), row/byte
+    * (hive-style `c=v/…`, escaped), kind (data/dv), row/byte
     * counts, and the stats triad as map columns (min/max envelopes in
     * Spark string form, null counts, bloom column names). Served from
     * the manifest alone — no data file opened; the operator's view
@@ -2917,8 +2829,8 @@ object CowTable {
   /** The `partitions` METADATA TABLE (Iceberg's `table$partitions`):
     * one row per live partition with its file/row/byte totals.
     * Debt-free snapshots serve ENTIRELY from the manifest — zero data
-    * files opened, whatever the table size. Outstanding MOR
-    * tombstones/DVs make the manifest's per-partition row counts
+    * files opened, whatever the table size. Outstanding deletion
+    * vectors make the manifest's per-partition row counts
     * overstatements; since debt is the STEADY STATE under continuous
     * ingest, the table no longer refuses (round-18): file and byte
     * totals still come from the manifest (they describe the physical
@@ -2926,10 +2838,9 @@ object CowTable {
     * DEBT-TOUCHED partitions are recomputed exactly by a grouped count
     * over the debt-subtracted snapshot read — scoped to just those
     * partitions (sidecars land through the partitioned batch writer,
-    * so their manifest part values name the partitions they can touch;
-    * tombstone anti-joins carry the partition columns and DV masks
-    * target files inside their own partition). Untouched partitions
-    * keep their manifest counts — a 100 TB table with debt in three
+    * so their manifest part values name the partitions they can touch,
+    * and DV masks target files inside their own partition).
+    * Untouched partitions keep their manifest counts — a 100 TB table with debt in three
     * partitions lists ALL partitions at the cost of scanning three.
     * Partition values come back in their Spark string form (the
     * manifest's own representation); NULL partitions stay NULL.
@@ -3028,7 +2939,7 @@ object CowTable {
     * string forms are exact). Strings are refused outright: their
     * collected stats may be length-truncated, so a string extreme
     * cannot be certified from the manifest. None under the same
-    * no-tombstone rule as [[countFast]] (a delete may have removed the
+    * no-debt rule as [[countFast]] (a delete may have removed the
     * extreme row), or when any live file lacks the stat.
     */
   def minMaxFast(
@@ -3038,7 +2949,7 @@ object CowTable {
       throw new IllegalStateException(s"no committed snapshot at $root"))
     val dt = m.schema.fields.find(_.name == colName).map(_.dataType)
     if (dt.isEmpty || dt.contains(StringType) ||
-        m.tombstones.nonEmpty || m.dvs.nonEmpty || m.files.isEmpty) None
+        m.dvs.nonEmpty || m.files.isEmpty) None
     else for {
       lo <- foldStat(dt.get, m.files.map(_.mins.get(colName)),
         takeMax = false)
@@ -3098,7 +3009,7 @@ object CowTable {
     val m = currentManifest(spark, root).getOrElse(
       throw new IllegalStateException(s"no committed snapshot at $root"))
     val kept = keptFiles(spark, m, ranges)
-    val df = resolved(spark, root, m, kept, ranges)
+    val df = resolved(spark, root, m, kept)
     // residual filters in each COLUMN's type (casting the column to
     // string would both break numeric ordering and block parquet
     // pushdown); the string bound round-trips through the same cast
@@ -3173,24 +3084,9 @@ object CowTable {
     val m = currentManifest(spark, root).getOrElse(
       throw new IllegalStateException(s"no committed snapshot at $root"))
     val kept = keptFilesIn(spark, m, colName, values)
-    // tombstones prune by the values' overall [min, max] envelope — an
-    // explicit fold that surrenders (no pruning, never a wrong prune)
-    // if ANY pair is incomparable: statCompare is partial (NaN,
-    // malformed numerics), and a sort under a partial comparator could
-    // emit an inverted envelope that wrongly drops a live tombstone
     val dt = leafType(m.schema, colName)
       .getOrElse(StringType)
-    def fold(keepLeft: Int => Boolean): Option[String] =
-      values.foldLeft(Option(values.head)) {
-        case (Some(a), b) =>
-          statCompare(dt, a, b).map(c => if (keepLeft(c)) a else b)
-        case (None, _) => None
-      }
-    val ranges = (fold(_ <= 0), fold(_ >= 0)) match {
-      case (lo @ Some(_), hi @ Some(_)) => Seq(CowRange(colName, lo, hi))
-      case _ => Nil
-    }
-    val df = resolved(spark, root, m, kept, ranges)
+    val df = resolved(spark, root, m, kept)
     df.where(col(colName).isin(values.map(v => lit(v).cast(dt)): _*))
   }
 
@@ -4296,8 +4192,8 @@ object CowTable {
           }
           touched ++ fresh.map(f => partKey(partCols, f.part))
         }
-      // carry untouched DATA files and untouched partitions' tombstones;
-      // a touched partition's tombstones retire here — its rewrite was
+      // carry untouched DATA files and untouched partitions' DVs;
+      // a touched partition's DVs retire here — its rewrite was
       // computed from the RESOLVED base, so they are folded in. Widened
       // columns whose string form changed lose their carried blooms AND
       // min/max stats (see bloomUnsafeCols): a float-era stat "0.1"
@@ -4351,10 +4247,6 @@ object CowTable {
       * the `batch-<id>` dir the body wrote before finding no change.
       */
     final case class NoCommit(dropBatch: Boolean) extends Leased
-    /** The in-place form cannot be exact here: the lease is released,
-      * then `cow` (the copy-on-write twin) answers the call.
-      */
-    final case class Cow(cow: () => Boolean) extends Leased
     /** A snapshot to publish under `ddl` and `mapping`. `changeLog` is
       * its sidecar, already staged by [[stageChangeLog]]; `retire`
       * lists files the commit consumes, deleted once the manifest is
@@ -4432,7 +4324,6 @@ object CowTable {
       body: => Leased): Boolean = {
     val fs = hfs(spark, root)
     var vacuumKnown: Map[Long, Seq[String]] = Map.empty
-    var leased = true
     acquireCommitLock(spark, root, id)
     try {
       if (committedIds(spark, root).exists(_ >= id)) return false
@@ -4455,11 +4346,6 @@ object CowTable {
         case Leased.NoCommit(dropBatch) =>
           if (dropBatch) fs.delete(new Path(s"$root/$BatchPrefix$id"), true)
           return true
-        case Leased.Cow(cow) =>
-          releaseCommitLock(spark, root, id)
-          leased = false // the finally must not delete a lease a
-                         // concurrent same-id writer may re-acquire
-          return cow()
         case c: Leased.Commit =>
           val (partCols, files) = (c, base) match {
             case (a: Leased.Adds, Some(b)) =>
@@ -4505,7 +4391,7 @@ object CowTable {
           vacuumKnown = Map(id -> files.map(_.path)) ++
             base.map(b => b.id -> b.allFiles.map(_.path))
       }
-    } finally if (leased) releaseCommitLock(spark, root, id)
+    } finally releaseCommitLock(spark, root, id)
     keep.foreach(vacuum(spark, root, _, vacuumKnown))
     true
   }
@@ -4535,7 +4421,7 @@ object CowTable {
       // [min, max] envelope on the first key column intersects
       // the batch's key range (plus stat-less files) are read;
       // for the monotonically-growing keys insert-only ingest
-      // appends, that prunes to nothing. Tombstoned incumbents
+      // appends, that prunes to nothing. DV-masked incumbents
       // may false-positive the overlap, which only SKIPS the
       // sidecar — the diff fallback stays correct. No broadcast
       // hint: the batch's distinct keys can be arbitrarily
@@ -4608,7 +4494,7 @@ object CowTable {
   }
 
   /** APPEND commit: `batch`'s files ADD to the table — no partition is
-    * rewritten, every previous file (data and tombstones) carries over
+    * rewritten, every previous file (data and DVs) carries over
     * verbatim. This is the write path for insert-only fact/event
     * ingest, where [[commitPartitions]]' rewrite-the-touched-partition
     * contract would cost a partition rewrite per micro-batch for zero
@@ -5114,7 +5000,7 @@ object CowTable {
   }
 
   /** The WOULD-BE snapshot of staged commit `id` — what the table will
-    * serve if [[publishStaged]] succeeds (carried MOR tombstones
+    * serve if [[publishStaged]] succeeds (carried deletion vectors
     * applied). This is the audit surface.
     */
   def readStaged(spark: SparkSession, root: String, id: Long): DataFrame = {
@@ -5402,7 +5288,7 @@ object CowTable {
   /** COMPACTION as a COW commit: rewrite exactly the partitions whose
     * file count exceeds what their bytes need at `targetFileBytes`
     * (the fragmentation [[commitAppend]] accrues — one file per append
-    * per partition) or that carry outstanding tombstones (folded for
+    * per partition) or that carry outstanding deletion vectors (folded for
     * free by the rewrite), binning rows so each compacted partition
     * lands in ~ceil(bytes / target) files. Bin sizing comes from the
     * MANIFEST's per-file byte counts — no data pass — and the bin
@@ -5441,12 +5327,12 @@ object CowTable {
     // partition-scoped form (`OPTIMIZE … WHERE p`): compact and fold
     // delete debt in the matching partitions only
     val scope = where.map(partitionsMatching(spark, m, _))
-    val tombParts = (m.tombstones ++ m.dvs).map(m.partKeyOf).toSet
+    val debtParts = m.dvs.map(m.partKeyOf).toSet
     val wantByPart: Map[String, Long] = m.files.groupBy(m.partKeyOf)
       .flatMap { case (pk, fs) =>
         val bytes = fs.map(_.bytes).sum
         val want = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes)
-        if ((fs.size > want || tombParts.contains(pk)) &&
+        if ((fs.size > want || debtParts.contains(pk)) &&
             scope.forall(_.contains(pk))) Some(pk -> want)
         else None
       }
@@ -5520,7 +5406,7 @@ object CowTable {
     * off the new layout. Allowed precisely because the rewrite touches
     * every partition — no carried file can straddle two layouts, which
     * is what the partial-commit layout check protects. Outstanding
-    * tombstones fold into the rewrite for free. The full-rewrite cost
+    * deletion vectors fold into the rewrite for free. The full-rewrite cost
     * is the honest price of relayout at any scale; what the format
     * buys is doing it IN history (readers never see a half-moved
     * table, and a crashed relayout is invisible).
@@ -5544,15 +5430,23 @@ object CowTable {
   /** Canonical keys of the partitions a delta lands in. Values come
     * from the same Spark string-cast that stamps manifest entries, so
     * the two sides can never drift (driver-side toString of a
-    * collected Timestamp would).
+    * collected Timestamp would). A driver-resident delta (a
+    * `LocalRelation` once optimized, like [[SnapshotTarget.commit]]'s
+    * fast path) collects with no Spark job and dedupes on the driver;
+    * any other frame dedupes in one distributed job.
     */
   private def touchedKeys(
-      delta: DataFrame, partCols: Seq[String]): Set[String] =
-    delta.select(partCols.map(c => col(c).cast("string")): _*)
-      .distinct().collect()
-      .map(r => partKey(partCols,
+      delta: DataFrame, partCols: Seq[String]): Set[String] = {
+    val parts = delta.select(partCols.map(c => col(c).cast("string")): _*)
+    val rows = parts.queryExecution.optimizedPlan match {
+      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        parts.collect()
+      case _ => parts.distinct().collect()
+    }
+    rows.map(r => partKey(partCols,
         partCols.zipWithIndex.map { case (c, i) => c -> r.getString(i) }.toMap))
       .toSet
+  }
 
   private def baseFor(
       spark: SparkSession, root: String,
@@ -5658,7 +5552,7 @@ object CowTable {
     // partitions that actually hold matching rows (candidate-scan only;
     // values cast to string IN-ENGINE so they match the manifest's own
     // cast-to-string partition representation exactly)
-    val candScan = resolved(spark, root, m, candidates, prune)
+    val candScan = resolved(spark, root, m, candidates)
     val hit = candScan
       .where(condOf(candScan))
       .select(m.partCols.map(c => col(c).cast("string")): _*)
@@ -5799,7 +5693,7 @@ object CowTable {
     val candidates =
       if (prune.isEmpty) m.files else keptFiles(spark, m, prune)
     if (candidates.isEmpty) return true // nothing can match — id unconsumed
-    val candScan = resolved(spark, root, m, candidates, prune)
+    val candScan = resolved(spark, root, m, candidates)
     val hit = candScan
       .where(condOf(candScan))
       .select(m.partCols.map(c => col(c).cast("string")): _*)
@@ -5848,166 +5742,21 @@ object CowTable {
       keep, sortCols, changeLogKeys = changeLogKeys)
   }
 
-  /** PREDICATE UPDATE as MERGE-ON-READ — deletion-vector economics
-    * for UPDATE, completing the pairing [[deleteWhere]]/[[deleteWhereMor]]
-    * gives deletes: the matched-AND-CHANGED rows' OLD images become
-    * full-row tombstones and their NEW images append as ordinary data
-    * files in the SAME commit — O(changed rows) written, zero
-    * partitions rewritten. Readers already compose both halves: the
-    * tombstone anti-join subtracts the old images, the appended files
-    * carry the new ones. Rows the SET leaves bit-identical are simply
-    * NOT touched (no tombstone, no append) — that is both cheaper and
-    * REQUIRED for exactness: a tombstone equal to its own appended
-    * image would cancel the pair and lose the row.
-    *
-    * EXACTNESS GUARD, stated plainly: full-row tombstones subtract by
-    * equality, not position, so if some row's NEW image null-safe-
-    * equals a DIFFERENT matched row's OLD image, the old image's
-    * tombstone would also kill the fresh append (a real multiset
-    * hazard, not a theoretical one). The commit detects that overlap
-    * with one delta-sized join and falls back to the COW
-    * [[updateWhere]] for that batch — exactness is unconditional,
-    * the fast path is the common case. Same SET/partition-column
-    * rules and prune hint as [[updateWhere]]; `changeLogKeys`
-    * (non-empty) emits D(old)/I(new) read back from the written files
-    * on the fast path, or the ordinary keyed diff sidecar when the
-    * commit falls back to the COW rewrite.
-    */
-  def updateWhereMor(
-      spark: SparkSession,
-      root: String,
-      id: Long,
-      cond: Column,
-      set: Map[String, Column],
-      prune: Seq[CowRange] = Nil,
-      keep: Int = 2,
-      changeLogKeys: Seq[String] = Nil): Boolean = {
-    if (committedIds(spark, root).exists(_ >= id)) return false
-    require(set.nonEmpty, "UPDATE needs at least one SET assignment")
-    val m = currentManifest(spark, root).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $root"))
-    set.keys.foreach(c => require(m.schema.fieldNames.contains(c),
-      s"SET column '$c' is not a table column"))
-    m.partCols.foreach(p => require(!set.contains(p),
-      s"UPDATE SET must not assign partition column '$p'"))
-    def underLease(): Leased = {
-      val candidates =
-        if (prune.isEmpty) m.files else keptFiles(spark, m, prune)
-      if (candidates.isEmpty) return Leased.NoCommit(dropBatch = false)
-      val fields = m.schema.fields.toSeq
-      val candScan = resolved(spark, root, m, candidates, prune)
-      // same loud-failure guard as the COW twin (see checkedAssignments)
-      // — evaluated only on matched rows (`matches` below is already
-      // cond-filtered before any new image is computed)
-      val setChecked = checkedAssignments(candScan, m, set)
-      def newImage(df: DataFrame): DataFrame =
-        df.select(fields.map { f =>
-          setChecked.get(f.name) match {
-            case Some(v) => v.as(f.name)
-            case None => col(f.name)
-          }
-        }: _*)
-      val matches = candScan.where(coalesce(cond, lit(false)))
-      val oldStruct = struct(fields.map(f => col(f.name)): _*)
-      // pinned once: the candidates scan + anti-join feeds the
-      // collision probes AND both writes below — recomputing a
-      // delta-sized set four times would quadruple the scan, and
-      // pinning also means `cond`/`set` evaluate exactly once (both
-      // must still be deterministic — the tombstone and its append
-      // derive from the same materialized rows either way)
-      val changed = matches
-        .where(!(oldStruct <=> struct(fields.map { f =>
-          setChecked.get(f.name).getOrElse(col(f.name)).as(f.name)
-        }: _*)))
-        .localCheckpoint()
-      // exactness guard (see scaladoc): any new image colliding with a
-      // different matched row's old image forces the COW path.
-      // INTERSECT compares whole rows null-safely and positionally, so
-      // it cannot trip over the self-join attribute reuse an explicit
-      // condition would (unset columns keep their expression ids).
-      // Same-row pairs can't collide: changed rows have new != old.
-      val ni = newImage(changed)
-      val collides = !ni.intersect(changed).isEmpty
-      // ...and the same hazard CROSS-COMMIT: an OUTSTANDING tombstone
-      // from a prior MOR delete/update that null-safe-equals a new
-      // image (on the tombstone's own column set) would anti-join the
-      // fresh append away — probe per tombstone schema group, same
-      // delta-sized INTERSECT. The COW fallback is sound for both:
-      // rewriting the touched partitions folds their tombstones, and
-      // new images can only land in touched partitions (SET cannot
-      // assign partition columns).
-      def tombCollides = m.tombstones.nonEmpty &&
-        tombstoneGroups(spark, root, m.tombstones, m.colMap).exists {
-          case (cols, t) =>
-            !ni.select(cols.map(col): _*).intersect(t).isEmpty
-        }
-      if (collides || tombCollides)
-        return Leased.Cow(() => updateWhere(spark, root, id, cond, set,
-          prune, keep, changeLogKeys = changeLogKeys))
-      // CHECK constraints bind the NEW images exactly as they bind the
-      // COW twin's rewritten rows (commitPartitionsFrom enforces there)
-      // — without this the MOR path would commit an UPDATE the
-      // identical COW UPDATE rejects, breaking both table safety and
-      // the pinned MOR≡COW property. Delta-sized pass over the pinned
-      // `changed` set; the old images need no re-check (they passed
-      // when written and are being REMOVED).
-      enforceChecks(ni, checkConstraints(spark, root),
-        s"MOR update $id at $root")
-      val batchDir = s"$root/$BatchPrefix$id"
-      val tombDir = s"$batchDir/__tomb"
-      writeBatch(ni, batchDir, m.partCols, Nil, colMap = m.colMap)
-      writeBatch(changed, tombDir, m.partCols, Nil, colMap = m.colMap)
-      val effBloomCols = m.files.flatMap(_.blooms.keys).distinct
-        .filter(m.schema.fieldNames.contains)
-      val freshData = collectEntries(spark, batchDir, id, m.schema,
-        m.partCols, effBloomCols, colMap = m.colMap)
-      val freshTombs = collectEntries(spark, tombDir, id, m.schema,
-        m.partCols, colMap = m.colMap)
-        .map(_.copy(kind = KindTombstone))
-      if (freshData.isEmpty && freshTombs.isEmpty)
-        Leased.NoCommit(dropBatch = true) // nothing changed
-      else morAdds(spark, root, id, m, freshTombs ++ freshData,
-        if (changeLogKeys.isEmpty) None
-        else {
-          val dStub = CowManifest(id, m.partCols, m.schemaDdl,
-            freshTombs.map(_.copy(kind = KindData)),
-            m.colMap, m.retiredPhys)
-          val iStub = CowManifest(id, m.partCols, m.schemaDdl,
-            freshData, m.colMap, m.retiredPhys)
-          Some(signedRows(m, dfFor(spark, root, dStub, dStub.files), "D")
-            .unionByName(signedRows(m,
-              dfFor(spark, root, iStub, iStub.files), "I")))
-        })
-    }
-    leasedCommit(spark, root, id, Some(m), Some(m.id), Some(keep))(
-      underLease())
-  }
-
-  /** PREDICATE UPDATE with POSITIONAL deletion vectors — the update
-    * twin of [[deleteWhereDv]], and the strict upgrade over
-    * [[updateWhereMor]]'s full-row old images on BOTH axes:
+  /** PREDICATE UPDATE as MERGE-ON-READ with POSITIONAL deletion
+    * vectors — the update twin of [[deleteWhereDv]]:
     *
     *  - WRITE: the matched-and-changed rows' old images are recorded
     *    as (file, row-position) sidecars — O(changed × ~8 bytes) —
-    *    while their new images append as ordinary data files; the old
-    *    ROW BYTES are never written again whatever the row width.
-    *  - EXACTNESS: the full-row design needed two delta-sized
-    *    collision probes and a COW fallback, because an equality
-    *    tombstone could cancel a fresh append that happened to equal a
-    *    DIFFERENT old row. Positions cannot: they name exact rows of
-    *    OLD files, and appended files carry no mask — so the self-
-    *    collision hazard is structurally gone. The ONE remaining
-    *    hazard is inherited state: an outstanding LEGACY full-row
-    *    tombstone (from a prior [[deleteWhereMor]]/[[deleteKeysMor]])
-    *    still subtracts by equality and could kill a new image equal
-    *    to its key row — that single case keeps the probe + COW
-    *    fallback; a table whose delete debt is positional takes the
-    *    fast path unconditionally.
+    *    while their new images append as ordinary data files in the
+    *    SAME commit; the old ROW BYTES are never written again whatever
+    *    the row width, and no partition is rewritten.
+    *  - EXACTNESS: positions name exact rows of OLD files, and appended
+    *    files carry no mask, so a new image can never cancel itself or
+    *    another row: no collision probe and no COW fallback exist.
     *  - READ: readers compose the position mask (scan-stage filter)
     *    with the appended files; rows the SET leaves bit-identical are
     *    not touched at all (cheaper, and keeps the changelog signal-
-    *    only — positional removal makes the skip an optimization
-    *    rather than a correctness requirement).
+    *    only).
     *
     * Same SET rules as [[updateWhere]] (no partition-column
     * assignments, [[checkedAssignments]]' loud mistype guard); same
@@ -6041,8 +5790,7 @@ object CowTable {
       setOf: DataFrame => Map[String, Column],
       prune: Seq[CowRange] = Nil,
       keep: Int = 2,
-      changeLogKeys: Seq[String] = Nil,
-      setsSubquery: Boolean = false): Boolean = {
+      changeLogKeys: Seq[String] = Nil): Boolean = {
     if (committedIds(spark, root).exists(_ >= id)) return false
     val m = currentManifest(spark, root).getOrElse(
       throw new IllegalStateException(s"no committed snapshot at $root"))
@@ -6055,18 +5803,19 @@ object CowTable {
       s"UPDATE SET must not assign partition column '$p'"))
     Seq("path", "positions").foreach(c => require(!m.partCols.contains(c),
       s"DV update: partition column '$c' collides with the deletion-" +
-        "vector sidecar schema — use updateWhereMor for this table"))
+        "vector sidecar schema — use the copy-on-write updateWhere " +
+        "for this table"))
     def underLease(): Leased = {
       val candidates =
         if (prune.isEmpty) m.files else keptFiles(spark, m, prune)
       if (candidates.isEmpty) return Leased.NoCommit(dropBatch = false)
       val fields = m.schema.fields.toSeq
-      val visible = visibleWithPos(spark, root, m, candidates, prune)
+      val visible = visibleWithPos(spark, root, m, candidates)
       val setChecked = checkedAssignments(visible, m, setOf(visible))
       val matches = visible.where(coalesce(condOf(visible), lit(false)))
       val oldStruct = struct(fields.map(f => col(f.name)): _*)
-      // pinned once: feeds the legacy-tombstone probe, the new-image
-      // write, the DV sidecar, and the changelog D rows
+      // pinned once: feeds the new-image write, the CHECK pass, the DV
+      // sidecar, and the changelog D rows
       val changed = matches
         .where(!(oldStruct <=> struct(fields.map { f =>
           setChecked.get(f.name).getOrElse(col(f.name)).as(f.name)
@@ -6075,18 +5824,8 @@ object CowTable {
       val ni = changed.select(fields.map { f =>
         setChecked.get(f.name).map(_.as(f.name)).getOrElse(col(f.name))
       }: _*)
-      // inherited-state hazard ONLY (see scaladoc): a legacy full-row
-      // tombstone equal to a fresh new image would anti-join it away
-      def tombCollides = m.tombstones.nonEmpty &&
-        tombstoneGroups(spark, root, m.tombstones, m.colMap).exists {
-          case (cols, t) =>
-            !ni.select(cols.map(col): _*).intersect(t).isEmpty
-        }
-      if (tombCollides)
-        return Leased.Cow(() => updateWhereBy(spark, root, id, condOf,
-          setOf, prune, keep, changeLogKeys = changeLogKeys,
-          setsSubquery = setsSubquery))
-      // same enforcement as the COW twin and updateWhereMor
+      // CHECK constraints bind the new images exactly as they bind the
+      // COW twin's rewritten rows; the old images need no re-check
       enforceChecks(ni, checkConstraints(spark, root),
         s"DV update $id at $root")
       val batchDir = s"$root/$BatchPrefix$id"
@@ -6291,40 +6030,13 @@ object CowTable {
       sortCols)
   }
 
-  /** BUCKET-SCOPED SCD-2 RESTATEMENT — [[Merge.scd2Restate]] composed
-    * with the COW table, the composition its scaladoc promises: only
-    * the buckets holding corrected keys decompile + rebuild their
-    * history; every other bucket's files carry over untouched. This is
-    * what makes restatement operable at dimension scale — a correction
-    * batch touching 100 keys costs O(their buckets' history), not a
-    * full-history rewrite.
-    */
-  def restateScd2(
-      spark: SparkSession,
-      root: String,
-      id: Long,
-      corrections: DataFrame,
-      keyCols: Seq[String],
-      partCols: Seq[String],
-      effCol: String,
-      operCol: String = "oper",
-      keep: Int = 2): Boolean = {
-    if (committedIds(spark, root).exists(_ >= id)) return false
-    val m = currentManifest(spark, root).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $root"))
-    val touched = touchedKeys(corrections, partCols)
-    val restated = Merge.scd2Restate(
-      baseFor(spark, root, m, touched), corrections, keyCols, effCol, operCol)
-    commitPartitionsFrom(Some(m), restated, touched, root, id, partCols, keep)
-  }
-
   /** SNAPSHOT HISTORY, metadata-only: one row per retained committed
-    * snapshot — data-file / tombstone-file / deletion-vector counts,
+    * snapshot — data-file and deletion-vector counts,
     * manifest row and byte totals, and the file-level churn vs the
     * previous retained snapshot (files added = paths new in this
     * manifest, removed = paths it dropped). `n_rows` is the DATA
     * files' count sum — exact when the snapshot has no outstanding
-    * delete debt (`tombstone_files == 0 AND dv_files == 0`), an upper
+    * delete debt (`dv_files == 0`), an upper
     * bound otherwise, same caveat as [[countFast]]. Reads only
     * manifests: O(retained snapshots × files), zero data bytes.
     */
@@ -6335,10 +6047,10 @@ object CowTable {
     // isolation: two references in one query list the same commits)
     val ids = committedIds(spark, root)
       .filter(i => upTo.forall(i <= _))
-    val outCols = Seq("snapshot_id", "data_files", "tombstone_files",
-      "dv_files", "n_rows", "bytes", "files_added", "files_removed")
+    val outCols = Seq("snapshot_id", "data_files", "dv_files", "n_rows",
+      "bytes", "files_added", "files_removed")
     if (ids.isEmpty)
-      return Seq.empty[(Long, Long, Long, Long, Long, Long, Long, Long)]
+      return Seq.empty[(Long, Long, Long, Long, Long, Long, Long)]
         .toDF(outCols: _*)
     // MEMO-WARM fast path: when every snapshot in range is already
     // resident, answer from the memo directly — nothing is forced, no
@@ -6352,8 +6064,7 @@ object CowTable {
           val prevPaths = prevOpt.map(_.allFiles.map(_.path).toSet)
             .getOrElse(Set.empty[String])
           val paths = m.allFiles.map(_.path).toSet
-          (m.id, m.files.size.toLong, m.tombstones.size.toLong,
-            m.dvs.size.toLong,
+          (m.id, m.files.size.toLong, m.dvs.size.toLong,
             m.files.map(_.rows).sum, m.files.map(_.bytes).sum,
             (paths -- prevPaths).size.toLong,
             (prevPaths -- paths).size.toLong)
@@ -6380,8 +6091,6 @@ object CowTable {
       all.groupBy("snapshot_id").agg(
         sum(when(col("kind") === KindData, 1L).otherwise(0L))
           .as("data_files"),
-        sum(when(col("kind") === KindTombstone, 1L).otherwise(0L))
-          .as("tombstone_files"),
         sum(when(col("kind") === KindDv, 1L).otherwise(0L))
           .as("dv_files"),
         sum(when(col("kind") === KindData, col("rows")).otherwise(0L))
@@ -6424,93 +6133,27 @@ object CowTable {
   // Merge-on-read deletes
   // -------------------------------------------------------------------
 
-  /** MERGE-ON-READ delete — the write-amplification escape hatch
-    * copy-on-write lacks: deleting k rows from a partition holding
-    * millions costs a k-row TOMBSTONE file, not a partition rewrite
-    * (Delta's deletion vectors / Iceberg's merge-on-read, at key
-    * granularity). Readers subtract tombstones via a broadcast
-    * anti-join ([[resolved]]); the debt retires automatically when the
-    * partition next rewrites (COW folds the resolved base) or
-    * explicitly via [[foldTombstones]].
+  /** KEYED merge-on-read delete — the write-amplification escape
+    * hatch copy-on-write lacks: deleting k rows from a partition
+    * holding millions costs a positional deletion-vector sidecar
+    * (Delta's deletion vectors / Iceberg's positional deletes), not a
+    * partition rewrite. It removes the rows with these keys that exist
+    * NOW: positions name exact rows of current files, so a row
+    * appended later with the same key stays visible — DELETE-statement
+    * semantics.
     *
     * `keys` must carry the merge keys AND the table's `partCols`
-    * (key-derived, as everywhere in this API) — a tombstone names its
-    * partition so reads outside it never pay the anti-join. Tombstone
-    * matching is NULL-SAFE (`<=>`): an explicitly-named NULL-keyed row
-    * is deleted like any other.
-    *
-    * Trade-off, stated plainly: every read between the delete and the
-    * next fold pays a broadcast anti-join against the outstanding
-    * tombstones. That is delete-batch-sized work; fold when
-    * tombstone bytes grow past a few percent of their partitions.
+    * (key-derived, as everywhere in this API): only the partitions the
+    * keys' own `partCols` values name are read — the same key-stable
+    * partitioning contract as [[upsert]]. Matching is null-safe per
+    * key column: an explicitly-named NULL-keyed row is deleted like
+    * any other. Keys that match no visible row commit nothing, leave no
+    * `batch-<id>` and keep the id free. Readers apply the positions as
+    * a scan-stage mask ([[applyDvs]]); the debt retires when the
+    * partition next rewrites or via [[foldTombstones]].
+    * `changeLog = true` emits the matched rows as a pure-D sidecar.
     */
   def deleteKeysMor(
-      spark: SparkSession,
-      root: String,
-      id: Long,
-      keys: DataFrame,
-      keyCols: Seq[String],
-      partCols: Seq[String],
-      keep: Int = 2,
-      changeLog: Boolean = false): Boolean = {
-    if (committedIds(spark, root).exists(_ >= id)) return false
-    val m = currentManifest(spark, root).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $root"))
-    require(m.partCols == partCols,
-      s"partitioning mismatch: table has ${m.partCols}, got $partCols")
-    val cols = (keyCols ++ partCols).distinct
-    cols.foreach(c => require(m.schema.fieldNames.contains(c),
-      s"tombstone column $c is not a table column"))
-    leasedCommit(spark, root, id, Some(m), Some(m.id), Some(keep)) {
-      val tombSchema = StructType(cols.map(c => m.schema(c)))
-      val tombDir = s"$root/$BatchPrefix$id/__tomb"
-      val distinctKeys = keys.select(cols.map(col): _*).distinct()
-      writeBatch(distinctKeys, tombDir, partCols, Nil,
-        colMap = m.colMap)
-      val fresh = collectEntries(spark, tombDir, id, tombSchema, partCols,
-        colMap = m.colMap)
-        .map(_.copy(kind = KindTombstone))
-      morAdds(spark, root, id, m, fresh,
-        if (!changeLog) None
-        else {
-          // the batch's changelog is pure D rows: the CURRENT visible
-          // state of the keys being tombstoned (before-images), read
-          // from only the touched partitions
-          val touched = touchedKeys(keys, partCols)
-          val before = resolved(spark, root, m,
-            m.files.filter(f => touched.contains(m.partKeyOf(f))))
-          Some(signedRows(m, before
-            .join(broadcast(keys.select(keyCols.map(col): _*).distinct()),
-              keyCols, "left_semi"), "D"))
-        })
-    }
-  }
-
-  /** KEYED delete as POSITIONAL deletion vectors — the positional
-    * twin of [[deleteKeysMor]], with a sharper CONTRACT as well as
-    * sharper economics:
-    *
-    *  - [[deleteKeysMor]]'s key tombstone subtracts by EQUALITY
-    *    forever: a row APPENDED LATER with a tombstoned key is
-    *    silently anti-joined away (the legacy-state hazard that keeps
-    *    [[updateWhereDv]]'s COW fallback alive). Positions name exact
-    *    rows of files that exist NOW — this delete means "remove the
-    *    current rows with these keys", and later appends of the same
-    *    key are untouched. That is DELETE-statement semantics;
-    *    reserve key tombstones for "suppress this key" retention
-    *    rules.
-    *  - WRITE: O(matched positions) sidecar bytes (a key tombstone is
-    *    already O(keys), but the read-side anti-join is O(tomb ⋈
-    *    data) per scan; the position mask applies inside the scan).
-    *
-    * Matching is null-safe per key column (a NULL key value matches a
-    * NULL cell, same as the tombstone subtraction it replaces). Only
-    * the partitions the keys' own `partCols` values name are read —
-    * the same key-stable partitioning contract as [[upsert]]. Debt
-    * retires via any COW rewrite of the partition or
-    * [[foldTombstones]].
-    */
-  def deleteKeysDv(
       spark: SparkSession,
       root: String,
       id: Long,
@@ -6529,13 +6172,15 @@ object CowTable {
       s"key column $c is not a table column"))
     Seq("path", "positions").foreach(c => require(!m.partCols.contains(c),
       s"DV delete: partition column '$c' collides with the deletion-" +
-        "vector sidecar schema — use deleteKeysMor for this table"))
+        "vector sidecar schema — use the copy-on-write deleteWhere " +
+        "for this table"))
     def underLease(): Leased = {
       val touched = touchedKeys(keys, partCols)
       val candidates = m.files.filter(f => touched.contains(m.partKeyOf(f)))
       if (candidates.isEmpty) return Leased.NoCommit(dropBatch = false)
-      val visible = visibleWithPos(spark, root, m, candidates, Nil)
-      val k = broadcast(keys.select(keyCols.map(col): _*).distinct())
+      val visible = visibleWithPos(spark, root, m, candidates)
+      // a semi-join ignores duplicate keys, so no distinct() is needed
+      val k = broadcast(keys.select(keyCols.map(col): _*))
       val matched0 = visible.join(k,
         keyCols.map(c => visible(c) <=> k(c)).reduce(_ && _), "left_semi")
       val matched = if (changeLog) matched0.localCheckpoint() else matched0
@@ -6548,84 +6193,17 @@ object CowTable {
       underLease())
   }
 
-  /** PREDICATE MERGE-ON-READ delete — deletion-vector economics for
-    * `DELETE FROM t WHERE cond`: where [[deleteWhere]] REWRITES every
-    * partition holding a match (O(touched partitions) whatever the
-    * match count), this records the MATCHED ROWS THEMSELVES as
-    * full-row TOMBSTONE files — O(matched rows) written, zero data
-    * rewritten — and readers subtract them through the same null-safe
-    * broadcast anti-join as key tombstones ([[resolved]]). The debt
-    * retires when a partition next rewrites or via [[foldTombstones]],
-    * exactly like [[deleteKeysMor]].
-    *
-    * Full-row equality is EXACT for a predicate delete: the predicate
-    * is a function of the row, so any row equal to a matched row is
-    * itself a match — deleting every copy is precisely the DELETE
-    * contract, duplicates included. `cond` must be deterministic (it
-    * is evaluated once, at delete time). `prune` is the same
-    * over-approximating skip hint as [[deleteWhere]]'s.
-    *
-    * Choose by selectivity: a low-selectivity predicate over huge
-    * partitions (a GDPR key sweep, a bad-row purge) wants this; a
-    * delete that empties most of its partitions anyway wants the COW
-    * rewrite, whose steady state is tombstone-free. At 100 TB the
-    * difference is a few MB of tombstones vs rewriting TBs.
-    *
-    * `changeLog = true` emits the sidecar as pure-D rows — the matched
-    * rows ARE the before-images, no diff join needed.
-    */
-  def deleteWhereMor(
-      spark: SparkSession,
-      root: String,
-      id: Long,
-      cond: Column,
-      prune: Seq[CowRange] = Nil,
-      keep: Int = 2,
-      changeLog: Boolean = false): Boolean = {
-    if (committedIds(spark, root).exists(_ >= id)) return false
-    val m = currentManifest(spark, root).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $root"))
-    def underLease(): Leased = {
-      val candidates =
-        if (prune.isEmpty) m.files else keptFiles(spark, m, prune)
-      if (candidates.isEmpty) return Leased.NoCommit(dropBatch = false)
-      val matches = resolved(spark, root, m, candidates, prune).where(cond)
-      val tombDir = s"$root/$BatchPrefix$id/__tomb"
-      writeBatch(matches, tombDir, m.partCols, Nil, colMap = m.colMap)
-      val fresh = collectEntries(spark, tombDir, id, m.schema, m.partCols,
-        colMap = m.colMap)
-        .map(_.copy(kind = KindTombstone))
-      // no row matched: leave no uncommitted batch dir behind, like
-      // deleteWhere's empty case
-      if (fresh.isEmpty) Leased.NoCommit(dropBatch = true)
-      else morAdds(spark, root, id, m, fresh,
-        if (!changeLog) None
-        else {
-          // read the WRITTEN tombstones back rather than re-running the
-          // candidate scan: one pass over O(matched rows), and the
-          // sidecar is bit-identical to what readers will subtract
-          val stub = CowManifest(id, m.partCols, m.schemaDdl,
-            fresh.map(_.copy(kind = KindData)),
-            m.colMap, m.retiredPhys)
-          Some(signedRows(m, dfFor(spark, root, stub, stub.files), "D"))
-        })
-    }
-    leasedCommit(spark, root, id, Some(m), Some(m.id), Some(keep))(
-      underLease())
-  }
-
   private val DvFpCol = "__dv_fp"
   private val DvPosCol = "__dv_pos"
 
   /** The VISIBLE state of `candidates` with each row's file identity
     * and position riding along as `__dv_fp`/`__dv_pos` — the scan's
-    * own `_metadata`, projected BEFORE the tombstone anti-join can
-    * detach it. Prior tombstones and DVs apply first, so a position a
-    * DV writer derives from this frame can never be recorded twice.
+    * own `_metadata`. Prior DVs apply first, so a position a DV writer
+    * derives from this frame can never be recorded twice.
     */
   private def visibleWithPos(
       spark: SparkSession, root: String, m: CowManifest,
-      candidates: Seq[CowFile], prune: Seq[CowRange]): DataFrame = {
+      candidates: Seq[CowFile]): DataFrame = {
     val wanted = candidates.map(m.partKeyOf).toSet
     // explicit logical fields (not `*`): on a mapped table the frame
     // carries a materialized `_metadata` column that must not leak
@@ -6636,14 +6214,8 @@ object CowTable {
       .select(m.schema.fieldNames.toSeq.map(col) ++ Seq(
         col("_metadata.file_path").as(DvFpCol),
         col("_metadata.row_index").as(DvPosCol)): _*)
-    val tombs = m.tombstones.filter(t => wanted.contains(m.partKeyOf(t)))
-      .filter(t => prune.forall(r =>
-        mayMatch(m.schema, t, r.colName, r.lo, r.hi)))
-    val priorDvs = m.dvs.filter(d => wanted.contains(m.partKeyOf(d)))
-    subtractTombstones(spark, root,
-      applyDvs(spark, root, withPos, col(DvFpCol), col(DvPosCol),
-        priorDvs),
-      tombs, m.colMap)
+    applyDvs(spark, root, withPos, col(DvFpCol), col(DvPosCol),
+      m.dvs.filter(d => wanted.contains(m.partKeyOf(d))))
   }
 
   /** Aggregate `matched` (a [[visibleWithPos]] frame, already
@@ -6667,7 +6239,13 @@ object CowTable {
       if (p.startsWith(rootAbs + "/")) p.substring(rootAbs.length + 1)
       else p
     })
-    val dvDf = matched
+    // hash the positions by partition ONCE: the per-file aggregate is
+    // then shuffle-free, and writeBatch's repartition by the same
+    // columns is planned away as already satisfied
+    val byPart =
+      if (m.partCols.isEmpty) matched
+      else matched.repartition(m.partCols.map(col): _*)
+    val dvDf = byPart
       .groupBy(col(DvFpCol) +: m.partCols.map(col): _*)
       .agg(sort_array(collect_list(col(DvPosCol))).as("positions"))
       .select(relativize(col(DvFpCol)).as("path") +: col("positions") +:
@@ -6694,27 +6272,21 @@ object CowTable {
       .map(_.copy(kind = KindDv))
   }
 
-  /** PREDICATE DELETE as POSITIONAL DELETION VECTORS — the third and
-    * cheapest point on the delete spectrum, matching Delta's DV
-    * sidecars and Iceberg's positional delete files:
+  /** PREDICATE DELETE as POSITIONAL DELETION VECTORS — the merge-on-
+    * read point on the delete spectrum, matching Delta's DV sidecars
+    * and Iceberg's positional delete files:
     *
     *  - [[deleteWhere]] (COW): rewrites every partition holding a
     *    match — O(touched partitions) written; steady state clean.
-    *  - [[deleteWhereMor]] (full-row tombstones): O(matched row BYTES)
-    *    written, and every later read pays an O(tombstones ⋈ data)
-    *    null-safe row-equality anti-join.
     *  - THIS: records each matched row as (file, row position) —
     *    O(matched × ~8 bytes) written whatever the row width — and
     *    readers apply the positions as a codegen'd SCAN-STAGE FILTER
-    *    ([[applyDvs]]): no anti-join in the plan at all. On a wide
-    *    table a large low-selectivity delete writes orders of
-    *    magnitude fewer bytes than full-row tombstones and reads back
-    *    with per-row binary-search cost instead of a join.
+    *    ([[applyDvs]]): no anti-join in the plan at all.
     *
     * Positions come from `_metadata.row_index` on the candidate scan
     * (file-absolute, so they compose with any later file pruning or
-    * row-group skipping), taken from the VISIBLE state — prior
-    * tombstones and DVs apply first, so a position can never be
+    * row-group skipping), taken from the VISIBLE state — prior DVs
+    * apply first, so a position can never be
     * recorded twice and re-deleting is a no-op. Semantics are exact
     * positional: only the matched physical rows disappear (duplicates
     * elsewhere keep their own positions — same contract as a
@@ -6723,8 +6295,8 @@ object CowTable {
     * The sidecar lands under `batch-<id>/__dv/` with schema
     * `(path, positions, partition columns…)`, one entry per referenced
     * file, partitioned like the table so reads outside the touched
-    * partitions never load it. The debt retires exactly like
-    * tombstones: any COW rewrite of the partition folds it, or
+    * partitions never load it. The debt retires when any COW rewrite
+    * of the partition folds it, or
     * [[foldTombstones]] explicitly. `cond` must be deterministic;
     * `prune` is the same over-approximating hint as [[deleteWhere]]'s;
     * `changeLog = true` emits the matched rows as a pure-D sidecar.
@@ -6757,12 +6329,13 @@ object CowTable {
     // files — a partition column named like them cannot be represented
     Seq("path", "positions").foreach(c => require(!m.partCols.contains(c),
       s"DV delete: partition column '$c' collides with the deletion-" +
-        "vector sidecar schema — use deleteWhereMor for this table"))
+        "vector sidecar schema — use the copy-on-write deleteWhere " +
+        "for this table"))
     def underLease(): Leased = {
       val candidates =
         if (prune.isEmpty) m.files else keptFiles(spark, m, prune)
       if (candidates.isEmpty) return Leased.NoCommit(dropBatch = false)
-      val visible = visibleWithPos(spark, root, m, candidates, prune)
+      val visible = visibleWithPos(spark, root, m, candidates)
       val matched0 = visible.where(coalesce(condOf(visible), lit(false)))
       // two consumers when a changelog is kept (the DV aggregation and
       // the D-row sidecar) — pin so the candidate scan runs once
@@ -6777,18 +6350,17 @@ object CowTable {
       underLease())
   }
 
-  /** Retire all outstanding tombstones AND positional deletion vectors
-    * by rewriting exactly the partitions that have any: the COW state
-    * afterwards is debt-free and scans stop paying the anti-join and
-    * the scan mask. Returns false (no commit, id unconsumed) when
-    * there is nothing to fold.
+  /** Retire all outstanding positional deletion vectors by rewriting
+    * exactly the partitions that have any: the COW state afterwards is
+    * debt-free and scans stop paying the scan mask. Returns false (no
+    * commit, id unconsumed) when there is nothing to fold.
     */
   def foldTombstones(
       spark: SparkSession, root: String, id: Long, keep: Int = 2,
       changeLogKeys: Seq[String] = Nil): Boolean = {
     if (committedIds(spark, root).exists(_ >= id)) return false
     val m = currentManifest(spark, root).getOrElse(return false)
-    val touched = (m.tombstones ++ m.dvs).map(m.partKeyOf).toSet
+    val touched = m.dvs.map(m.partKeyOf).toSet
     if (touched.isEmpty) return false
     val rewrite = resolved(spark, root, m,
       m.files.filter(f => touched.contains(m.partKeyOf(f))))
@@ -7133,8 +6705,8 @@ object CowTable {
         }
       }.toSet
     // batch dirs: referenced-by-any-retained-manifest is the liveness
-    // rule — tombstone references count (a batch dir may hold only
-    // tombstones). `knownFiles` lets a just-committed writer hand over
+    // rule — DV sidecar references count (a batch dir may hold only
+    // a sidecar). `knownFiles` lets a just-committed writer hand over
     // the manifests it already holds in memory (its own and its base):
     // with the default keep=2 that makes the post-commit vacuum zero
     // manifest reads (each is a Spark parquet job) instead of `keep`.

@@ -24,7 +24,7 @@ import graft.sinks.{CowFile, CowTable}
   * APPEND-ONLY CONTRACT (Delta's rule): an incremental batch is sound
   * only when the commit purely added files. A commit that REMOVED or
   * REWROTE data files (COW update/delete, compaction, Z-order), or
-  * that added tombstone/deletion-vector debt (MOR delete/update),
+  * that added deletion-vector debt (MOR delete/update),
   * changed rows the stream already emitted — serving its added files
   * would double-count and its removals are unrepresentable in an
   * append stream. Such commits FAIL the batch loudly; pass
@@ -35,7 +35,7 @@ import graft.sinks.{CowFile, CowTable}
   *
   * GENESIS: the snapshot served first is the head at stream start, or
   * `option("startingSnapshot", id)`. It must carry no outstanding
-  * tombstone/DV debt (raw file serving would resurrect deleted rows)
+  * deletion-vector debt (raw file serving would resurrect deleted rows)
   * — `OPTIMIZE` folds the debt first; increments then stay clean by
   * the append-only contract. Files are SELF-CONTAINED (partition
   * columns live in the files, not only the directory names), so the
@@ -158,7 +158,7 @@ final class CowTableStream(spark: SparkSession, root: String,
     committed.filter(i => i > lo && i <= hi).flatMap { id =>
       if (snapshotId.contains(id)) {
         val m = CowTable.manifest(spark, root, id)
-        require(m.tombstones.isEmpty && m.dvs.isEmpty,
+        require(m.dvs.isEmpty,
           s"table stream at $root: snapshot $id carries outstanding " +
             "merge-on-read delete debt — raw file serving would " +
             "resurrect deleted rows; run OPTIMIZE to fold it, then " +
@@ -174,8 +174,8 @@ final class CowTableStream(spark: SparkSession, root: String,
         val prevPaths = prev.files.map(_.path).toSet
         val added = m.files.filterNot(f => prevPaths.contains(f.path))
         val removed = prevPaths -- m.files.map(_.path)
-        val debtAdded = (m.tombstones ++ m.dvs).map(_.path).toSet --
-          (prev.tombstones ++ prev.dvs).map(_.path).toSet
+        val debtAdded =
+          m.dvs.map(_.path).toSet -- prev.dvs.map(_.path).toSet
         if (removed.nonEmpty || debtAdded.nonEmpty) {
           if (skipChangeCommits) Nil
           else throw new IllegalStateException(

@@ -371,124 +371,6 @@ object StreamOps {
       cdcBatch(batch, id, targetPath, keyCols, operCol, versionCol)
     }
 
-  // -------------------------------------------------------------------
-  // COPY-ON-WRITE streaming sinks — the [[graft.sinks.CowTable]]
-  // versions of the snapshot sinks above. Same exactly-once contract
-  // (CowTable's commit carries its own replay guard on the monotonic
-  // micro-batch id), different cost shape: a micro-batch rewrites only
-  // the PARTITIONS its keys touch instead of the whole table, so
-  // steady-state streaming merge cost is O(batch + touched buckets)
-  // per micro-batch — the property that makes a streamed 100 TB
-  // dimension sustainable. Partition columns must be key-derived
-  // (CowTable.keyBucket) per the contracts on CowTable.upsert /
-  // applyScd2Cdc; crash-replay + no-rewrite-of-untouched-partitions
-  // proven in `StreamingUpsertSpec`.
-  // -------------------------------------------------------------------
-
-  /** Streaming SCD-1 upsert into a COW table — [[upsertSink]] at
-    * partition-granular write cost.
-    */
-  def cowUpsertSink(
-      updates: DataFrame,
-      targetRoot: String,
-      keyCols: Seq[String],
-      partCols: Seq[String],
-      checkpoint: String,
-      versionCol: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery =
-    foreachBatchSink(updates, checkpoint) { (batch, id) =>
-      if (!batch.isEmpty) // idle trigger: don't burn a commit id
-        graft.sinks.CowTable.upsert(batch.sparkSession, targetRoot, id,
-          batch, keyCols, partCols, versionCol)
-    }
-
-  /** One micro-batch of STREAMING NEAR-DUP DETECTION against a
-    * persisted, growing minhash index — the streaming face of
-    * [[graft.operators.Dedup.minhashIncrementalPairs]]: probe the
-    * batch against the corpus-so-far's signature index (and itself),
-    * emit verified pairs, then append the batch's own signatures and
-    * text to the stores. Per-micro-batch cost is O(batch +
-    * candidates) however large the corpus has grown — the property
-    * that makes streaming dedup of an ever-growing 100 TB corpus
-    * sustainable (the corpus text is only read for colliding
-    * candidates, via the verify stage's semi-join).
-    *
-    * Exactly-once WITHOUT a commit log: every append lands in its own
-    * `batch=<id>` directory in overwrite mode, so a crash-replay
-    * rewrites the same directories with the same deterministic
-    * content. Replay is idempotent even mid-batch: if the crashed
-    * attempt already appended this batch's signatures, re-probing
-    * against index ∪ batch changes nothing — self-pairs are excluded
-    * by id inequality and candidate duplicates collapse in the
-    * distinct — so the rewritten pairs directory is byte-equal.
-    *
-    * Layout under `root/`: `index/batch=<id>/` (id, band, bucket),
-    * `corpus/batch=<id>/` (id, text), `pairs/batch=<id>/`
-    * (id_a, id_b, jaccard).
-    */
-  def nearDupBatch(
-      batch: DataFrame,
-      batchId: Long,
-      root: String,
-      idCol: String,
-      textCol: String,
-      shingleSize: Int = 8,
-      numHashes: Int = 16,
-      bands: Int = 4,
-      threshold: Double = 0.5): Unit = {
-    import graft.operators.Dedup
-    val spark = batch.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    def readAll(path: String, empty: => DataFrame): DataFrame =
-      if (fs.exists(new org.apache.hadoop.fs.Path(path)))
-        try spark.read.parquet(path)
-        catch {
-          // a crashed FIRST batch leaves the dir holding only
-          // _temporary — no footers to infer from. Treat as empty so
-          // the replay overwrites it instead of wedging every restart
-          case e: org.apache.spark.sql.AnalysisException
-              if Option(e.getMessage).exists(_.toLowerCase(
-                java.util.Locale.ROOT).contains("unable to infer")) =>
-            empty
-        }
-      else empty
-    val docs = batch.select(col(idCol), col(textCol))
-    val index = readAll(s"$root/index",
-      Dedup.minhashIndex(docs.limit(0), idCol, textCol,
-        shingleSize, numHashes, bands))
-      .select(col(idCol), col("band"), col("bucket"))
-    val corpus = readAll(s"$root/corpus", docs.limit(0))
-      .select(col(idCol), col(textCol))
-    // exclude this batch's own (replayed) rows from the corpus side —
-    // they would otherwise verify as exact self-duplicates
-    val priorCorpus = corpus.join(docs.select(col(idCol)),
-      Seq(idCol), "left_anti")
-    val priorIndex = index.join(docs.select(col(idCol)),
-      Seq(idCol), "left_anti")
-    Dedup.minhashIncrementalPairs(priorCorpus, priorIndex, docs,
-      idCol, textCol, shingleSize, numHashes, bands, threshold)
-      .write.mode("overwrite").parquet(s"$root/pairs/batch=$batchId")
-    Dedup.minhashIndex(docs, idCol, textCol, shingleSize, numHashes, bands)
-      .write.mode("overwrite").parquet(s"$root/index/batch=$batchId")
-    docs.write.mode("overwrite").parquet(s"$root/corpus/batch=$batchId")
-  }
-
-  /** Streaming near-dup sink — see [[nearDupBatch]]. */
-  def nearDupSink(
-      docs: DataFrame,
-      root: String,
-      idCol: String,
-      textCol: String,
-      checkpoint: String,
-      shingleSize: Int = 8,
-      numHashes: Int = 16,
-      bands: Int = 4,
-      threshold: Double = 0.5): org.apache.spark.sql.streaming.StreamingQuery =
-    foreachBatchSink(docs, checkpoint) { (batch, id) =>
-      nearDupBatch(batch, id, root, idCol, textCol,
-        shingleSize, numHashes, bands, threshold)
-    }
-
   /** Streaming raw-layer ingest: file-source stream → trim → parquet
     * sink with checkpointed exactly-once progress (the readStream
     * version of the reference's raw job).

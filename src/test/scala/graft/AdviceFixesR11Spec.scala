@@ -26,7 +26,7 @@ class AdviceFixesR11Spec extends SparkSpec {
   private def fs(root: String) =
     new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
 
-  test("updateWhereMor's fast path enforces CHECK constraints exactly " +
+  test("the merge-on-read update enforces CHECK constraints exactly " +
       "like its COW twin (MOR ≡ COW under constraints)") {
     val root = tmp("mor_chk")
     CowTable.commitFull(
@@ -45,7 +45,7 @@ class AdviceFixesR11Spec extends SparkSpec {
     }
     assert(eCow.getMessage.contains("qty_nonneg"))
     val eMor = intercept[CowConstraintException] {
-      CowTable.updateWhereMor(spark, root, 2L,
+      CowTable.updateWhereDv(spark, root, 2L,
         $"id" < 3, Map("qty" -> lit(-1L)), keep = 10)
     }
     assert(eMor.getMessage.contains("qty_nonneg"),
@@ -54,12 +54,12 @@ class AdviceFixesR11Spec extends SparkSpec {
       "a rejected MOR update must commit nothing")
     assert(CowTable.read(spark, root).get.orderBy("id").collect().toSeq
       == before, "table changed despite the rejected updates")
-    // and a CONFORMING MOR update still commits through the fast path
-    CowTable.updateWhereMor(spark, root, 2L,
+    // and a CONFORMING MOR update still commits as deletion vectors
+    CowTable.updateWhereDv(spark, root, 2L,
       $"id" < 3, Map("qty" -> lit(7L)), keep = 10)
     assert(CowTable.read(spark, root).get.where($"qty" === 7L).count() == 3)
-    assert(CowTable.currentManifest(spark, root).get.tombstones.nonEmpty,
-      "the conforming update should have used the MOR fast path")
+    assert(CowTable.currentManifest(spark, root).get.dvs.nonEmpty,
+      "the conforming update should have written deletion vectors")
   }
 
   test("the cow source's snapshot option never serves an orphan " +
@@ -150,7 +150,7 @@ class AdviceFixesR11Spec extends SparkSpec {
     }
     assert(eStatic.getMessage.contains("cannot be assigned"))
     val eStaticMor = intercept[IllegalArgumentException] {
-      CowTable.updateWhereMor(spark, root, 2L, $"id" < 3,
+      CowTable.updateWhereDv(spark, root, 2L, $"id" < 3,
         Map("amt" -> lit("oops")), keep = 10)
     }
     assert(eStaticMor.getMessage.contains("cannot be assigned"))

@@ -228,8 +228,8 @@ class ColumnMappingSpec extends SparkSpec {
     assert(CowTable.deleteWhereDv(spark, root, head + 1, col("w") < 5))
     assert(CowTable.currentManifest(spark, root).get.dvs.nonEmpty)
     assert(spark.table(s"cow.$ns.t").count() == 25L)
-    // MOR update: tombstone + append, both through the mapping
-    assert(CowTable.updateWhereMor(spark, root, head + 2,
+    // MOR update: DV mask + append, both through the mapping
+    assert(CowTable.updateWhereDv(spark, root, head + 2,
       col("w") === 10, Map("w" -> lit(1000L))))
     val t = spark.table(s"cow.$ns.t")
     assert(t.where($"w" === 1000L).count() == 1L)

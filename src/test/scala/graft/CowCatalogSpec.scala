@@ -154,8 +154,8 @@ class CowCatalogSpec extends SparkSpec {
     assert(sql(s"SELECT count(*) FROM cow.`$root`").head().getLong(0) == 150)
   }
 
-  test("a named read of a table with outstanding MOR debt (positional " +
-      "DVs + tombstones) serves the masked state") {
+  test("a named read of a table with outstanding MOR debt (predicate " +
+      "and keyed deletion vectors) serves the masked state") {
     sql(s"CREATE TABLE cow.$ns.t4 (id BIGINT, p STRING) PARTITIONED BY (p)")
     sql(s"INSERT INTO cow.$ns.t4 SELECT id, concat('p', id % 2) " +
       "FROM range(100)")

@@ -126,7 +126,7 @@ class CowSqlParserSpec extends SparkSpec {
     sql(s"OPTIMIZE cow.$ns.o")
     val after = CowTable.currentManifest(spark, root("o")).get
     assert(after.id == before.id + 1, "plain OPTIMIZE must commit head+1")
-    assert(after.dvs.isEmpty && after.tombstones.isEmpty,
+    assert(after.dvs.isEmpty,
       "OPTIMIZE must fold outstanding delete debt")
     assert(after.files.size < before.files.size,
       s"small-file count must drop (${before.files.size} -> " +

@@ -87,7 +87,7 @@ class CowSqlSpec extends SparkSpec {
       s"UPDATE cow.`$root` SET name = concat('U-', id) WHERE score < 2",
       mode = CowSql.Mor)
     val m = CowTable.currentManifest(spark, root).get
-    assert(m.dvs.nonEmpty && m.tombstones.isEmpty &&
+    assert(m.dvs.nonEmpty &&
       m.files.exists(_.path.startsWith("batch-2/")) &&
       m.files.count(_.path.startsWith("batch-1/")) ==
         CowTable.manifest(spark, root, 1L).files.size,

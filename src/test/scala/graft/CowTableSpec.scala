@@ -449,7 +449,7 @@ class CowTableSpec extends SparkSpec {
     assert(CowTable.minMaxFast(spark, root, "v").contains(("0.0", "9.0")))
     assert(CowTable.minMaxFast(spark, root, "nope").isEmpty)
 
-    // outstanding tombstones make both unsound → both refuse
+    // outstanding deletion vectors make both unsound → both refuse
     CowTable.deleteKeysMor(spark, root, 2L,
       Seq(999L).toDF("id"), Seq("id"), Nil)
     assert(CowTable.countFast(spark, root).isEmpty)
@@ -501,8 +501,9 @@ class CowTableSpec extends SparkSpec {
     assert(CowTable.read(spark, root).get.count() == 5)
   }
 
-  test("merge-on-read delete: a tombstone hides rows WITHOUT rewriting " +
-      "any data file; reads, skipping reads and lookups all subtract it; " +
+  test("merge-on-read delete: a deletion vector hides rows WITHOUT " +
+      "rewriting any data file; reads, skipping reads and lookups all " +
+      "apply it; " +
       "time travel still sees the pre-delete state") {
     val root = tmp()
     CowTable.commitFull(base3, root, 1L, Seq("part"), keep = 10)
@@ -511,18 +512,18 @@ class CowTableSpec extends SparkSpec {
     CowTable.deleteKeysMor(spark, root, 2L,
       Seq((2L, "p1"), (3L, "p2")).toDF("id", "part"),
       Seq("id"), Seq("part"), keep = 10)
-    // every data file untouched — the delete wrote only a tombstone
+    // every data file untouched — the delete wrote only a DV sidecar
     val after = dataFileState(root)
     before.foreach { case (p, t) =>
       assert(after.get(p).contains(t), s"data file rewritten by MOR: $p")
     }
     val m = CowTable.currentManifest(spark, root).get
-    assert(m.tombstones.nonEmpty &&
+    assert(m.dvs.nonEmpty &&
       m.files.size == before.count(_._1.contains("/batch-1/")))
 
     assert(CowTable.read(spark, root).get.orderBy("id")
       .select("id").as[Long].collect().toSeq == Seq(1L, 4L, 5L))
-    // skipping read within a tombstoned partition subtracts too
+    // skipping read within a masked partition applies the mask too
     assert(CowTable.readWhereBetween(spark, root, "id",
       Some("2"), Some("3")).count() == 0)
     // keyed lookup of a deleted key finds nothing
@@ -533,20 +534,20 @@ class CowTableSpec extends SparkSpec {
     assert(CowTable.readAt(spark, root, 1L).get.count() == 5)
   }
 
-  test("tombstones retire when their partition rewrites (upsert folds " +
-      "the resolved base) and foldTombstones clears the rest") {
+  test("deletion vectors retire when their partition rewrites (upsert " +
+      "folds the resolved base) and foldTombstones clears the rest") {
     val root = tmp()
     CowTable.commitFull(base3, root, 1L, Seq("part"))
     CowTable.deleteKeysMor(spark, root, 2L,
       Seq((1L, "p1"), (3L, "p2")).toDF("id", "part"),
       Seq("id"), Seq("part"))
 
-    // upsert touching p1 folds p1's tombstone; p2's remains
+    // upsert touching p1 folds p1's vector; p2's remains
     CowTable.upsert(spark, root, 3L,
       Seq((6L, "p1", "f", 60.0)).toDF("id", "part", "name", "score"),
       Seq("id"), Seq("part"))
     val m1 = CowTable.currentManifest(spark, root).get
-    assert(m1.tombstones.map(_.part("part")).toSet == Set("p2"))
+    assert(m1.dvs.map(_.part("part")).toSet == Set("p2"))
     // deleted id=1 must NOT resurrect through the rewrite
     assert(CowTable.read(spark, root).get.where($"id" === 1L).count() == 0)
 
@@ -556,56 +557,16 @@ class CowTableSpec extends SparkSpec {
       .orderBy("id").collect().toSeq
     assert(CowTable.foldTombstones(spark, root, 4L))
     val m2 = CowTable.currentManifest(spark, root).get
-    assert(m2.tombstones.isEmpty)
+    assert(m2.dvs.isEmpty)
     assert(CowTable.read(spark, root).get.orderBy("id").collect().toSeq
       == want)
     p3files.foreach { case (p, t) =>
       assert(dataFileState(root).get(p).contains(t),
-        s"fold rewrote a tombstone-free partition: $p")
+        s"fold rewrote a debt-free partition: $p")
     }
     // nothing left to fold → no-op, id unconsumed
     assert(!CowTable.foldTombstones(spark, root, 5L))
     assert(CowTable.committedIds(spark, root).last == 4L)
-  }
-
-  test("bucket-scoped SCD-2 restatement: a late correction rebuilds " +
-      "ONLY its key's bucket; other buckets' history files untouched; " +
-      "metadata count answers without reading data") {
-    val root = tmp()
-    val bucket = CowTable.keyBucket(Seq("id"), 4)
-    def ch(rs: (Long, String, Long, String)*) =
-      rs.toDF("id", "v", "eff", "oper").withColumn("pb", bucket)
-    CowTable.applyScd2Cdc(spark, root, 1L,
-      ch((1L to 8L).map(k => (k, s"v$k", 100L, "I")): _*),
-      Seq("id"), Seq("pb"), "eff")
-    CowTable.applyScd2Cdc(spark, root, 2L,
-      ch((3L, "", 200L, "D")), Seq("id"), Seq("pb"), "eff")
-    val before = dataFileState(root)
-
-    // late correction at 150 — behind key 3's closed frontier (200)
-    CowTable.restateScd2(spark, root, 3L,
-      ch((3L, "v3-late", 150L, "U")), Seq("id"), Seq("pb"), "eff")
-    val touchedBucket = ch((3L, "x", 0L, "I"))
-      .select($"pb".cast("string")).first().getString(0)
-    val untouched = before.filterNot(_._1.contains(s"__gp_pb=$touchedBucket"))
-      .filter(_._1.contains("/batch-"))
-    assert(untouched.nonEmpty)
-    untouched.foreach { case (p, t) =>
-      assert(dataFileState(root).get(p).contains(t),
-        s"restatement rewrote an unaffected bucket: $p")
-    }
-    val h3 = CowTable.read(spark, root).get.where($"id" === 3L)
-      .orderBy("effective_from")
-      .select("v", "effective_from", "effective_to")
-      .as[(String, Long, Option[Long])].collect().toSeq
-    assert(h3 == Seq(("v3", 100L, Some(150L)),
-      ("v3-late", 150L, Some(200L))))
-    // untouched keys' history intact
-    assert(CowTable.read(spark, root).get
-      .where($"id" === 5L).count() == 1)
-    // metadata-only count == actual count (no tombstones outstanding)
-    assert(CowTable.countFast(spark, root)
-      .contains(CowTable.read(spark, root).get.count()))
   }
 
   test("multi-column skipping on a z-ordered layout: the range " +
@@ -681,31 +642,6 @@ class CowTableSpec extends SparkSpec {
       Seq((2L, 0, 1.0)).toDF("id", "pb", "v"), Seq("id"), Seq("pb"))
     assert(!fs.exists(new Path(s"$root/_commit-1.lock")),
       "dead lease not vacuumed")
-  }
-
-  test("skipping reads prune TOMBSTONE files by envelope: a point " +
-      "lookup outside the tombstoned key range pays no anti-join; " +
-      "inside it, the subtraction still applies") {
-    val root = tmp()
-    val df = spark.range(0, 4000)
-      .select($"id", ($"id" % 13).cast("double").as("v"))
-      .repartitionByRange(4, $"id")
-    CowTable.commitFull(df, root, 1L, Nil, sortCols = Seq("id"))
-    CowTable.deleteKeysMor(spark, root, 2L,
-      spark.range(0, 11).select($"id"), Seq("id"), Nil)
-
-    def plan(lo: String, hi: String) =
-      CowTable.readWhereBetween(spark, root, "id", Some(lo), Some(hi))
-        .queryExecution.executedPlan.toString
-    // outside [0,10]: every tombstone file's envelope misses → no anti-join
-    assert(!plan("3000", "3000").contains("LeftAnti"),
-      "tombstone files must be pruned from an out-of-range lookup")
-    assert(plan("5", "5").contains("LeftAnti"))
-    assert(CowTable.readWhereBetween(spark, root, "id",
-      Some("3000"), Some("3000")).select("id").as[Long].collect().toSeq
-      == Seq(3000L))
-    assert(CowTable.readWhereBetween(spark, root, "id",
-      Some("5"), Some("5")).count() == 0)
   }
 
   test("SAFE widening commits (int->long: old files upcast on read); " +
@@ -885,7 +821,7 @@ class CowTableSpec extends SparkSpec {
     val n2 = CowTable.currentManifest(spark, root2).get.files.size
     assert(n2 >= 2, s"large partition must split, got $n2 file(s)")
     assert(CowTable.read(spark, root2).get.count() == 4000)
-    // compaction folds outstanding tombstones as a side effect
+    // compaction folds outstanding deletion vectors as a side effect
     val root3 = tmp()
     CowTable.commitFull(base3, root3, 1L, Seq("part"), keep = 10)
     CowTable.deleteKeysMor(spark, root3, 2L,
@@ -893,7 +829,7 @@ class CowTableSpec extends SparkSpec {
       keep = 10)
     assert(CowTable.compactPartitions(spark, root3, 3L))
     val m3 = CowTable.currentManifest(spark, root3).get
-    assert(m3.tombstones.isEmpty)
+    assert(m3.dvs.isEmpty)
     assert(CowTable.read(spark, root3).get.count() == 4)
   }
 
@@ -1190,14 +1126,14 @@ class CowTableSpec extends SparkSpec {
     assert(CowTable.minMaxFast(spark, root, "name").isEmpty)
     // unknown column refused
     assert(CowTable.minMaxFast(spark, root, "nope").isEmpty)
-    // outstanding MOR tombstones poison both (the data files still
+    // outstanding deletion vectors poison both (the data files still
     // carry the deleted rows)
     CowTable.deleteKeysMor(spark, root, 3L,
       spark.range(1150, 1201).select($"id",
         CowTable.keyBucket(Seq("id"), 4).as("pb")),
       Seq("id"), Seq("pb"), keep = 10)
     assert(CowTable.countFast(spark, root).isEmpty,
-      "countFast must refuse under outstanding tombstones")
+      "countFast must refuse under outstanding deletion vectors")
     assert(CowTable.minMaxFast(spark, root, "id").isEmpty)
     // folding restores exactness with the post-delete values
     assert(CowTable.foldTombstones(spark, root, 4L, keep = 10))
@@ -1406,7 +1342,7 @@ class CowTableSpec extends SparkSpec {
     assert(CowTable.optimizeZorder(spark, root, 3L, Seq("x", "y"),
       targetFileBytes = 2 * 1024))
     val m = CowTable.currentManifest(spark, root).get
-    assert(m.tombstones.isEmpty, "optimize must fold MOR tombstones")
+    assert(m.dvs.isEmpty, "optimize must fold MOR deletion vectors")
     assert(m.files.size > 4, s"premise: multiple z-files (${m.files.size})")
     assert(CowTable.read(spark, root).get.collect().toSet == before,
       "optimize must not change table content")
@@ -1422,14 +1358,14 @@ class CowTableSpec extends SparkSpec {
   }
 
   test("fileStats serves the files metadata table from the manifest: " +
-      "per-file stats triad visible, tombstones flagged, no data read") {
+      "per-file stats triad visible, DV sidecars flagged, no data read") {
     val root = tmp()
     CowTable.commitFull(base3, root, 1L, Seq("part"),
       bloomCols = Seq("name"))
     CowTable.deleteKeysMor(spark, root, 2L,
       Seq((1L, "p1")).toDF("id", "part"), Seq("id"), Seq("part"))
     val fsRows = CowTable.fileStats(spark, root).collect()
-    assert(fsRows.count(_.getAs[String]("kind") == "tombstone") == 1)
+    assert(fsRows.count(_.getAs[String]("kind") == "dv") == 1)
     val p1 = fsRows.find(r => r.getAs[String]("kind") == "data" &&
       r.getAs[String]("partition").contains("p1")).get
     assert(p1.getAs[Long]("n_rows") == 2L)

@@ -64,7 +64,7 @@ class CowV2Spec extends SparkSpec {
     assert(v2.columns.toSeq == v1.columns.toSeq,
       "planner path must preserve the manifest column order")
     assert(!v2.select("id").collect().map(_.getLong(0)).contains(5L),
-      "MOR tombstone row leaked through the v2 path")
+      "MOR-deleted row leaked through the v2 path")
 
     // delta-chain retention keeps id=1 alive under keep=2 (the head's
     // chain resolves through it) — it stays SERVABLE until a

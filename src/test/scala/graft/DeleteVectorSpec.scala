@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 
 import graft.sinks.{CowRange, CowTable, CowV2}
 
-/** [[graft.sinks.CowTable.deleteWhereMor]] — deletion-vector-style
-  * predicate deletes: matched rows become full-row tombstones instead
-  * of partition rewrites; readers subtract them null-safely.
+/** [[graft.sinks.CowTable.deleteWhereDv]] — merge-on-read predicate
+  * deletes: matched rows become positional deletion vectors instead of
+  * partition rewrites; readers mask them inside the scan.
   */
 class DeleteVectorSpec extends SparkSpec {
   import spark.implicits._
@@ -21,36 +21,35 @@ class DeleteVectorSpec extends SparkSpec {
       concat(lit("row-"), $"id").as("name"),
       ($"id" * 7 % 1000).as("score"))
 
-  test("deleteWhereMor equals deleteWhere's result while writing " +
-      "tombstones instead of rewriting partitions") {
+  test("deleteWhereDv equals deleteWhere's result while writing " +
+      "deletion vectors instead of rewriting partitions") {
     val cow = tmp("cow"); val mor = tmp("mor")
     CowTable.commitFull(base, cow, 1L, Seq("part"), keep = 10)
     CowTable.commitFull(base, mor, 1L, Seq("part"), keep = 10)
     val cond = $"score" < 50 // scattered across every partition
     CowTable.deleteWhere(spark, cow, 2L, cond, keep = 10)
-    CowTable.deleteWhereMor(spark, mor, 2L, cond, keep = 10)
+    CowTable.deleteWhereDv(spark, mor, 2L, cond, keep = 10)
     val a = CowTable.read(spark, cow).get.collect().toSet
     val b = CowTable.read(spark, mor).get.collect().toSet
     assert(a == b, "MOR predicate delete diverged from the COW rewrite")
     val mm = CowTable.currentManifest(spark, mor).get
-    assert(mm.tombstones.nonEmpty, "no tombstones written")
+    assert(mm.dvs.nonEmpty, "no deletion vectors written")
     // every data file of the base commit carried over by REFERENCE
     assert(mm.files.forall(_.path.startsWith("batch-1/")),
       "MOR delete rewrote data files")
-    // the economics: tombstone bytes well under the rewrite the COW
+    // the economics: sidecar bytes well under the rewrite the COW
     // path paid (which rewrote all four partitions for this predicate)
     val cowM = CowTable.currentManifest(spark, cow).get
     val rewritten = cowM.files.filter(_.path.startsWith("batch-2/"))
       .map(_.bytes).sum
-    val tomb = mm.tombstones.map(_.bytes).sum
-    assert(tomb < rewritten,
-      s"tombstones ($tomb B) not cheaper than the rewrite ($rewritten B)")
-    // and the planner path subtracts them identically
+    val dv = mm.dvs.map(_.bytes).sum
+    assert(dv < rewritten,
+      s"sidecars ($dv B) not cheaper than the rewrite ($rewritten B)")
+    // and the planner path masks them identically
     assert(CowV2.read(spark, mor).get.collect().toSet == a)
   }
 
-  test("full-row tombstones delete rows with NULL data columns " +
-      "(null-safe anti-join)") {
+  test("a predicate DV delete removes rows with NULL data columns") {
     val root = tmp("nulls")
     val rows = Seq(
       (1L, 0L, Some("keep"), 10L),
@@ -58,7 +57,7 @@ class DeleteVectorSpec extends SparkSpec {
       (3L, 1L, Some("keep2"), 11L))
       .toDF("id", "part", "name", "score")
     CowTable.commitFull(rows, root, 1L, Seq("part"), keep = 10)
-    CowTable.deleteWhereMor(spark, root, 2L, $"score" === 999L, keep = 10)
+    CowTable.deleteWhereDv(spark, root, 2L, $"score" === 999L, keep = 10)
     val got = CowTable.read(spark, root).get
       .select("id").as[Long].collect().sorted.toSeq
     assert(got == Seq(1L, 3L),
@@ -71,7 +70,7 @@ class DeleteVectorSpec extends SparkSpec {
     val rows = Seq((1L, 0L, "dup", 999L), (1L, 0L, "dup", 999L),
       (2L, 0L, "other", 5L)).toDF("id", "part", "name", "score")
     CowTable.commitFull(rows, root, 1L, Seq("part"), keep = 10)
-    CowTable.deleteWhereMor(spark, root, 2L, $"score" === 999L, keep = 10)
+    CowTable.deleteWhereDv(spark, root, 2L, $"score" === 999L, keep = 10)
     assert(CowTable.read(spark, root).get.count() == 1)
   }
 
@@ -81,39 +80,68 @@ class DeleteVectorSpec extends SparkSpec {
     // range-clustered so the prune hint can drop files
     CowTable.commitFull(base.repartitionByRange(8, $"id"), root, 1L, Nil,
       sortCols = Seq("id"), keep = 10)
-    CowTable.deleteWhereMor(spark, root, 2L, $"id" >= 1900L,
+    CowTable.deleteWhereDv(spark, root, 2L, $"id" >= 1900L,
       prune = Seq(CowRange("id", Some("1900"), None)), keep = 10)
     val before = CowTable.read(spark, root).get.collect().toSet
     assert(before.size == 1900)
     assert(CowTable.foldTombstones(spark, root, 3L, keep = 10))
     val m = CowTable.currentManifest(spark, root).get
-    assert(m.tombstones.isEmpty, "fold left tombstones outstanding")
+    assert(m.dvs.isEmpty, "fold left deletion vectors outstanding")
     assert(CowTable.read(spark, root).get.collect().toSet == before,
       "fold changed visible content")
   }
 
-  test("key tombstones and full-row tombstones COEXIST on one table " +
-      "without cross-contaminating the anti-join") {
+  test("keyed and predicate DV deletes compose on one table, on the " +
+      "direct and the planner read") {
     val root = tmp("mixed")
     val rows = spark.range(100).select($"id", ($"id" % 2).as("part"),
       concat(lit("n"), $"id").as("name"), ($"id" % 10).as("score"))
     CowTable.commitFull(rows, root, 1L, Seq("part"), keep = 10)
-    // key-shaped tombstones: (id, part) only
+    // a keyed delete: (id, part) only
     CowTable.deleteKeysMor(spark, root, 2L,
       spark.range(5).select($"id", ($"id" % 2).as("part")),
       Seq("id"), Seq("part"), keep = 10)
-    // full-row tombstones from a predicate delete
-    CowTable.deleteWhereMor(spark, root, 3L, $"score" === 7L, keep = 10)
+    // then a predicate delete over the already-masked state
+    CowTable.deleteWhereDv(spark, root, 3L, $"score" === 7L, keep = 10)
     val want = (0L until 100L)
       .filterNot(_ < 5L).filterNot(_ % 10 == 7L).toSeq
     val got = CowTable.read(spark, root).get
       .select("id").as[Long].collect().sorted.toSeq
     assert(got == want,
-      "mixed tombstone shapes corrupted the subtraction (direct read)")
+      "composed deletes diverged (direct read)")
     val v2 = CowV2.read(spark, root).get
       .select("id").as[Long].collect().sorted.toSeq
     assert(v2 == want,
-      "mixed tombstone shapes corrupted the subtraction (planner read)")
+      "composed deletes diverged (planner read)")
+  }
+
+  test("DROP COLUMN with outstanding DV debt reads exactly like the COW " +
+      "delete then drop, before and after a fold") {
+    val cow = tmp("dropcow"); val mor = tmp("dropmor")
+    CowTable.commitFull(base, cow, 1L, Seq("part"), keep = 10)
+    CowTable.commitFull(base, mor, 1L, Seq("part"), keep = 10)
+    CowTable.deleteWhere(spark, cow, 2L,
+      $"score" < 50 || $"id".isin(7L, 11L), keep = 10)
+    assert(CowTable.deleteWhereDv(spark, mor, 2L, $"score" < 50, keep = 10))
+    assert(CowTable.deleteKeysMor(spark, mor, 3L,
+      Seq((7L, 3L), (11L, 3L)).toDF("id", "part"), Seq("id"), Seq("part"),
+      keep = 10))
+    assert(CowTable.dropColumn(spark, cow, 3L, "name", keep = 10))
+    assert(CowTable.dropColumn(spark, mor, 4L, "name", keep = 10))
+    val mm = CowTable.currentManifest(spark, mor).get
+    assert(mm.dvs.nonEmpty && !mm.schema.fieldNames.contains("name"),
+      "the drop must commit over the outstanding vectors")
+    def rows(root: String) = CowTable.read(spark, root).get
+      .select("id", "part", "score").as[(Long, Long, Long)]
+      .collect().sorted.toSeq
+    val want = rows(cow)
+    assert(want.size == 2000 - base.where($"score" < 50 ||
+      $"id".isin(7L, 11L)).count())
+    assert(rows(mor) == want, "DV-masked read diverged after DROP COLUMN")
+    assert(CowV2.read(spark, mor).get.select("id", "part", "score")
+      .as[(Long, Long, Long)].collect().sorted.toSeq == want)
+    assert(CowTable.foldTombstones(spark, mor, 5L, keep = 10))
+    assert(rows(mor) == want, "fold after DROP COLUMN changed the rows")
   }
 
   test("no-match predicate leaves the id unconsumed and no orphan " +
@@ -121,14 +149,14 @@ class DeleteVectorSpec extends SparkSpec {
     val root = tmp("log")
     CowTable.commitFull(base, root, 1L, Seq("part"), keep = 10,
       changeLogKeys = Seq("id"))
-    CowTable.deleteWhereMor(spark, root, 2L, $"score" === -1L, keep = 10)
+    CowTable.deleteWhereDv(spark, root, 2L, $"score" === -1L, keep = 10)
     assert(CowTable.committedIds(spark, root) == Seq(1L),
       "empty delete must not commit")
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sessionState.newHadoopConf())
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$root/batch-2")),
       "empty delete left an orphan batch dir")
-    CowTable.deleteWhereMor(spark, root, 3L, $"score" < 10L, keep = 10,
+    CowTable.deleteWhereDv(spark, root, 3L, $"score" < 10L, keep = 10,
       changeLog = true)
     val log = CowTable.changeLogFor(spark, root, 3L).get
     assert(log.where($"oper" =!= "D").isEmpty, "sidecar not pure-D")

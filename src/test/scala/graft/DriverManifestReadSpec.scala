@@ -126,46 +126,63 @@ class DriverManifestReadSpec extends SparkSpec {
     }
   }
 
-  /** A table with TWO tombstone schema groups at its head: a key
-    * tombstone (id, part) and a full-row one (id, part, score).
+  /** A table with merge-on-read debt at its head: a keyed DV delete
+    * (id 1) and a predicate DV delete (id 4).
     */
-  private def tombstoned(): String = {
+  private def indebted(): String = {
     val root = tmp()
     CowTable.commitFull(rows3, root, 1L, Seq("part"), keep = 100)
     assert(CowTable.deleteKeysMor(spark, root, 2L,
       Seq((1L, "p1")).toDF("id", "part"), Seq("id"), Seq("part"),
       keep = 100))
-    assert(CowTable.deleteWhereMor(spark, root, 3L, col("id") === 4L,
+    assert(CowTable.deleteWhereDv(spark, root, 3L, col("id") === 4L,
       keep = 100))
-    val m = CowTable.currentManifest(spark, root).get
-    assert(m.tombstones.size == 2, "one key and one full-row tombstone")
+    assert(CowTable.currentManifest(spark, root).get.dvs.size == 2,
+      "one sidecar per delete")
     root
   }
 
-  test("tombstone schemas come from the footers: a head read over key " +
-      "and full-row tombstones is BUILT with zero Spark jobs") {
-    val root = tombstoned()
+  test("a head read over DV debt, on a renamed table too, is built " +
+      "with zero Spark jobs") {
+    val root = indebted()
+    val want = Set((2L, "p1", 20.0), (3L, "p2", 30.0), (5L, "p3", 50.0))
     val (jobs, df) = jobsDuring(CowTable.read(spark, root).get)
     assert(jobs == 0L,
-      s"building a read over 2 tombstone groups launched $jobs Spark jobs")
+      s"building a read over 2 DV sidecars launched $jobs Spark jobs")
     assert(df.select("id", "part", "score").as[(Long, String, Double)]
-      .collect().toSet ==
-      Set((2L, "p1", 20.0), (3L, "p2", 30.0), (5L, "p3", 50.0)))
-  }
-
-  test("tombstone groups alias physical to logical names after a " +
-      "rename, still with zero Spark jobs") {
-    val root = tombstoned()
+      .collect().toSet == want)
     assert(CowTable.renameColumn(spark, root, 4L, "id", "key", keep = 100))
     val m = CowTable.currentManifest(spark, root).get
-    assert(m.tombstones.size == 2 && m.mapped,
-      "the rename keeps both tombstones and maps key -> physical id")
-    val (jobs, df) = jobsDuring(CowTable.read(spark, root).get)
-    assert(jobs == 0L,
-      s"building a renamed-table read launched $jobs Spark jobs")
-    assert(df.select("key", "part", "score").as[(Long, String, Double)]
-      .collect().toSet ==
-      Set((2L, "p1", 20.0), (3L, "p2", 30.0), (5L, "p3", 50.0)))
+    assert(m.dvs.size == 2 && m.mapped,
+      "the rename keeps both sidecars and maps key -> physical id")
+    val (renamedJobs, renamed) = jobsDuring(CowTable.read(spark, root).get)
+    assert(renamedJobs == 0L,
+      s"building a renamed-table read launched $renamedJobs Spark jobs")
+    assert(renamed.select("key", "part", "score")
+      .as[(Long, String, Double)].collect().toSet == want)
+  }
+
+  test("a local-frame upsert and keyed delete find their partitions " +
+      "with no Spark job: upsert runs 6 jobs, deleteKeysMor 5") {
+    val root = tmp()
+    CowTable.commitFull(rows3, root, 1L, Seq("part"), keep = 100)
+    val (upJobs, up) = jobsDuring(CowTable.upsert(spark, root, 2L,
+      Seq((1L, "p1", 11.0), (1L, "p1", 11.0), (6L, "p2", 60.0))
+        .toDF("id", "part", "score"),
+      Seq("id"), Seq("part"), keep = 100))
+    assert(up)
+    val (delJobs, del) = jobsDuring(CowTable.deleteKeysMor(spark, root, 3L,
+      Seq((2L, "p1"), (2L, "p1"), (3L, "p2")).toDF("id", "part"),
+      Seq("id"), Seq("part"), keep = 100))
+    assert(del)
+    assert(CowTable.read(spark, root).get.select("id", "score")
+      .as[(Long, Double)].collect().toSet ==
+      Set((1L, 11.0), (4L, 40.0), (5L, 50.0), (6L, 60.0)))
+    // upsert: writeBatch 4 + collectEntries 2; delete: the key
+    // broadcast, one shuffle and the write in writeBatch, then
+    // collectEntries 2
+    assert((upJobs, delJobs) == (6L, 5L),
+      s"upsert launched $upJobs jobs, deleteKeysMor $delJobs")
   }
 
   test("changelog frames are built with zero Spark jobs and keep the " +

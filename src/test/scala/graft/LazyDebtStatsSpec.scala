@@ -12,7 +12,7 @@ import graft.sinks.{CowBucketSpec, CowLazyFileIndex, CowTable, CowV2}
 /** Round-17 planning-floor retirements, pinned:
   *
   *  1. MOR-DEBT snapshots read LAZILY: a cold filtered read of a table
-  *     with outstanding DVs/tombstones materializes O(kept) data
+  *     with outstanding DVs materializes O(kept) data
   *     entries + O(sidecars) — the round-16 debt gate's O(table-files)
   *     eager parse is gone from the read path (a 100 TB table
   *     mid-stream of MOR deletes is the steady state under continuous
@@ -76,7 +76,7 @@ class LazyDebtStatsSpec extends SparkSpec {
     assert(s1 > s0, "the debt read must load its sidecars via the " +
       "kind≠data slice, not a full parse")
     val materialized = e1 - e0
-    val sidecars = m.dvs.size + m.tombstones.size
+    val sidecars = m.dvs.size
     assert(materialized > 0 &&
         materialized <= totalEntries / 5 + sidecars,
       s"debt read must land O(kept)+O(sidecars) entries driver-side: " +
@@ -87,13 +87,13 @@ class LazyDebtStatsSpec extends SparkSpec {
     spark.sql(s"DROP NAMESPACE cow.$ns CASCADE")
   }
 
-  test("a TOMBSTONE-debt snapshot serves the subtraction through the " +
+  test("a predicate-delete DV snapshot serves the mask through the " +
       "lazy programmatic reader too, cold") {
     val root = Files.createTempDirectory("ldt").toString
     CowTable.commitFull(
       spark.range(1000).select($"id", ($"id" % 10).as("p")),
       root, 1L, Seq("p"), keep = 10)
-    require(CowTable.deleteWhereMor(spark, root, 2L,
+    require(CowTable.deleteWhereDv(spark, root, 2L,
       col("id") >= 900L, keep = 10))
     goCold()
     val p0 = cnt(CowTable.prunedLoads, root)
@@ -102,7 +102,7 @@ class LazyDebtStatsSpec extends SparkSpec {
     assert(cnt(CowTable.prunedLoads, root) > p0,
       "the programmatic debt read must plan lazily when cold")
     assert(got == (0L until 900L).filter(_ % 10 == 4).toSet,
-      "tombstone subtraction lost on the lazy path")
+      "DV mask lost on the lazy path")
   }
 
   test("cold statistics are head-only: a stats consult materializes " +

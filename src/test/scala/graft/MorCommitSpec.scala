@@ -13,14 +13,12 @@ import graft.sinks.{CowConcurrentCommitException, CowRange, CowTable}
 
 /** The commit contract every table commit shares (they all run through
   * one lease → recheck → stage → publish → vacuum skeleton), pinned
-  * table-driven. Over the six merge-on-read paths:
+  * table-driven. Over the three merge-on-read paths:
   *
   *  - replaying a committed id returns false and writes nothing;
   *  - a call that changes nothing returns true, leaves no `batch-<id>`
   *    dir and leaves the id free for the next commit — both when no
-  *    file can match and when files were scanned but no row matched
-  *    (every path but [[CowTable.deleteKeysMor]], which always commits
-  *    its key tombstones);
+  *    file can match and when files were scanned but no row matched;
   *  - a change-logged commit publishes `_changes/<id>` and leaves no
   *    `_changes/.tmp-*` staging dir behind;
   *  - a fresh `_retrykeep-<id>` marker refuses the id and the parked
@@ -48,8 +46,7 @@ class MorCommitSpec extends SparkSpec {
       name: String,
       opers: Seq[String],
       run: (String, Long, Boolean, Boolean) => Boolean,
-      noFile: Option[(String, Long) => Boolean],
-      noMatchRule: Boolean = true)
+      noFile: Option[(String, Long) => Boolean])
 
   private def target(hit: Boolean): Column =
     $"id" === (if (hit) 1L else -1L)
@@ -61,11 +58,6 @@ class MorCommitSpec extends SparkSpec {
     if (changeLog) Seq("id") else Nil
 
   private val paths = Seq(
-    MorPath("updateWhereMor", Seq("D", "I"),
-      (r, id, hit, cl) => CowTable.updateWhereMor(spark, r, id, target(hit),
-        bump, keep = 10, changeLogKeys = logKeys(cl)),
-      Some((r, id) => CowTable.updateWhereMor(spark, r, id, target(true),
-        bump, prune = noRange, keep = 10))),
     MorPath("updateWhereDv", Seq("D", "I"),
       (r, id, hit, cl) => CowTable.updateWhereDv(spark, r, id, target(hit),
         bump, keep = 10, changeLogKeys = logKeys(cl)),
@@ -74,17 +66,8 @@ class MorCommitSpec extends SparkSpec {
     MorPath("deleteKeysMor", Seq("D"),
       (r, id, hit, cl) => CowTable.deleteKeysMor(spark, r, id, keys(hit),
         Seq("id"), Seq("part"), keep = 10, changeLog = cl),
-      None, noMatchRule = false),
-    MorPath("deleteKeysDv", Seq("D"),
-      (r, id, hit, cl) => CowTable.deleteKeysDv(spark, r, id, keys(hit),
-        Seq("id"), Seq("part"), keep = 10, changeLog = cl),
-      Some((r, id) => CowTable.deleteKeysDv(spark, r, id,
+      Some((r, id) => CowTable.deleteKeysMor(spark, r, id,
         keys(hit = true, part = "p9"), Seq("id"), Seq("part"), keep = 10))),
-    MorPath("deleteWhereMor", Seq("D"),
-      (r, id, hit, cl) => CowTable.deleteWhereMor(spark, r, id, target(hit),
-        keep = 10, changeLog = cl),
-      Some((r, id) => CowTable.deleteWhereMor(spark, r, id, target(true),
-        prune = noRange, keep = 10))),
     MorPath("deleteWhereDv", Seq("D"),
       (r, id, hit, cl) => CowTable.deleteWhereDv(spark, r, id, target(hit),
         keep = 10, changeLog = cl),
@@ -129,22 +112,21 @@ class MorCommitSpec extends SparkSpec {
       assert(CowTable.committedIds(spark, root) == Seq(1L, 2L))
     }
 
-    if (p.noMatchRule)
-      test(s"${p.name}: a call that changes nothing returns true, leaves " +
-          "no batch dir and leaves the id free") {
-        val root = fresh(p.name)
-        val live = CowTable.read(spark, root).get.collect().toSet
-        assert(p.run(root, 2L, false, true), "no-match call returned false")
-        p.noFile.foreach(f => assert(f(root, 2L), "no-file call failed"))
-        assert(CowTable.committedIds(spark, root) == Seq(1L))
-        assert(!hasBatch(root, 2L), "a no-change call left batch-2")
-        assert(!fs(root).exists(new Path(s"$root/_changes")),
-          "a no-change call staged a changelog")
-        assert(CowTable.read(spark, root).get.collect().toSet == live)
-        // the id is still free: the next real commit takes it
-        assert(p.run(root, 2L, true, false))
-        assert(CowTable.committedIds(spark, root) == Seq(1L, 2L))
-      }
+    test(s"${p.name}: a call that changes nothing returns true, leaves " +
+        "no batch dir and leaves the id free") {
+      val root = fresh(p.name)
+      val live = CowTable.read(spark, root).get.collect().toSet
+      assert(p.run(root, 2L, false, true), "no-match call returned false")
+      p.noFile.foreach(f => assert(f(root, 2L), "no-file call failed"))
+      assert(CowTable.committedIds(spark, root) == Seq(1L))
+      assert(!hasBatch(root, 2L), "a no-change call left batch-2")
+      assert(!fs(root).exists(new Path(s"$root/_changes")),
+        "a no-change call staged a changelog")
+      assert(CowTable.read(spark, root).get.collect().toSet == live)
+      // the id is still free: the next real commit takes it
+      assert(p.run(root, 2L, true, false))
+      assert(CowTable.committedIds(spark, root) == Seq(1L, 2L))
+    }
 
     test(s"${p.name}: a change-logged commit publishes _changes/<id> " +
         "and leaves no staging dir") {

@@ -6,12 +6,12 @@ import org.apache.spark.sql.functions._
 
 import graft.sinks.CowTable
 
-/** Positional deletion vectors ([[graft.sinks.CowTable.deleteWhereDv]]):
-  * (file, row-position) sidecars applied as a codegen'd scan-stage
-  * mask — the byte-economics and plan-shape upgrade over full-row
-  * tombstones, pinned three ways: results identical to the COW twin,
-  * sidecar bytes ≪ full-row tombstone bytes on a wide table, and the
-  * read plan free of any anti-join.
+/** Positional deletion vectors ([[graft.sinks.CowTable.deleteWhereDv]],
+  * [[graft.sinks.CowTable.deleteKeysMor]],
+  * [[graft.sinks.CowTable.updateWhereDv]]): (file, row-position)
+  * sidecars applied as a codegen'd scan-stage mask, pinned three ways:
+  * results identical to the COW twin, sidecar bytes ≪ the bytes a COW
+  * rewrite copies on a wide table, and the read plan free of any join.
   */
 class PosDvSpec extends SparkSpec {
   import spark.implicits._
@@ -20,7 +20,7 @@ class PosDvSpec extends SparkSpec {
     Files.createTempDirectory(s"posdv_$tag").toString
 
   /** 2000 rows, ~1 KB of INCOMPRESSIBLE payload each (chained sha2
-    * hex — a constant pad would deflate the full-row tombstones under
+    * hex — a constant pad would deflate the rewritten rows under
     * snappy and understate their true row-width cost), partitioned —
     * including a SPACE-valued partition so the file-path identity
     * survives URI encoding end to end.
@@ -37,14 +37,13 @@ class PosDvSpec extends SparkSpec {
       .filter(_.kind == kind).map(_.bytes).sum
 
   test("deleteWhereDv equals the COW deleteWhere result, writes " +
-      "position-sized sidecars (≪ full-row tombstones on a wide " +
-      "table), and the read plan has NO anti-join") {
-    val dv = tmp("dv"); val mor = tmp("mor"); val cow = tmp("cow")
-    Seq(dv, mor, cow).foreach(r =>
+      "position-sized sidecars (≪ the COW rewrite on a wide " +
+      "table), and the read plan has NO join") {
+    val dv = tmp("dv"); val cow = tmp("cow")
+    Seq(dv, cow).foreach(r =>
       CowTable.commitFull(wide, r, 1L, Seq("seg"), keep = 10))
     val cond = $"k" < 3 // 600 of 2000 rows, spread over every file
     CowTable.deleteWhereDv(spark, dv, 2L, cond, keep = 10)
-    CowTable.deleteWhereMor(spark, mor, 2L, cond, keep = 10)
     CowTable.deleteWhere(spark, cow, 2L, cond, keep = 10)
     val gotDv = CowTable.read(spark, dv).get
     val want = CowTable.read(spark, cow).get
@@ -53,24 +52,21 @@ class PosDvSpec extends SparkSpec {
       "DV delete diverged from the COW twin")
     // byte economics: positions, not row bytes
     val dvBytes = sidecarBytes(dv, CowTable.KindDv)
-    val tombBytes = sidecarBytes(mor, CowTable.KindTombstone)
-    assert(dvBytes > 0 && dvBytes * 10 < tombBytes,
-      s"DV sidecar ($dvBytes B) should be ≪ full-row tombstones " +
-        s"($tombBytes B)")
+    val rewritten = CowTable.currentManifest(spark, cow).get.files
+      .filter(_.path.startsWith("batch-2/")).map(_.bytes).sum
+    assert(dvBytes > 0 && dvBytes * 10 < rewritten,
+      s"DV sidecar ($dvBytes B) should be ≪ the COW rewrite " +
+        s"($rewritten B)")
     // plan shape: the mask is a scan-stage filter — no join of any
-    // kind in the read plan (the tombstone path necessarily has one)
+    // kind in the read plan
     val dvPlan = gotDv.queryExecution.executedPlan.toString
     assert(!dvPlan.toLowerCase.contains("join"),
       s"DV read plan must be join-free:\n$dvPlan")
     assert(dvPlan.contains("graft_dv_deleted"),
       "DV read plan should carry the scan-stage mask predicate")
-    val morPlan = CowTable.read(spark, mor).get
-      .queryExecution.executedPlan.toString
-    assert(morPlan.toLowerCase.contains("join"),
-      "sanity: the full-row tombstone path reads through an anti-join")
   }
 
-  test("DV deletes compose incrementally, with key tombstones, and " +
+  test("DV deletes compose incrementally, with keyed deletes, and " +
       "with data-skipping reads; fold retires the debt") {
     val root = tmp("mix")
     CowTable.commitFull(wide, root, 1L, Seq("seg"), keep = 10)
@@ -78,12 +74,13 @@ class PosDvSpec extends SparkSpec {
     // a second DV delete scans the MASKED state — no double-marking
     CowTable.deleteWhereDv(spark, root, 3L, $"k" <= 1, keep = 10)
     assert(CowTable.read(spark, root).get.count() == 1600)
-    // key tombstones coexist with DVs on one table
+    // a keyed delete adds its own vectors next to the predicate ones
+    val dvsBefore = CowTable.currentManifest(spark, root).get.dvs.size
     CowTable.deleteKeysMor(spark, root, 4L,
       Seq((5L, "seg 1")).toDF("id", "seg"), Seq("id"), Seq("seg"),
       keep = 10)
     val m = CowTable.currentManifest(spark, root).get
-    assert(m.dvs.nonEmpty && m.tombstones.nonEmpty)
+    assert(m.dvs.size > dvsBefore)
     assert(CowTable.read(spark, root).get.count() == 1599)
     // exactness guards: fast count refuses while debt is outstanding
     assert(CowTable.countFast(spark, root).isEmpty)
@@ -101,7 +98,7 @@ class PosDvSpec extends SparkSpec {
       .collect().toSeq
     assert(CowTable.foldTombstones(spark, root, 5L, keep = 10))
     val after = CowTable.currentManifest(spark, root).get
-    assert(after.dvs.isEmpty && after.tombstones.isEmpty)
+    assert(after.dvs.isEmpty)
     assert(CowTable.read(spark, root).get.orderBy("id", "k")
       .collect().toSeq == before)
     assert(CowTable.countFast(spark, root).contains(1599L))
@@ -121,9 +118,7 @@ class PosDvSpec extends SparkSpec {
     assert(got.count() == 2000 && got.exceptAll(want).isEmpty &&
       want.exceptAll(got).isEmpty)
     val m = CowTable.currentManifest(spark, dv).get
-    assert(m.dvs.nonEmpty && m.tombstones.isEmpty,
-      "DV update must mask positionally, never write full-row " +
-        "tombstones")
+    assert(m.dvs.nonEmpty, "DV update must mask positionally")
     assert(m.files.count(_.path.startsWith("batch-1/")) ==
       CowTable.manifest(spark, dv, 1L).files.size,
       "DV update rewrote a base data file")
@@ -135,8 +130,7 @@ class PosDvSpec extends SparkSpec {
     assert(newBytes * 3 < m.files.map(_.bytes).sum,
       s"DV update wrote $newBytes B — not O(changed)")
     // history() reports the outstanding positional debt: dv_files > 0
-    // marks n_rows as an upper bound (the same exactness caveat as
-    // tombstone_files)
+    // marks n_rows as an upper bound
     val h = CowTable.history(spark, dv).orderBy("snapshot_id")
       .select("snapshot_id", "dv_files").as[(Long, Long)]
       .collect().toMap
@@ -144,15 +138,14 @@ class PosDvSpec extends SparkSpec {
       s"history() must surface DV debt per snapshot: $h")
   }
 
-  test("a new image equal to a DIFFERENT matched row's old image — " +
-      "the hazard that forces updateWhereMor's COW fallback — stays " +
-      "on the DV fast path and is exact") {
+  test("a new image equal to a DIFFERENT matched row's old image " +
+      "stays on the DV path and is exact") {
     val root = tmp("ucollide")
     CowTable.commitFull(
       Seq((1L, 10L), (1L, 20L)).toDF("k", "v"), root, 1L, Nil, keep = 10)
     // both rows match; the first's new image (1,20) equals the
-    // second's old image — full-row tombstones would cancel the fresh
-    // append (lost row); positions cannot
+    // second's old image — an equality-based delete would cancel the
+    // fresh append (lost row); positions cannot
     CowTable.updateWhereDv(spark, root, 2L, $"v" <= 20L,
       Map("v" -> ($"v" + 10L)), keep = 10)
     val m = CowTable.currentManifest(spark, root).get
@@ -160,82 +153,42 @@ class PosDvSpec extends SparkSpec {
       "the collision case must NOT have fallen back to a COW rewrite")
     assert(CowTable.read(spark, root).get.orderBy("v")
       .as[(Long, Long)].collect().toSeq == Seq((1L, 20L), (1L, 30L)))
-    // sanity: the full-row MOR twin solves the same batch via its COW
-    // fallback and agrees
-    val mor = tmp("ucollide_mor")
-    CowTable.commitFull(
-      Seq((1L, 10L), (1L, 20L)).toDF("k", "v"), mor, 1L, Nil, keep = 10)
-    CowTable.updateWhereMor(spark, mor, 2L, $"v" <= 20L,
-      Map("v" -> ($"v" + 10L)), keep = 10)
-    assert(CowTable.read(spark, mor).get.orderBy("v")
-      .as[(Long, Long)].collect().toSeq == Seq((1L, 20L), (1L, 30L)))
   }
 
-  test("an outstanding LEGACY full-row tombstone that collides with a " +
-      "new image still routes updateWhereDv through the COW fallback") {
-    val root = tmp("ulegacy")
-    CowTable.commitFull(
-      spark.range(10).select($"id", ($"id" * 100).as("v")),
-      root, 1L, Nil, keep = 10)
-    CowTable.deleteKeysMor(spark, root, 2L,
-      Seq(5L).toDF("id"), Seq("id"), Nil, keep = 10)
-    assert(CowTable.currentManifest(spark, root).get.tombstones.nonEmpty)
-    // SET id = 5 re-creates the tombstoned key: the legacy key
-    // tombstone (id=5) would anti-join the fresh append away, so the
-    // commit must land as a COW rewrite instead
-    CowTable.updateWhereDv(spark, root, 3L, $"id" === 6L,
-      Map("id" -> lit(5L)), keep = 10)
-    val got = CowTable.read(spark, root).get.orderBy("v")
-      .as[(Long, Long)].collect().toSeq
-    assert(got.map(_._1) == Seq(0L, 1L, 2L, 3L, 4L, 5L, 7L, 8L, 9L) &&
-      got.find(_._2 == 600L).map(_._1).contains(5L),
-      s"legacy-tombstone collision mishandled: $got")
-    val m = CowTable.currentManifest(spark, root).get
-    assert(m.dvs.isEmpty && m.tombstones.isEmpty,
-      "the COW fallback folds the debt for the touched partition")
-  }
-
-  test("deleteKeysDv removes the CURRENT rows with the keys (≡ the " +
+  test("deleteKeysMor removes the CURRENT rows with the keys (≡ the " +
       "COW rewrite), null-safely, and a LATER append of a deleted key " +
-      "survives — the contract key tombstones cannot offer") {
-    val dv = tmp("kdv"); val cow = tmp("kcow"); val mor = tmp("kmor")
+      "survives") {
+    val dv = tmp("kdv"); val cow = tmp("kcow")
     val base = Seq(
       (1L, "p0", 10L), (2L, "p0", 20L), (2L, "p1", 21L),
       (3L, "p1", 30L)).toDF("id", "pt", "v")
       .unionByName(Seq((Option.empty[Long], "p0", 99L))
         .toDF("id", "pt", "v"))
-    Seq(dv, cow, mor).foreach(r =>
+    Seq(dv, cow).foreach(r =>
       CowTable.commitFull(base, r, 1L, Seq("pt"), keep = 10))
     // keys carry the partition value (key-stable contract); includes a
-    // NULL key — the match must be null-safe like the tombstone
-    // subtraction it replaces
+    // NULL key — the match must be null-safe
     val keys = Seq((Some(2L), "p0"), (Some(2L), "p1"), (None, "p0"))
       .toDF("id", "pt")
-    CowTable.deleteKeysDv(spark, dv, 2L, keys, Seq("id"), Seq("pt"),
+    CowTable.deleteKeysMor(spark, dv, 2L, keys, Seq("id"), Seq("pt"),
       keep = 10)
     CowTable.deleteWhere(spark, cow, 2L,
       col("id").isin(2L) || col("id").isNull, keep = 10)
-    CowTable.deleteKeysMor(spark, mor, 2L, keys, Seq("id"), Seq("pt"),
-      keep = 10)
     val got = CowTable.read(spark, dv).get
     val want = CowTable.read(spark, cow).get
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty &&
       got.count() == 2,
       "positional keyed delete must equal the COW rewrite")
     val m = CowTable.currentManifest(spark, dv).get
-    assert(m.dvs.nonEmpty && m.tombstones.isEmpty &&
+    assert(m.dvs.nonEmpty &&
       m.files.size == CowTable.manifest(spark, dv, 1L).files.size,
       "keyed DV delete must mask positionally without rewriting")
-    // the divergence, pinned: append id=2 again on both MOR tables
+    // a later append of a deleted key stays visible
     val fresh = Seq((2L, "p0", 200L)).toDF("id", "pt", "v")
     CowTable.commitAppend(fresh, dv, 3L, Seq("pt"), keep = 10)
-    CowTable.commitAppend(fresh, mor, 3L, Seq("pt"), keep = 10)
     assert(CowTable.read(spark, dv).get
       .where($"v" === 200L).count() == 1,
       "a position mask must NOT swallow a later append of the key")
-    assert(CowTable.read(spark, mor).get
-      .where($"v" === 200L).count() == 0,
-      "(contrast) the key tombstone suppresses the re-appended key")
   }
 
   test("re-deleting already-deleted rows is a no-op (id unconsumed) " +

@@ -24,8 +24,8 @@ class PropertyDmlSpec extends SparkSpec {
     Files.createTempDirectory("propdml").toString
 
   // small value spaces force duplicate rows and cross-row image
-  // collisions — exactly the corners the MOR exactness guards exist
-  // for. Rows as plain tuples (part, name, score) — a spec-local case
+  // collisions — the corners an equality-based delete would get
+  // wrong and positional deletion vectors must not. Rows as plain tuples (part, name, score) — a spec-local case
   // class has no stable outer scope for the encoder.
   private val rowGen: Gen[(Long, String, Long)] = for {
     p <- Gen.chooseNum(0L, 2L)
@@ -35,7 +35,7 @@ class PropertyDmlSpec extends SparkSpec {
   private val tableGen: Gen[List[(Long, String, Long)]] =
     Gen.listOfN(40, rowGen)
 
-  test("deleteWhereMor ≡ deleteWhere on random multiset tables and " +
+  test("deleteWhereDv ≡ deleteWhere on random multiset tables and " +
       "predicates (duplicates and null-free corners included)") {
     val preds = Seq(
       col("score") <= 1L,
@@ -48,7 +48,7 @@ class PropertyDmlSpec extends SparkSpec {
       CowTable.commitFull(df, cow, 1L, Seq("part"), keep = 10)
       CowTable.commitFull(df, mor, 1L, Seq("part"), keep = 10)
       CowTable.deleteWhere(spark, cow, 2L, p, keep = 10)
-      CowTable.deleteWhereMor(spark, mor, 2L, p, keep = 10)
+      CowTable.deleteWhereDv(spark, mor, 2L, p, keep = 10)
       val a = CowTable.read(spark, cow).get.collect()
         .map(_.toString).sorted.toSeq
       val b = CowTable.read(spark, mor).get.collect()
@@ -57,7 +57,7 @@ class PropertyDmlSpec extends SparkSpec {
     }
   }
 
-  test("updateWhereMor ≡ updateWhere under image-colliding SETs on " +
+  test("updateWhereDv ≡ updateWhere under image-colliding SETs on " +
       "random tables, including after a prior MOR delete") {
     val sets = Seq(
       Map("score" -> (col("score") + 1L)), // adjacent-image collisions
@@ -69,15 +69,15 @@ class PropertyDmlSpec extends SparkSpec {
       val df = rows.toDF("part", "name", "score")
       CowTable.commitFull(df, cow, 1L, Seq("part"), keep = 10)
       CowTable.commitFull(df, mor, 1L, Seq("part"), keep = 10)
-      // a prior MOR delete leaves outstanding tombstones in the mix —
-      // the cross-commit collision guard territory
-      CowTable.deleteWhereMor(spark, cow, 2L, col("score") === 5L,
+      // a prior MOR delete leaves outstanding deletion vectors in the
+      // mix when the update runs
+      CowTable.deleteWhereDv(spark, cow, 2L, col("score") === 5L,
         keep = 10)
-      CowTable.deleteWhereMor(spark, mor, 2L, col("score") === 5L,
+      CowTable.deleteWhereDv(spark, mor, 2L, col("score") === 5L,
         keep = 10)
       val p = col("score") <= 2L
       CowTable.updateWhere(spark, cow, 3L, p, s, keep = 10)
-      CowTable.updateWhereMor(spark, mor, 3L, p, s, keep = 10)
+      CowTable.updateWhereDv(spark, mor, 3L, p, s, keep = 10)
       val a = CowTable.read(spark, cow).get.collect()
         .map(_.toString).sorted.toSeq
       val b = CowTable.read(spark, mor).get.collect()
@@ -87,8 +87,7 @@ class PropertyDmlSpec extends SparkSpec {
   }
 
   test("the POSITIONAL forms (deleteWhereDv / updateWhereDv) ≡ their " +
-      "COW twins on random tables, including stacked DV debt and a " +
-      "prior legacy tombstone") {
+      "COW twins on random tables, including stacked DV debt") {
     val sets = Seq(
       Map("score" -> (col("score") + 1L)), // adjacent-image collisions
       Map("name" -> lit("a")),
@@ -98,12 +97,12 @@ class PropertyDmlSpec extends SparkSpec {
       val df = rows.toDF("part", "name", "score")
       CowTable.commitFull(df, cow, 1L, Seq("part"), keep = 10)
       CowTable.commitFull(df, dv, 1L, Seq("part"), keep = 10)
-      // stack the debt kinds: a positional delete AND a legacy
-      // full-row MOR delete are both outstanding when the update runs
+      // stack the debt: two positional deletes are outstanding when
+      // the update runs
       CowTable.deleteWhere(spark, cow, 2L, col("score") === 5L, keep = 10)
       CowTable.deleteWhereDv(spark, dv, 2L, col("score") === 5L, keep = 10)
       CowTable.deleteWhere(spark, cow, 3L, col("name") === "d", keep = 10)
-      CowTable.deleteWhereMor(spark, dv, 3L, col("name") === "d", keep = 10)
+      CowTable.deleteWhereDv(spark, dv, 3L, col("name") === "d", keep = 10)
       val p = col("score") <= 2L
       CowTable.updateWhere(spark, cow, 4L, p, s, keep = 10)
       CowTable.updateWhereDv(spark, dv, 4L, p, s, keep = 10)
@@ -121,9 +120,9 @@ class PropertyDmlSpec extends SparkSpec {
       val root = tmp()
       CowTable.commitFull(rows.toDF("part", "name", "score"),
         root, 1L, Seq("part"), keep = 10)
-      CowTable.deleteWhereMor(spark, root, 2L, col("name") === "b",
+      CowTable.deleteWhereDv(spark, root, 2L, col("name") === "b",
         keep = 10)
-      CowTable.updateWhereMor(spark, root, 3L, col("score") >= 4L,
+      CowTable.updateWhereDv(spark, root, 3L, col("score") >= 4L,
         Map("name" -> lit("hi")), keep = 10)
       CowTable.deleteWhere(spark, root, 4L, col("part") === 1L, keep = 10)
       val got = CowTable.read(spark, root).get.collect()

