@@ -183,14 +183,17 @@ final case class CowDescribeDetailCommand(
       throw new IllegalStateException(s"no committed snapshot at $root"))
     val meta = CowTable.manifestMeta(session, root, head)
     // HEAD-ONLY when the commit carried totals (round-17): the one-row
-    // health probe then never materializes the entry list — every
-    // non-data entry is a DV sidecar, so the head's non-data count is
-    // the DV count. Pre-r17 manifests fall back to the memoized full
-    // parse.
+    // health probe then never materializes the data entry list. Debt
+    // is counted from the sidecar slice, whose decode refuses any
+    // entry that is not a deletion vector. Pre-r17 manifests fall back
+    // to the memoized full parse.
     val (dataFiles, nRows, nBytes, dvs) =
       (meta.totalFiles, meta.totalRows, meta.totalBytes,
           meta.nondataFiles) match {
-        case (Some(f), Some(r), Some(b), Some(d)) => (f, r, b, d)
+        case (Some(f), Some(r), Some(b), Some(0L)) => (f, r, b, 0L)
+        case (Some(f), Some(r), Some(b), Some(_)) =>
+          (f, r, b,
+            CowTable.snapshotSidecars(session, root, head).size.toLong)
         case _ =>
           val m = CowTable.manifest(session, root, head)
           (m.files.size.toLong, m.files.map(_.rows).sum,

@@ -126,8 +126,9 @@ final case class CowManifest(
   /** Live DATA files (what a scan reads). */
   def files: Seq[CowFile] = allFiles.filter(_.kind == CowTable.KindData)
   /** Always empty: merge-on-read deletes are positional deletion
-    * vectors only ([[dvs]]). Kept for callers that still report a
-    * tombstone count, such as the benchmark's `sinks.tombstone_files`.
+    * vectors only ([[dvs]]). Kept only while the benchmark still
+    * reports `sinks.tombstone_files`; it goes when that metric does,
+    * so do not add callers.
     */
   def tombstones: Seq[CowFile] = Nil
   /** Outstanding positional DELETION-VECTOR sidecars (what a scan
@@ -993,10 +994,21 @@ object CowTable {
 
   /** Decode collected entry rows (either the raw manifest shape or the
     * [[normalizedEntries]] frame) into [[CowFile]]s — the one decoder
-    * [[manifestAt]] and the pruned loader share.
+    * [[manifestAt]] and the pruned loader share. An entry of any kind
+    * but data or DV fails loudly: key and full-row tombstones, the
+    * older merge-on-read delete form, are no longer applied, so
+    * reading past one would show its deleted rows again.
     */
   private def filesOfRows(rows: Seq[Row]): Seq[CowFile] =
     rows.filter(_.getAs[String]("path") != null).map { r =>
+      val kind = r.getAs[String]("kind")
+      if (kind != KindData && kind != KindDv)
+        throw new IllegalStateException(
+          s"manifest entry ${r.getAs[String]("path")} has kind " +
+            s"'$kind': only data files and deletion vectors are read. " +
+            "Key and full-row tombstones are no longer supported; with " +
+            "the previous release, fold them (CowTable.foldTombstones) " +
+            "and vacuum the snapshots that still hold them")
       CowFile(
         path = r.getAs[String]("path"),
         part = Option(r.getAs[Map[String, String]]("part"))
@@ -1007,7 +1019,7 @@ object CowTable {
           .getOrElse(Map.empty),
         maxs = Option(r.getAs[Map[String, String]]("maxs"))
           .getOrElse(Map.empty),
-        kind = r.getAs[String]("kind"),
+        kind = kind,
         blooms = Option(
           r.getAs[Map[String, scala.collection.Seq[Long]]]("blooms"))
           .map(_.map { case (k, v) => k -> v.toSeq }).getOrElse(Map.empty),
@@ -6145,9 +6157,10 @@ object CowTable {
     * `keys` must carry the merge keys AND the table's `partCols`
     * (key-derived, as everywhere in this API): only the partitions the
     * keys' own `partCols` values name are read — the same key-stable
-    * partitioning contract as [[upsert]]. Matching is null-safe per
-    * key column: an explicitly-named NULL-keyed row is deleted like
-    * any other. Keys that match no visible row commit nothing, leave no
+    * partitioning contract as [[upsert]]. A row matches when it
+    * equals a key on every key AND partition column, null-safely: a
+    * key deletes only in the partition it names, and an
+    * explicitly-named NULL-keyed row is deleted like any other. Keys that match no visible row commit nothing, leave no
     * `batch-<id>` and keep the id free. Readers apply the positions as
     * a scan-stage mask ([[applyDvs]]); the debt retires when the
     * partition next rewrites or via [[foldTombstones]].
@@ -6179,10 +6192,12 @@ object CowTable {
       val candidates = m.files.filter(f => touched.contains(m.partKeyOf(f)))
       if (candidates.isEmpty) return Leased.NoCommit(dropBatch = false)
       val visible = visibleWithPos(spark, root, m, candidates)
-      // a semi-join ignores duplicate keys, so no distinct() is needed
-      val k = broadcast(keys.select(keyCols.map(col): _*))
+      // a key names a row in its own partition only; a semi-join
+      // ignores duplicate keys, so no distinct() is needed
+      val on = (keyCols ++ partCols).distinct
+      val k = broadcast(keys.select(on.map(col): _*))
       val matched0 = visible.join(k,
-        keyCols.map(c => visible(c) <=> k(c)).reduce(_ && _), "left_semi")
+        on.map(c => visible(c) <=> k(c)).reduce(_ && _), "left_semi")
       val matched = if (changeLog) matched0.localCheckpoint() else matched0
       val fresh = writeDvSidecar(spark, root, m, id, matched)
       if (fresh.isEmpty) Leased.NoCommit(dropBatch = true) // no row matched

@@ -195,6 +195,53 @@ class MetaTablesSpec extends SparkSpec {
     spark.sql(s"DROP NAMESPACE cow.$ns CASCADE")
   }
 
+  test("a manifest entry of kind 'tombstone' (the retired key and " +
+      "full-row delete form) is refused by reads, relationFor and " +
+      "DESCRIBE DETAIL") {
+    val ns = freshNs("mtt")
+    val root = s"${spark.conf.get("spark.sql.catalog.cow.warehouse")}/$ns/t"
+    spark.sql(s"CREATE TABLE cow.$ns.t (id BIGINT, p BIGINT) " +
+      "PARTITIONED BY (p)")
+    spark.sql(s"INSERT INTO cow.$ns.t SELECT id, id % 2 FROM range(10)")
+    // rewrite the head manifest as an older release left it after a
+    // merge-on-read delete: one extra entry of kind "tombstone",
+    // counted in the head's non-data total
+    val head = CowTable.committedIds(spark, root).last
+    val dir = new Path(s"$root/manifest-$head")
+    val forged = java.nio.file.Files.createTempDirectory("mtt_forged")
+      .resolve("m").toString
+    val rows = spark.read.parquet(dir.toString)
+    rows.unionByName(rows.where(col("path").isNotNull).limit(1)
+        .withColumn("path", lit(s"batch-$head/__tomb/part-0.parquet"))
+        .withColumn("kind", lit("tombstone")))
+      .withColumn("nondata_files", lit(1L))
+      .coalesce(1).write.parquet(forged)
+    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    def dataFiles(d: Path) = fs.listStatus(d).toSeq.map(_.getPath)
+      .filterNot(q => q.getName.startsWith("_") || q.getName.startsWith("."))
+    dataFiles(dir).foreach(fs.delete(_, false))
+    dataFiles(new Path(forged)).foreach(q =>
+      fs.rename(q, new Path(dir, q.getName)))
+    def refused(what: String)(body: => Any): Unit = {
+      goCold()
+      val e = intercept[Exception](body)
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(t => String.valueOf(t.getMessage))
+      assert(msgs.exists(_.contains("kind 'tombstone'")),
+        s"$what must refuse the tombstone entry by name, got: $e")
+    }
+    refused("CowTable.read")(CowTable.read(spark, root).get.collect())
+    refused("CowV2.read")(
+      graft.sinks.CowV2.read(spark, root).get.collect())
+    refused("a catalog SELECT")(
+      spark.sql(s"SELECT * FROM cow.$ns.t").collect())
+    refused("format(\"cow\") (relationFor)")(
+      spark.read.format("cow").load(root).collect())
+    refused("DESCRIBE DETAIL")(
+      spark.sql(s"DESCRIBE DETAIL cow.$ns.t").collect())
+    spark.sql(s"DROP NAMESPACE cow.$ns CASCADE")
+  }
+
   test("partition strings render hive-escaped: '/', '=' and '%' in a " +
       "value stay unambiguous in DESCRIBE FILES, SHOW PARTITIONS and " +
       "the files metadata table") {

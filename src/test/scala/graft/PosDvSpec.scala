@@ -191,6 +191,22 @@ class PosDvSpec extends SparkSpec {
       "a position mask must NOT swallow a later append of the key")
   }
 
+  test("deleteKeysMor deletes a key only in the partition it names: " +
+      "the same key in another partition stays") {
+    val dv = tmp("kpart")
+    val base = Seq((2L, "p0", 20L), (3L, "p0", 30L), (3L, "p1", 31L))
+      .toDF("id", "pt", "v")
+    CowTable.commitFull(base, dv, 1L, Seq("pt"), keep = 10)
+    // both partitions are read (p0 for id 2, p1 for id 3), but id 3's
+    // row in p0 is not named and must survive
+    val keys = Seq((2L, "p0"), (3L, "p1")).toDF("id", "pt")
+    assert(CowTable.deleteKeysMor(spark, dv, 2L, keys, Seq("id"),
+      Seq("pt"), keep = 10))
+    assert(CowTable.read(spark, dv).get.orderBy("v")
+      .as[(Long, String, Long)].collect().toSeq == Seq((3L, "p0", 30L)),
+      "a keyed delete must match on the key AND its partition")
+  }
+
   test("re-deleting already-deleted rows is a no-op (id unconsumed) " +
       "and an unpartitioned table takes DV deletes too") {
     val root = tmp("noop")
