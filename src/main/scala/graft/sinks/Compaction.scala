@@ -48,10 +48,6 @@ object Compaction {
     walk(rootPath, "")
   }
 
-  /** Total data bytes under a table root (listing-based). */
-  def tableBytes(spark: SparkSession, path: String): Long =
-    listDataFiles(spark, path).map(_._2.getLen).sum
-
   /** Recover from a crash inside [[compact]]'s rename window: if the
     * table root is GONE but `<path>__old` exists, the crash happened
     * between rename(root→old) and rename(staging→root) — restore the

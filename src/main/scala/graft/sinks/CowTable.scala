@@ -2,6 +2,7 @@ package graft.sinks
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -3197,8 +3198,8 @@ object CowTable {
   /** Dotted paths of atomic orderable leaves inside top-level STRUCT
     * columns: `s.a` for struct `s`'s leaf `a`, recursing to `depth`
     * struct levels (round-18; round-17 collected one). These collect
-    * min/max/null stats alongside the top-level columns in the same
-    * grouped pass, so range/point filters on nested fields skip files
+    * min/max/null stats alongside the top-level columns from the same
+    * Parquet footers, so range/point filters on nested fields skip files
     * too ([[mayMatch]] resolves dotted paths; the file-index
     * translators emit them). The default depth 1 is the budget trade
     * Delta's stats collector makes — deeper nesting multiplies
@@ -3338,26 +3339,15 @@ object CowTable {
     }
   }
 
-  /** Collect per-file (path, bytes, rows, min/max, partition values)
-    * for everything under `batchDir` — ONE Spark job over the files
-    * just written, using the `_metadata` column so path and size come
-    * from the same source (no listing-string join to mismatch).
-    */
-  /** One bloom word: the bit_or over the file's rows of each row's
-    * contributions to word `w` — a row sets `BloomHashes` bits, each
-    * lands in some word; this expression collects word `w`'s share.
-    * Pure scan-stage arithmetic inside the same grouped aggregate as
-    * the min/max stats — no extra pass.
-    */
   /** Per-file Bloom words for ALL `bloomCols` in ONE delta-sized scan:
     * each row contributes a (column, positions) struct per bloom
     * column; two explodes fan those to (file, column, position) and
     * one grouped bit_or ORs them per (file, column, word) — sparse, so
     * the shuffle carries at most min(4·rows, BloomWords) entries per
     * (file, column) — then densify driver-side. One scan regardless of
-    * bloom column count (was one full batch read PER column). Separate
-    * from the min/max aggregate because a per-word CASE in that one
-    * grouped agg would mean BloomWords×BloomHashes codegen terms.
+    * bloom column count (was one full batch read PER column); the only
+    * Spark work of [[collectEntries]], whose other stats a footer holds.
+    * Keyed by `_metadata.file_path`, which is URI-encoded.
     */
   private def collectBlooms(
       spark: SparkSession, batchDir: String, schema: StructType,
@@ -3401,86 +3391,151 @@ object CowTable {
     try new java.net.URI(s).getPath
     catch { case _: java.net.URISyntaxException => s }
 
-  private def collectEntries(
+  /** Every data file under `dir`, one listing per directory: the files
+    * a parquet read of `dir` would see (Spark's own rule: names starting
+    * with `_` or `.` are skipped, except `k=v` partition directories, so
+    * a nested `__dv` sidecar dir is not absorbed). Nil when `dir` is
+    * absent.
+    */
+  private def listDataFiles(fs: org.apache.hadoop.fs.FileSystem,
+      dir: Path): Seq[org.apache.hadoop.fs.FileStatus] = {
+    val listed =
+      try fs.listStatus(dir).toSeq
+      catch { case _: java.io.FileNotFoundException => Nil }
+    listed.flatMap { s =>
+      val n = s.getPath.getName
+      if ((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
+          n.endsWith("._COPYING_")) Nil
+      else if (s.isDirectory) listDataFiles(fs, s.getPath)
+      else Seq(s)
+    }
+  }
+
+  /** Collect per-file (path, bytes, rows, min/max, NULL counts,
+    * partition values) for everything under `batchDir` from the files'
+    * own parquet footers: ONE recursive listing, then the footers read
+    * in parallel on the driver ([[FooterStats]]), no Spark job. Only a
+    * table with `bloomCols` pays [[collectBlooms]]' scan. Partition
+    * values come from the writer's `__gp_<physical>=` directory names,
+    * unescaped: the writer printed them with the same session-time-zone
+    * cast to string as the stats. A file whose footer counts no rows
+    * gets no entry. Manifests store the on-disk LITERAL path: every
+    * consumer (dfFor's string reads, fsck's existence probes, vacuum's
+    * reference checks, CowFileIndex's FileStatus construction) treats
+    * `f.path` as a plain filesystem string.
+    */
+  private[graft] def collectEntries(
       spark: SparkSession, batchDir: String, id: Long,
       schema: StructType, partCols: Seq[String],
       bloomCols: Seq[String] = Nil,
       colMap: Map[String, String] = Map.empty): Seq[CowFile] = {
-    val fs = hfs(spark, batchDir)
-    val anyData = fs.exists(new Path(batchDir)) &&
-      Compaction.tableBytes(spark, batchDir) > 0
-    if (!anyData) return Nil
+    val listed = listDataFiles(hfs(spark, batchDir), new Path(batchDir))
+    if (listed.isEmpty) return Nil
     val cols = schema.fieldNames.toSeq
     val topSc = statCols(schema)
     partCols.foreach(c => require(topSc.contains(c),
       s"partition column $c must be an orderable atomic type"))
     bloomCols.foreach(c => require(cols.contains(c),
       s"bloom column $c is not a table column"))
-    // dotted struct leaves ride the SAME grouped pass (round-17):
-    // col("s.a") extracts inside the aggregation, one extra agg pair
-    // per leaf, no extra scan. Depth comes from the table property
-    // (default 1); the root derives from the batch dir the same way
-    // writeBatch's naming does
+    // dotted struct leaves collect too, to the table's depth (default
+    // 1); the root derives from the batch dir the same way writeBatch's
+    // naming does
     val depthRoot = {
       val i = batchDir.lastIndexOf(s"/$BatchPrefix")
       if (i < 0) batchDir else batchDir.take(i)
     }
     val sc = topSc ++
       nestedStatCols(schema, nestedStatsDepthOf(spark, depthRoot))
-    val aggs = count(lit(1)).as("__rows") +:
-      max(col("_metadata.file_size")).as("__bytes") +:
-      (sc.flatMap(c => Seq(
-        min(col(c)).cast("string").as(s"__min_$c"),
-        max(col(c)).cast("string").as(s"__max_$c"))) ++
-      // per-file NULL counts (Delta-parity stat): same grouped pass,
-      // serves IS NULL / IS NOT NULL file pruning (a NULL struct
-      // counts its leaves NULL — matching IsNull(s.a) semantics)
-      sc.map(c =>
-        sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"__nulls_$c")))
-    val rows = readLogical(spark, Seq(batchDir), schema, colMap,
-        meta = true)
-      .select(col("_metadata.file_path").as("__fp") +: cols.map(col): _*)
-      .groupBy(col("__fp"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-    val bloomsByFile = collectBlooms(spark, batchDir, schema, bloomCols,
-      colMap)
-    val marker = s"/$BatchPrefix$id/"
+    // a stat key's physical path: the top-level name maps, struct
+    // leaves below it never do
+    val phys = colMap.filter { case (l, p) => l != p }
+    def physPath(c: String): Seq[String] = {
+      val parts = if (cols.contains(c)) Seq(c) else c.split('.').toSeq
+      phys.getOrElse(parts.head, parts.head) +: parts.tail
+    }
     val isStr = sc.filter(c =>
       leafType(schema, c).contains(StringType)).toSet
-    rows.toSeq.map { r =>
-      val full = r.getAs[String]("__fp")
+    val tz = spark.sessionState.conf.sessionLocalTimeZone
+    val marker = s"/$BatchPrefix$id/"
+    def relOf(full: String): String = {
       val cut = full.indexOf(marker)
       require(cut >= 0, s"file $full not under $BatchPrefix$id")
-      // `_metadata.file_path` is URI-ENCODED (a space-valued partition
-      // dir arrives as %20, a hive-escaped ':' as %253A). Manifests
-      // store the on-disk LITERAL form: every consumer — dfFor's
-      // string reads, fsck's existence probes, vacuum's reference
-      // checks, CowFileIndex's FileStatus construction — treats f.path
-      // as a plain filesystem string, and Hadoop Path re-escapes it
-      // correctly on its own.
-      val rel = decodeUriPath(full.substring(cut + 1))
-      val mins = sc.flatMap { c =>
-        Option(r.getAs[String](s"__min_$c")).map { v =>
-          c -> (if (isStr(c) && v.length > MaxStatLen) v.take(MaxStatLen) else v)
+      full.substring(cut + 1)
+    }
+    val footers = org.apache.spark.sql.graftbridge.Bridge
+      .readFooters(spark, listed)
+    val entries = listed.zip(footers).flatMap { case (st, footer) =>
+      val rows = FooterStats.rows(footer)
+      if (rows == 0) None
+      else {
+        val rel = relOf(st.getPath.toUri.getPath)
+        val dirs = rel.split('/').toSeq.init.flatMap { seg =>
+          val i = seg.indexOf('=')
+          if (i < 0) None
+          else Some(ExternalCatalogUtils.unescapePathName(seg.take(i)) ->
+            ExternalCatalogUtils.unescapePathName(seg.drop(i + 1)))
+        }.toMap
+        val fileSchema = org.apache.spark.sql.graftbridge.Bridge
+          .sparkSchemaOf(footer).getOrElse(StructType(Nil))
+        val rebase = org.apache.spark.sql.graftbridge.Bridge
+          .dateTimeRebase(spark, footer)
+        def footerStats(c: String): FooterStats.ColStats =
+          (FooterStats.resolve(fileSchema, physPath(c)),
+              leafType(schema, c)) match {
+            case (Some((path, ft)), Some(mt)) =>
+              FooterStats.column(footer, path, ft, mt, tz, rebase)
+            case _ => FooterStats.Unknown
+          }
+        // the directory name holds a partition column's value, the one
+        // value in its file; NULL and '' both print as the default
+        // partition name and may share a file, so there the column's
+        // own footer stats stand, and the value is NULL only when every
+        // row is
+        val partStats = partCols.map { c =>
+          val d = dirs.getOrElse(s"__gp_${physPath(c).head}",
+            throw new IllegalStateException(
+              s"file $rel has no partition directory for $c"))
+          c -> (if (d == ExternalCatalogUtils.DEFAULT_PARTITION_NAME)
+            footerStats(c)
+          else {
+            val v = FooterStats.resolve(fileSchema, physPath(c)) match {
+              case Some((_, ft)) if ft != schema(c).dataType =>
+                FooterStats.widenText(d, ft, schema(c).dataType, tz)
+                  .getOrElse(d)
+              case _ => d
+            }
+            FooterStats.ColStats(Some(v), Some(v), Some(0L))
+          })
+        }.toMap
+        val partMap = partStats.map { case (c, s) =>
+          c -> (if (s.min.nonEmpty) s.min.get
+                else if (s.nulls.contains(rows)) null else "")
         }
-      }.toMap
-      val maxs = sc.flatMap { c =>
-        Option(r.getAs[String](s"__max_$c"))
-          .filter(v => !isStr(c) || v.length <= MaxStatLen)
-          .map(c -> _)
-      }.toMap
-      val blooms = bloomCols.flatMap(c =>
-        bloomsByFile.get((full, c)).map(c -> _)).toMap
-      CowFile(
-        path = rel,
-        part = partCols.map(c => c -> r.getAs[String](s"__min_$c")).toMap,
-        rows = r.getAs[Long]("__rows"),
-        bytes = r.getAs[Long]("__bytes"),
-        mins = mins,
-        maxs = maxs,
-        blooms = blooms,
-        nulls = sc.map(c => c -> r.getAs[Long](s"__nulls_$c")).toMap)
+        val stats = sc.map(c => c -> partStats.getOrElse(c, footerStats(c)))
+        Some((rel, CowFile(
+          path = rel,
+          part = partMap,
+          rows = rows,
+          bytes = st.getLen,
+          mins = stats.flatMap { case (c, s) => s.min.map(v =>
+            c -> (if (isStr(c) && v.length > MaxStatLen) v.take(MaxStatLen)
+                  else v)) }.toMap,
+          maxs = stats.flatMap { case (c, s) => s.max
+            .filter(v => !isStr(c) || v.length <= MaxStatLen)
+            .map(c -> _) }.toMap,
+          nulls = stats.flatMap { case (c, s) => s.nulls.map(c -> _) }
+            .toMap)))
+      }
+    }
+    if (bloomCols.isEmpty) entries.map(_._2)
+    else {
+      // `_metadata.file_path` is URI-ENCODED (a space-valued partition
+      // dir arrives as %20, a hive-escaped ':' as %253A): decode it to
+      // the same literal relative path the listing gives
+      val bloomsByFile = collectBlooms(spark, batchDir, schema, bloomCols,
+        colMap).map { case ((fp, c), w) => (decodeUriPath(relOf(fp)), c) -> w }
+      entries.map { case (rel, f) => f.copy(blooms = bloomCols.flatMap(c =>
+        bloomsByFile.get((rel, c)).map(c -> _)).toMap) }
     }
   }
 
@@ -4354,7 +4409,24 @@ object CowTable {
         throw new CowConcurrentCommitException(
           s"commit $id at $root: an in-flight retry holds this id's " +
             "batch dir — commit under a different id")
-      body match {
+      val outcome =
+        try body
+        catch {
+          // a later id committed while the body ran: this commit is lost
+          // anyway, and the winner's vacuum may have reaped this id's
+          // batch dir under the body's write — report the lost race,
+          // not the I/O error it caused
+          case t: Throwable if scala.util.control.NonFatal(t) &&
+              !t.isInstanceOf[CowConcurrentCommitException] &&
+              committedIds(spark, root).exists(_ > id) =>
+            val e = new CowConcurrentCommitException(
+              s"commit $id at $root: a later commit landed while this " +
+                "one wrote its batch — recompute against the new base " +
+                "and retry (nothing was published)")
+            e.initCause(t)
+            throw e
+        }
+      outcome match {
         case Leased.NoCommit(dropBatch) =>
           if (dropBatch) fs.delete(new Path(s"$root/$BatchPrefix$id"), true)
           return true
@@ -4457,16 +4529,14 @@ object CowTable {
         .map(_.dataType).getOrElse(StringType)
       val stub = CowManifest(id, partCols, effSchema.toDDL, fresh,
         p.colMap, p.retiredPhys)
-      val mins = fresh.map(_.mins.get(keyCol))
       val candidates =
-        // an all-absent min on a STAT column means every batch
-        // key is NULL — null keys match no incumbent, so no
-        // overlap is possible and the probe is skipped entirely
-        if (fresh.isEmpty ||
-            (statCols(effSchema).contains(keyCol) &&
-              mins.forall(_.isEmpty))) Nil
+        // a NULL count equal to every file's rows means every batch
+        // key is NULL — null keys match no incumbent, so no overlap
+        // is possible and the probe is skipped entirely (an absent
+        // min alone proves nothing: the footer may not vouch for it)
+        if (fresh.forall(f => f.nulls.get(keyCol).contains(f.rows))) Nil
         else keptFiles(spark, p, Seq(CowRange(keyCol,
-          foldStat(keyDt, mins, takeMax = false),
+          foldStat(keyDt, fresh.map(_.mins.get(keyCol)), takeMax = false),
           foldStat(keyDt, fresh.map(_.maxs.get(keyCol)),
             takeMax = true))))
       val overlaps = candidates.nonEmpty &&
@@ -5445,19 +5515,22 @@ object CowTable {
     * collected Timestamp would). A driver-resident delta (a
     * `LocalRelation` once optimized, like [[SnapshotTarget.commit]]'s
     * fast path) collects with no Spark job and dedupes on the driver;
-    * any other frame dedupes in one distributed job.
+    * any other frame dedupes per task in one shuffle-free job.
     */
   private def touchedKeys(
       delta: DataFrame, partCols: Seq[String]): Set[String] = {
     val parts = delta.select(partCols.map(c => col(c).cast("string")): _*)
-    val rows = parts.queryExecution.optimizedPlan match {
+    val keyOf = (r: Row) => partKey(partCols,
+      partCols.zipWithIndex.map { case (c, i) => c -> r.getString(i) }.toMap)
+    parts.queryExecution.optimizedPlan match {
       case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-        parts.collect()
-      case _ => parts.distinct().collect()
+        parts.collect().map(keyOf).toSet
+      // one job, no shuffle: each task dedupes its own rows, the driver
+      // the per-task sets (at most tasks × touched partitions keys)
+      case _ =>
+        parts.mapPartitions(rs => rs.map(keyOf).toSet.iterator)(
+          org.apache.spark.sql.Encoders.STRING).collect().toSet
     }
-    rows.map(r => partKey(partCols,
-        partCols.zipWithIndex.map { case (c, i) => c -> r.getString(i) }.toMap))
-      .toSet
   }
 
   private def baseFor(

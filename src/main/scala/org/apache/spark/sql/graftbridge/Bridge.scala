@@ -145,15 +145,68 @@ object Bridge {
       path: String): Option[org.apache.spark.sql.types.StructType] = {
     val conf = spark.asInstanceOf[classic.SparkSession]
       .sessionState.newHadoopConf()
-    val footer = org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+    sparkSchemaOf(org.apache.parquet.hadoop.ParquetFileReader.readFooter(
       conf, new org.apache.hadoop.fs.Path(path),
       org.apache.parquet.format.converter.ParquetMetadataConverter
-        .SKIP_ROW_GROUPS)
+        .SKIP_ROW_GROUPS))
+  }
+
+  /** The Spark schema stored in an already-read footer (see
+    * [[footerSchema]]); None for foreign parquet.
+    */
+  def sparkSchemaOf(
+      footer: org.apache.parquet.hadoop.metadata.ParquetMetadata)
+      : Option[org.apache.spark.sql.types.StructType] =
     Option(footer.getFileMetaData.getKeyValueMetaData
         .get("org.apache.spark.sql.parquet.row.metadata"))
       .flatMap(json => scala.util.Try(
         org.apache.spark.sql.types.DataType.fromJson(json)
           .asInstanceOf[org.apache.spark.sql.types.StructType]).toOption)
+
+  /** The full parquet footers (row groups and their column-chunk
+    * statistics included) of `files`, read on the DRIVER with no Spark
+    * job. Each read starts from the listed `FileStatus`, so it costs
+    * one open and no status probe. Up to 8 footers are read at once on
+    * Spark's own `ThreadUtils.parmap` (`private[spark]`), the pool
+    * `ParquetFileFormat.readParquetFootersInParallel` uses; a single
+    * file is read on the calling thread.
+    */
+  def readFooters(
+      spark: org.apache.spark.sql.SparkSession,
+      files: Seq[org.apache.hadoop.fs.FileStatus])
+      : Seq[org.apache.parquet.hadoop.metadata.ParquetMetadata] = {
+    val conf = spark.asInstanceOf[classic.SparkSession]
+      .sessionState.newHadoopConf()
+    def read(f: org.apache.hadoop.fs.FileStatus) =
+      org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
+        .readFooter(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf),
+          org.apache.parquet.format.converter.ParquetMetadataConverter
+            .NO_FILTER)
+    if (files.size <= 1) files.map(read)
+    else org.apache.spark.util.ThreadUtils.parmap(
+      files, "graft-footers", 8)(read)
+  }
+
+  /** The read-side calendar rebase of a Spark-written parquet file's
+    * DATE days and TIMESTAMP micros, decided from its footer exactly as
+    * `ParquetFileFormat`'s reader decides it: identity for files written
+    * in the default CORRECTED mode, Julian → Gregorian for files whose
+    * footer records a LEGACY write.
+    */
+  def dateTimeRebase(
+      spark: org.apache.spark.sql.SparkSession,
+      footer: org.apache.parquet.hadoop.metadata.ParquetMetadata)
+      : (Int => Int, Long => Long) = {
+    val kv = footer.getFileMetaData.getKeyValueMetaData
+    val mode = new org.apache.spark.sql.execution.datasources.parquet
+      .ParquetOptions(Map.empty[String, String],
+        spark.asInstanceOf[classic.SparkSession].sessionState.conf)
+      .datetimeRebaseModeInRead
+    val utils = org.apache.spark.sql.execution.datasources.DataSourceUtils
+    val spec = utils.datetimeRebaseSpec(kv.get, mode)
+    (utils.createDateRebaseFuncInRead(spec.mode, "Parquet"),
+      utils.createTimestampRebaseFuncInRead(spec, "Parquet"))
   }
 
   /** Spark's OWN parquet reader, DRIVER-SIDE, over an explicit file

@@ -163,7 +163,7 @@ class DriverManifestReadSpec extends SparkSpec {
   }
 
   test("a local-frame upsert and keyed delete find their partitions " +
-      "with no Spark job: upsert runs 6 jobs, deleteKeysMor 5") {
+      "with no Spark job: upsert runs 4 jobs, deleteKeysMor 3") {
     val root = tmp()
     CowTable.commitFull(rows3, root, 1L, Seq("part"), keep = 100)
     val (upJobs, up) = jobsDuring(CowTable.upsert(spark, root, 2L,
@@ -178,11 +178,57 @@ class DriverManifestReadSpec extends SparkSpec {
     assert(CowTable.read(spark, root).get.select("id", "score")
       .as[(Long, Double)].collect().toSet ==
       Set((1L, 11.0), (4L, 40.0), (5L, 50.0), (6L, 60.0)))
-    // upsert: writeBatch 4 + collectEntries 2; delete: the key
-    // broadcast, one shuffle and the write in writeBatch, then
-    // collectEntries 2
-    assert((upJobs, delJobs) == (6L, 5L),
+    // upsert: writeBatch 4; delete: the key broadcast, one shuffle and
+    // the write in writeBatch. collectEntries reads the footers: no job
+    assert((upJobs, delJobs) == (4L, 3L),
       s"upsert launched $upJobs jobs, deleteKeysMor $delJobs")
+  }
+
+  test("a local-frame append runs 2 jobs, and collectEntries none") {
+    val root = tmp()
+    CowTable.commitFull(rows3, root, 1L, Seq("part"), keep = 100)
+    val (jobs, ok) = jobsDuring(CowTable.commitAppend(
+      Seq((6L, "p1", 60.0), (7L, "p4", 70.0)).toDF("id", "part", "score"),
+      root, 2L, Seq("part"), keep = 100))
+    assert(ok)
+    // writeBatch's shuffle and write; the entries come from footers
+    assert(jobs == 2L, s"append launched $jobs jobs")
+    assert(CowTable.read(spark, root).get.count() == 7L)
+  }
+
+  test("a parquet-backed key frame's deleteKeysMor pays one job to " +
+      "find its partitions: 5 jobs in all") {
+    val root = tmp()
+    CowTable.commitFull(rows3, root, 1L, Seq("part"), keep = 100)
+    val keysDir = tmp() + "/keys"
+    Seq((2L, "p1"), (2L, "p1"), (3L, "p2")).toDF("id", "part")
+      .write.parquet(keysDir)
+    val (jobs, del) = jobsDuring(CowTable.deleteKeysMor(spark, root, 2L,
+      spark.read.parquet(keysDir), Seq("id"), Seq("part"), keep = 100))
+    assert(del)
+    assert(CowTable.read(spark, root).get.select("id").as[Long]
+      .collect().toSet == Set(1L, 4L, 5L))
+    // touchedKeys 1 (per-task dedupe, no shuffle; a distinct() would
+    // run 2) + 4 for the delete, whose semi-join over parquet keys
+    // shuffles one stage more than a local frame's broadcast
+    assert(jobs == 5L, s"deleteKeysMor launched $jobs jobs")
+  }
+
+  test("an append to a table with bloomCols still carries its Bloom " +
+      "words") {
+    val root = tmp()
+    CowTable.commitFull(rows3, root, 1L, Seq("part"), keep = 100,
+      bloomCols = Seq("id"))
+    assert(CowTable.commitAppend(
+      Seq((6L, "p1", 60.0), (7L, "p4", 70.0)).toDF("id", "part", "score"),
+      root, 2L, Seq("part"), keep = 100))
+    val fresh = CowTable.currentManifest(spark, root).get.files
+      .filter(_.path.startsWith("batch-2/"))
+    assert(fresh.size == 2)
+    assert(fresh.forall(f => f.blooms.get("id").exists(_.exists(_ != 0L))),
+      s"bloom words missing: ${fresh.map(_.blooms.keySet)}")
+    assert(CowTable.readWhereIn(spark, root, "id", Seq("7"))
+      .select("score").as[Double].collect().toSeq == Seq(70.0))
   }
 
   test("changelog frames are built with zero Spark jobs and keep the " +
