@@ -26,16 +26,19 @@ object Medallion {
     // masking per metadata masking_column — commons/utilities.py:194)
     Task("events", "RAW", 1L) { spark =>
       val df = Normalize.trimAll(Tables.load(spark, sfDir, "events"))
-      ParquetSink(s"$root/raw/events").write(df)
-      // count the WRITTEN parquet (footer metadata) — re-counting the
-      // plan would execute the whole lineage a second time
-      spark.read.parquet(s"$root/raw/events").count()
+      val sink = ParquetSink(s"$root/raw/events")
+      sink.write(df)
+      // count the WRITTEN parquet from its footers, on the driver:
+      // re-counting the plan would execute the whole lineage a second
+      // time, and re-reading the table costs three Spark jobs
+      sink.rowCount(spark)
     },
     Task("documents", "RAW", 2L) { spark =>
       val df = Normalize.trimAll(Tables.load(spark, sfDir, "documents"))
         .withColumn("source", Mask.hashColumn(col("source")))
-      ParquetSink(s"$root/raw/documents").write(df)
-      spark.read.parquet(s"$root/raw/documents").count()
+      val sink = ParquetSink(s"$root/raw/documents")
+      sink.write(df)
+      sink.rowCount(spark)
     },
 
     // CURATED: key-map upsert (method_hlp analog — self-read target
@@ -46,7 +49,7 @@ object Medallion {
           StructField("event_type", StringType),
           StructField("event_type_key", LongType))))
       val fresh = KeyMapUpsert.newKeys(
-        spark.read.parquet(s"$root/raw/events"),
+        Tables.parquet(spark, s"$root/raw/events"),
         target, "event_type", "event_type_key")
       // pin the plan so the count and the conditional write execute
       // the same rows exactly once
@@ -66,8 +69,9 @@ object Medallion {
           .select(c("c_custkey"), lower(c("c_name")).as("c_name_key"),
             c("c_mktsegment"), n("n_name").as("nation")),
         batchId, "graft", 4L)
-      ParquetSink(s"$root/curated/customer_dim").write(dim)
-      spark.read.parquet(s"$root/curated/customer_dim").count()
+      val sink = ParquetSink(s"$root/curated/customer_dim")
+      sink.write(dim)
+      sink.rowCount(spark)
     },
 
     // CURATED: fact enrichment (sales_fact analog — broadcast left
@@ -83,15 +87,16 @@ object Medallion {
             keys = Seq("l_suppkey" -> "s_suppkey"),
             select = Seq("s_name" -> "s_name")))),
         batchId, "graft", 5L)
-      ParquetSink(s"$root/curated/sales_fact",
-        partitionBy = Seq("l_returnflag")).write(fact)
-      spark.read.parquet(s"$root/curated/sales_fact").count()
+      val sink = ParquetSink(s"$root/curated/sales_fact",
+        partitionBy = Seq("l_returnflag"))
+      sink.write(fact)
+      sink.rowCount(spark)
     },
 
     // SEMANTIC: thin-layer aggregation via the parameterized SqlRunner
     // (tl_sm_gosales_overview_01.sql analog)
     Task("thin_layer", "SEMANTIC", 6L) { spark =>
-      spark.read.parquet(s"$root/curated/sales_fact")
+      Tables.parquet(spark, s"$root/curated/sales_fact")
         .createOrReplaceTempView("sales_fact")
       val out = SqlRunner.run(spark,
         """SELECT l_returnflag, l_linestatus,
@@ -101,8 +106,9 @@ object Medallion {
           | '{batch_id}' AS batch_id
           |FROM sales_fact GROUP BY l_returnflag, l_linestatus""".stripMargin,
         Map("batch_id" -> batchId))
-      ParquetSink(s"$root/semantic/thin_layer").write(out)
-      spark.read.parquet(s"$root/semantic/thin_layer").count()
+      val sink = ParquetSink(s"$root/semantic/thin_layer")
+      sink.write(out)
+      sink.rowCount(spark)
     })
 
   /** Runs the whole medallion DAG; returns the audit records. */

@@ -2349,8 +2349,7 @@ object CowTable {
   /** A complete `_changes/<id>` sidecar's schema, from one data file's
     * footer ([[Bridge.footerSchema]]: driver-side, no Spark job) — None
     * when the dir is missing or has no `_SUCCESS`. The one listing is
-    * also the `_SUCCESS` probe. A footer without a Spark schema falls
-    * back to Spark's inference.
+    * also the `_SUCCESS` probe.
     */
   private def sidecarSchema(
       spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
@@ -3391,26 +3390,6 @@ object CowTable {
     try new java.net.URI(s).getPath
     catch { case _: java.net.URISyntaxException => s }
 
-  /** Every data file under `dir`, one listing per directory: the files
-    * a parquet read of `dir` would see (Spark's own rule: names starting
-    * with `_` or `.` are skipped, except `k=v` partition directories, so
-    * a nested `__dv` sidecar dir is not absorbed). Nil when `dir` is
-    * absent.
-    */
-  private def listDataFiles(fs: org.apache.hadoop.fs.FileSystem,
-      dir: Path): Seq[org.apache.hadoop.fs.FileStatus] = {
-    val listed =
-      try fs.listStatus(dir).toSeq
-      catch { case _: java.io.FileNotFoundException => Nil }
-    listed.flatMap { s =>
-      val n = s.getPath.getName
-      if ((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
-          n.endsWith("._COPYING_")) Nil
-      else if (s.isDirectory) listDataFiles(fs, s.getPath)
-      else Seq(s)
-    }
-  }
-
   /** Collect per-file (path, bytes, rows, min/max, NULL counts,
     * partition values) for everything under `batchDir` from the files'
     * own parquet footers: ONE recursive listing, then the footers read
@@ -3429,7 +3408,7 @@ object CowTable {
       schema: StructType, partCols: Seq[String],
       bloomCols: Seq[String] = Nil,
       colMap: Map[String, String] = Map.empty): Seq[CowFile] = {
-    val listed = listDataFiles(hfs(spark, batchDir), new Path(batchDir))
+    val listed = FsListing.listDataFiles(hfs(spark, batchDir), new Path(batchDir))
     if (listed.isEmpty) return Nil
     val cols = schema.fieldNames.toSeq
     val topSc = statCols(schema)
@@ -3838,6 +3817,11 @@ object CowTable {
 
   private def lockPath(root: String, id: Long) =
     new Path(s"$root/_commit-$id.lock")
+
+  /** The id of a root-level `_commit-<id>.lock` lease name. */
+  private def leaseIdOf(name: String): Option[Long] =
+    if (!name.startsWith("_commit-")) None
+    else name.stripPrefix("_commit-").stripSuffix(".lock").toLongOption
 
   /** Acquire the commit lease for `id` — an ATOMIC create-if-absent of
     * `_commit-<id>.lock`. On a local filesystem this is NIO
@@ -6804,18 +6788,26 @@ object CowTable {
       .flatMap(p => p.split("/").headOption
         .flatMap(_.stripPrefix(BatchPrefix).toLongOption))
       .toSet
-    fs.listStatus(new Path(root)).toSeq
+    // A lower id whose `_commit-<id>.lock` is in this same listing may
+    // still be writing its batch dir: it is doomed (a later id
+    // committed), but deleting the dir under it fails its write tasks.
+    // The dead-lease sweep below removes the lock, so the next vacuum
+    // reaps the dir.
+    val batchListing = fs.listStatus(new Path(root)).toSeq
+    val leased: Set[Long] = batchListing
+      .flatMap(s => leaseIdOf(s.getPath.getName)).toSet
+    batchListing
       .filter(s => s.isDirectory && s.getPath.getName.startsWith(BatchPrefix))
       .filter(_.getPath.getName.stripPrefix(BatchPrefix).toLongOption
         .exists(i => i < newest && !liveBatches.contains(i) &&
-          !retryKeepFresh.contains(i) && !pendingStages.contains(i)))
+          !retryKeepFresh.contains(i) && !pendingStages.contains(i) &&
+          !leased.contains(i)))
       .foreach(s => fs.delete(s.getPath, true))
     // dead commit leases: an id at or behind the frontier can never
     // commit again (replay guard), so its lock is a crash leftover
     fs.listStatus(new Path(root)).toSeq
-      .filter(s => !s.isDirectory && s.getPath.getName.startsWith("_commit-"))
-      .filter(_.getPath.getName.stripPrefix("_commit-").stripSuffix(".lock")
-        .toLongOption.exists(_ <= newest))
+      .filter(s => !s.isDirectory &&
+        leaseIdOf(s.getPath.getName).exists(_ <= newest))
       .foreach(s => fs.delete(s.getPath, false))
     // changelog sidecars age out with their manifests: the feed serves
     // ranges starting at a RETAINED snapshot, so sidecars behind the

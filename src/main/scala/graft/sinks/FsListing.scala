@@ -1,9 +1,10 @@
 package graft.sinks
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 
-/** Shared committed-id listing for the `<prefix><id>/_SUCCESS` commit
-  * layout [[CowTable]] and [[SnapshotTarget]] both use — extracted in
+/** File-system listings shared across the sinks. The committed-id
+  * listing serves the `<prefix><id>/_SUCCESS` commit layout
+  * [[CowTable]] and [[SnapshotTarget]] both use — extracted in
   * r20 (review): the glob optimization had been applied twice in
   * parallel, and the identical ~20 lines (metachar guard string
   * included) would otherwise have to be fixed twice forever.
@@ -15,12 +16,49 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * currentManifest / frontier poll starts here). Roots containing
   * glob metacharacters keep the probe-per-dir path (a glob would
   * misread them as patterns).
+  *
+  * File-source listing: [[leafFiles]] and [[listDataFiles]] apply the
+  * hidden-name rule Spark's file index lists a parquet path with, so
+  * the driver-side footer reads (commit entries, row counts, schemas)
+  * see the files a `spark.read.parquet` of a Spark-written table sees.
   */
-private[sinks] object FsListing {
+object FsListing {
 
   private val GlobMeta = "*?[]{}\\"
 
-  def committedIdsUnder(
+  /** Every file under `dir` that Spark's file index lists, one listing
+    * per directory (`InMemoryFileIndex.shouldFilterOutPathName`): names
+    * starting with `_` or `.` and `._COPYING_` leftovers are skipped,
+    * except `k=v` partition directories and the parquet summary files
+    * (`_metadata`, `_common_metadata`). A file path lists as itself; Nil
+    * when `dir` is absent.
+    */
+  def leafFiles(fs: FileSystem, dir: Path): Seq[FileStatus] = {
+    val listed =
+      try fs.listStatus(dir).toSeq
+      catch { case _: java.io.FileNotFoundException => Nil }
+    listed.flatMap { s =>
+      val n = s.getPath.getName
+      val hidden = (n.startsWith("_") && !n.contains("=")) ||
+        n.startsWith(".") || n.endsWith("._COPYING_")
+      if (hidden && !n.startsWith("_common_metadata") &&
+          !n.startsWith("_metadata")) Nil
+      else if (s.isDirectory) leafFiles(fs, s.getPath)
+      else Seq(s)
+    }
+  }
+
+  /** The data files a parquet read of `dir` scans: [[leafFiles]] minus
+    * the summary files (the file index's `isDataPath`), so a nested
+    * `__dv` sidecar dir is not absorbed either.
+    */
+  def listDataFiles(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    leafFiles(fs, dir).filterNot { s =>
+      val n = s.getPath.getName
+      (n.startsWith("_") && !n.contains("=")) || n.startsWith(".")
+    }
+
+  private[sinks] def committedIdsUnder(
       fs: FileSystem, root: String, prefix: String): Seq[Long] = {
     val rootPath = new Path(root)
     if (root.exists(GlobMeta.contains(_))) {

@@ -1,6 +1,8 @@
 package graft.sinks
 
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Sink descriptors (SURVEY §2.1 S6-S12). Declarative: mode + layout;
   * partitioning comes from metadata (`TableDef.partitionKeys`) — the
@@ -43,6 +45,21 @@ final case class ParquetSink(
         if (dynamicOverwrite) "dynamic" else "static")
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
       .parquet(path)
+  }
+
+  /** The rows a `spark.read.parquet(path).count()` returns, summed from
+    * the row groups of every data file's footer on the driver: one
+    * recursive listing under Spark's hidden-name rule
+    * ([[FsListing.listDataFiles]]) and one footer read per file, no
+    * Spark job. A re-read count of the written table pays a schema
+    * inference job and two counting jobs.
+    */
+  def rowCount(spark: SparkSession): Long = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val files = FsListing.listDataFiles(
+      p.getFileSystem(spark.sessionState.newHadoopConf()), p)
+    org.apache.spark.sql.graftbridge.Bridge.readFooters(spark, files)
+      .map(_.getBlocks.asScala.map(_.getRowCount).sum).sum
   }
 }
 

@@ -104,35 +104,20 @@ final case class JdbcSource(
   * empty-target fallback; SURVEY §3.2.6).
   */
 object TargetTable {
-  /** True if the directory tree under `p` contains any data file
-    * (ignoring _temporary/_SUCCESS and other underscore/dot metadata).
+  /** The table at `path`, its schema read from one footer on the
+    * driver ([[org.apache.spark.sql.graftbridge.Bridge.footerSchema]]).
+    * Falls back to an empty frame ONLY for genuine first-run states: a
+    * missing path, or a directory with no data file anywhere (the
+    * listing skips `_temporary`/`_SUCCESS` and other underscore/dot
+    * names; partitioned targets keep files under key=value subdirs).
+    * An existing-but-unreadable target (a corrupt data file) must FAIL,
+    * not bootstrap: its footer read throws, because a key-map upsert
+    * fed a silently-empty target would reissue duplicate surrogate keys.
     */
-  private def hasDataFiles(
-      fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Boolean = {
-    val name = p.getName
-    if (name.startsWith("_") || name.startsWith(".")) false
-    else if (fs.getFileStatus(p).isFile) true
-    else fs.listStatus(p).exists(s => hasDataFiles(fs, s.getPath))
-  }
-
-  def readOrEmpty(spark: SparkSession, path: String, schema: StructType): DataFrame = {
-    // Attempt the read; fall back to an empty frame ONLY for genuine
-    // first-run states (missing path, or a directory with no data files
-    // anywhere — partitioned targets keep files under key=value
-    // subdirs). An existing-but-unreadable target (corrupt files,
-    // leftover _temporary garbage next to real data) must FAIL, not
-    // bootstrap: a key-map upsert fed a silently-empty target would
-    // reissue duplicate surrogate keys.
-    try spark.read.parquet(path)
-    catch {
-      case e: org.apache.spark.sql.AnalysisException =>
-        val p = new org.apache.hadoop.fs.Path(path)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fs.exists(p) || !hasDataFiles(fs, p))
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        else throw e
+  def readOrEmpty(spark: SparkSession, path: String, schema: StructType): DataFrame =
+    org.apache.spark.sql.graftbridge.Bridge.footerSchema(spark, path) match {
+      case Some(s) => spark.read.schema(s).parquet(path)
+      case None => spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     }
-  }
 }

@@ -131,28 +131,63 @@ object Bridge {
         length = length))
   }
 
-  /** The Spark schema a parquet file's writer stored in its footer
-    * (the `org.apache.spark.sql.parquet.row.metadata` key — the same key
-    * `ParquetFileFormat`'s schema inference reads first), read on the
-    * DRIVER from the footer alone: no Spark job, unlike
-    * `spark.read.parquet(path).schema`, whose `mergeSchemasInParallel`
-    * launches one even for one file. None when the footer carries no
-    * Spark schema (foreign parquet) — callers fall back to inference,
-    * whose parquet-to-Spark type conversion handles that case.
+  /** The schema `spark.read.parquet(path)` infers, read on the DRIVER
+    * from one footer: no Spark job, unlike inference, whose
+    * `mergeSchemasInParallel` launches one even for one file. The file
+    * is chosen as `ParquetUtils.splitFiles` chooses it, from the file
+    * index's listing ([[graft.sinks.FsListing.leafFiles]]): a
+    * `_common_metadata` summary, else a `_metadata` summary, else the
+    * path-sorted first data file. Its schema is the footer's Spark
+    * schema key when present, else the parquet schema converted by
+    * Spark's own `ParquetFileFormat.readSchemaFromFooter` under the
+    * converter inference builds from the session conf (`nanosAsLong`
+    * included), made nullable as the file source makes it. Partition
+    * columns are not in a footer: a read given this schema infers them
+    * from the directory names as before. A session that merges parquet
+    * schemas keeps Spark's inference, which reads every footer. None
+    * when the path is absent or holds no data file; a file that is not
+    * parquet throws.
     */
   def footerSchema(
       spark: org.apache.spark.sql.SparkSession,
       path: String): Option[org.apache.spark.sql.types.StructType] = {
-    val conf = spark.asInstanceOf[classic.SparkSession]
-      .sessionState.newHadoopConf()
-    sparkSchemaOf(org.apache.parquet.hadoop.ParquetFileReader.readFooter(
-      conf, new org.apache.hadoop.fs.Path(path),
-      org.apache.parquet.format.converter.ParquetMetadataConverter
-        .SKIP_ROW_GROUPS))
+    val cs = spark.asInstanceOf[classic.SparkSession]
+    val sqlConf = cs.sessionState.conf
+    val conf = cs.sessionState.newHadoopConf()
+    val p = new org.apache.hadoop.fs.Path(path)
+    val leaves = graft.sinks.FsListing.leafFiles(p.getFileSystem(conf), p)
+      .sortBy(_.getPath.toString)
+    def named(n: String) = leaves.find(_.getPath.getName == n)
+    val chosen = named("_common_metadata").orElse(named("_metadata"))
+      .orElse(leaves.headOption)
+    chosen.map { f =>
+      if (new org.apache.spark.sql.execution.datasources.parquet
+          .ParquetOptions(Map.empty[String, String], sqlConf).mergeSchema)
+        spark.read.parquet(path).schema
+      else {
+        val footer = org.apache.spark.sql.execution.datasources.parquet
+          .ParquetFooterReader.readFooter(
+            org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf),
+            org.apache.parquet.format.converter.ParquetMetadataConverter
+              .SKIP_ROW_GROUPS)
+        val converter = new org.apache.spark.sql.execution.datasources
+          .parquet.ParquetToSparkSchemaConverter(
+            assumeBinaryIsString = sqlConf.isParquetBinaryAsString,
+            assumeInt96IsTimestamp = sqlConf.isParquetINT96AsTimestamp,
+            inferTimestampNTZ = sqlConf.parquetInferTimestampNTZEnabled,
+            nanosAsLong = sqlConf.legacyParquetNanosAsLong,
+            respectUnknownTypeAnnotation =
+              sqlConf.parquetReaderRespectUnknownTypeAnnotation)
+        org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+          .readSchemaFromFooter(
+            new org.apache.parquet.hadoop.Footer(f.getPath, footer), converter)
+          .asNullable
+      }
+    }
   }
 
-  /** The Spark schema stored in an already-read footer (see
-    * [[footerSchema]]); None for foreign parquet.
+  /** The Spark schema key of an already-read footer; None for foreign
+    * parquet.
     */
   def sparkSchemaOf(
       footer: org.apache.parquet.hadoop.metadata.ParquetMetadata)
@@ -221,10 +256,8 @@ object Bridge {
     * control-plane datasets of O(commit) rows (cow manifests under the
     * size seam) — a 10-row manifest parse must not pay a distributed
     * job's scheduling round-trip, the same argument as the driver-side
-    * write. None when the footer carries no Spark schema (not written
-    * by Spark — callers fall back to the distributed read, whose
-    * schema conversion handles foreign parquet). Rows are copied out
-    * of the reader's reused buffers before materializing.
+    * write. Rows are copied out of the reader's reused buffers before
+    * materializing.
     */
   /** `maxRows` bounds the DECODED row count, not just bytes: a highly
     * compressible manifest (long near-identical paths dictionary/RLE

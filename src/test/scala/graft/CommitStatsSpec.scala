@@ -355,18 +355,8 @@ class CommitStatsSpec extends SparkSpec {
     assertSame(dvs.map(_.copy(kind = CowTable.KindData)),
       aggregateEntries(s"$t/batch-6/__dv", 6L, dvSchema, Seq("p")))
 
-    val jobs = new java.util.concurrent.atomic.AtomicLong(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet(): Unit
-    }
-    org.apache.spark.sql.graftbridge.Bridge.waitListenerBusEmpty(spark)
-    spark.sparkContext.addSparkListener(l)
-    try {
-      CowTable.collectEntries(spark, s"$t/batch-5", 5L, schema, Seq("p"))
-      org.apache.spark.sql.graftbridge.Bridge.waitListenerBusEmpty(spark)
-    } finally spark.sparkContext.removeSparkListener(l)
-    assert(jobs.get == 0L, s"collectEntries launched ${jobs.get} jobs")
+    val (jobs, _) = jobsDuring(
+      CowTable.collectEntries(spark, s"$t/batch-5", 5L, schema, Seq("p")))
+    assert(jobs == 0L, s"collectEntries launched $jobs jobs")
   }
 }

@@ -644,6 +644,27 @@ class CowTableSpec extends SparkSpec {
       "dead lease not vacuumed")
   }
 
+  test("vacuum keeps the batch dir of a lower id whose commit lease is " +
+      "held, and reaps it once the dead lease is swept") {
+    val root = tmp()
+    val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
+    def rows(v: Double) = Seq((1L, 0, v)).toDF("id", "pb", "v")
+    CowTable.commitFull(rows(0.0), root, 1L, Seq("pb"))
+    // a writer of id 5 holds its lease and has begun its batch dir
+    val lock5 = new Path(s"$root/_commit-5.lock")
+    val batch5 = new Path(s"$root/batch-5")
+    fs.create(lock5, false).close()
+    fs.create(new Path(batch5, "part-00000-w.c000.snappy.parquet"), false)
+      .close()
+    CowTable.upsert(spark, root, 6L, rows(6.0), Seq("id"), Seq("pb"))
+    assert(fs.exists(batch5), "a leased writer's batch dir was vacuumed")
+    assert(!fs.exists(lock5), "dead lease not vacuumed")
+    CowTable.upsert(spark, root, 7L, rows(7.0), Seq("id"), Seq("pb"))
+    assert(!fs.exists(batch5), "unleased dead batch dir not reaped")
+    assert(CowTable.read(spark, root).get.as[(Long, Int, Double)]
+      .collect().toSeq == Seq((1L, 0, 7.0)))
+  }
+
   test("SAFE widening commits (int->long: old files upcast on read); " +
       "breaking changes refuse; carried blooms drop when the string " +
       "form changes (float->double) but survive integer widening") {

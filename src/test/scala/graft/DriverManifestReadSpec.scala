@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 import org.apache.hadoop.fs.Path
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.sinks.CowTable
@@ -27,24 +26,6 @@ class DriverManifestReadSpec extends SparkSpec {
     (1L, "p1", 10.0), (2L, "p1", 20.0),
     (3L, "p2", 30.0), (4L, "p2", 40.0),
     (5L, "p3", 50.0)).toDF("id", "part", "score")
-
-  /** Spark jobs launched while running `body`, listener bus drained
-    * before each read so stragglers cannot cross the boundary.
-    */
-  private def jobsDuring[T](body: => T): (Long, T) = {
-    val count = new java.util.concurrent.atomic.AtomicLong(0)
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        count.incrementAndGet(): Unit
-    }
-    org.apache.spark.sql.graftbridge.Bridge.waitListenerBusEmpty(spark)
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val r = body
-      org.apache.spark.sql.graftbridge.Bridge.waitListenerBusEmpty(spark)
-      (count.get(), r)
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
 
   test("cold manifest parse under the seam: ZERO Spark jobs, " +
       "and it resolves exactly what the warm memo held") {
@@ -280,14 +261,14 @@ class DriverManifestReadSpec extends SparkSpec {
   }
 
   test("footerSchema gives the schema Spark infers for a Spark-written " +
-      "file, and None for a footer without a Spark schema") {
+      "file and for a footer without a Spark schema") {
     import org.apache.spark.sql.graftbridge.Bridge
     val dir = tmp()
     rows3.write.parquet(s"$dir/spark")
     val file = new java.io.File(s"$dir/spark").listFiles()
       .map(_.getPath).filter(_.endsWith(".parquet")).head
     val footer = Bridge.footerSchema(spark, file)
-    assert(footer.isDefined)
+    assert(footer.contains(spark.read.parquet(file).schema))
     assert(spark.read.schema(footer.get).parquet(file).schema ==
       spark.read.parquet(file).schema)
     val msg = org.apache.parquet.schema.MessageTypeParser
@@ -299,6 +280,9 @@ class DriverManifestReadSpec extends SparkSpec {
     try w.write(new org.apache.parquet.example.data.simple
       .SimpleGroupFactory(msg).newGroup().append("id", 7L))
     finally w.close()
-    assert(Bridge.footerSchema(spark, foreign.toString).isEmpty)
+    assert(Bridge.sparkSchemaOf(Bridge.readFooters(spark,
+      Seq(fs(dir).getFileStatus(foreign))).head).isEmpty)
+    assert(Bridge.footerSchema(spark, foreign.toString)
+      .contains(spark.read.parquet(foreign.toString).schema))
   }
 }

@@ -7,6 +7,36 @@ import graft.pipeline.{DagRunner, Medallion, Task}
 class PipelineSpec extends SparkSpec {
   import spark.implicits._
 
+  test("a second-batch medallion DAG runs a pinned number of Spark jobs, " +
+      "and every task's rowsIngested is a Spark re-count of its output") {
+    val root = Files.createTempDirectory("graft-medallion-jobs").toString
+    Medallion.run(spark, sfDir, root, batchId = "j1")
+    val keyMap = s"$root/curated/event_type_map"
+    val keysBefore = spark.read.parquet(keyMap).count()
+    val (jobs, runs) =
+      jobsDuring(Medallion.run(spark, sfDir, root, batchId = "j2"))
+    assert(runs.map(_.tblName) == Seq("events", "documents",
+      "event_type_map", "customer_dim", "sales_fact", "thin_layer"))
+    assert(runs.forall(_.jobStatus == "Success"),
+      runs.map(_.exception).mkString("; "))
+    val outputs = Map("events" -> "raw/events", "documents" -> "raw/documents",
+      "customer_dim" -> "curated/customer_dim",
+      "sales_fact" -> "curated/sales_fact",
+      "thin_layer" -> "semantic/thin_layer")
+    runs.filter(r => outputs.contains(r.tblName)).foreach { r =>
+      assert(r.rowsIngested ==
+        spark.read.parquet(s"$root/${outputs(r.tblName)}").count(), r.tblName)
+    }
+    // the key map appends only new keys: its count is the table's growth
+    assert(runs.find(_.tblName == "event_type_map").get.rowsIngested ==
+      spark.read.parquet(keyMap).count() - keysBefore)
+    // the DAG's own work only: the writes, the key map's cache + count
+    // (no append: it finds no new key), the aggregations and the audit
+    // append. Row counts and input schemas come from footers on the
+    // driver: re-read counts and schema inference would add 25 jobs.
+    assert(jobs == 19L, s"second-batch DAG ran $jobs Spark jobs")
+  }
+
   test("medallion DAG runs end-to-end with full audit trail") {
     val root = Files.createTempDirectory("graft-medallion").toString
     val runs = Medallion.run(spark, sfDir, root, batchId = "b1")

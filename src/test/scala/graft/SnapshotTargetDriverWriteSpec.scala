@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-
 import graft.sinks.SnapshotTarget
 
 /** Round-20 pin for the SnapshotTarget driver-side commit fast path
@@ -16,21 +14,6 @@ import graft.sinks.SnapshotTarget
   */
 class SnapshotTargetDriverWriteSpec extends SparkSpec {
   import spark.implicits._
-
-  private def jobsDuring[T](body: => T): (Long, T) = {
-    val count = new java.util.concurrent.atomic.AtomicLong(0)
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        count.incrementAndGet(): Unit
-    }
-    org.apache.spark.sql.graftbridge.Bridge.waitListenerBusEmpty(spark)
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val r = body
-      org.apache.spark.sql.graftbridge.Bridge.waitListenerBusEmpty(spark)
-      (count.get(), r)
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
 
   test("a LocalRelation snapshot commits with zero Spark jobs and " +
       "reads back identically; a distributed frame keeps the job path") {

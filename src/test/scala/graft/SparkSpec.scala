@@ -16,4 +16,23 @@ object TestSpark {
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   def sfDir: String = TestSpark.sfDir
+
+  /** Spark jobs launched while running `body`, listener bus drained
+    * before each read so stragglers cannot cross the boundary.
+    */
+  def jobsDuring[T](body: => T): (Long, T) = {
+    val count = new java.util.concurrent.atomic.AtomicLong(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        count.incrementAndGet(): Unit
+    }
+    org.apache.spark.sql.graftbridge.Bridge.waitListenerBusEmpty(spark)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val r = body
+      org.apache.spark.sql.graftbridge.Bridge.waitListenerBusEmpty(spark)
+      (count.get(), r)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
 }
