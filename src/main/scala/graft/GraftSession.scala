@@ -28,8 +28,10 @@ object GraftSession {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      // testdata events.parquet carries TIMESTAMP(NANOS) which the parquet
-      // reader rejects; read as long and convert in Tables.load.
+      // the parquet reader rejects TIMESTAMP(NANOS) columns unless it
+      // reads them as a nanosecond epoch long. No test-data set has one
+      // (events.ts is TIMESTAMP(MICROS)); a foreign file that does still
+      // reads, as a LongType column.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // testdata timestamps are timezone-less micros; read them as the
       // session-UTC TIMESTAMP (matching the DuckDB oracle, which treats

@@ -22,18 +22,9 @@ object Tables {
     Bridge.footerSchema(spark, path)
       .fold(spark.read)(s => spark.read.schema(s)).parquet(path)
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val raw = parquet(spark, s"$dir/$name.parquet")
-    // events.ts is TIMESTAMP(NANOS); with nanosAsLong it arrives as a
-    // nanosecond epoch long. Integer-divide (ns epoch > 2^53, so float
-    // division would lose precision) down to micros = Spark's native
-    // timestamp resolution. The generated values are micro-aligned, so
-    // this matches DuckDB's epoch_us() exactly.
-    if (name == "events" &&
-        raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)
-      raw.withColumn("ts",
-        org.apache.spark.sql.functions.timestamp_micros(
-          org.apache.spark.sql.functions.expr("ts DIV 1000")))
-    else raw
-  }
+  /** Every test-data set stores `events.ts` as TIMESTAMP(MICROS), which
+    * reads as Spark's native TIMESTAMP; no column needs converting.
+    */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame =
+    parquet(spark, s"$dir/$name.parquet")
 }

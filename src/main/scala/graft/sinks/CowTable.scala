@@ -3518,7 +3518,20 @@ object CowTable {
     }
   }
 
-  /** `split`, when set, is a (column, totalBins) pair: the column (NOT
+  /** Write `rewrite0` as the data files of `batchDir`, replacing the
+    * dir whole, one directory level `__gp_<physical>=<value>` per
+    * partition column.
+    *
+    * DRIVER-SIDE branch: a frame whose optimized plan is a
+    * `LocalRelation` (its rows already on the driver) of 1 to
+    * [[driverManifestMaxRows]] rows, with no `split` and no `sortCols`,
+    * is written by [[writeRowsDriverSide]] with no Spark job, through
+    * Spark's own `ParquetWriteSupport`, `_SUCCESS` last. Every other
+    * frame takes the Spark write (a hash shuffle by partition value,
+    * then the write: 2 jobs). Either way a bucket-spec'd table's files
+    * are tagged afterwards.
+    *
+    * `split`, when set, is a (column, totalBins) pair: the column (NOT
     * part of the table) participates in the repartitioning so one
     * partition value fans out over several write tasks → several
     * files, and is dropped before the write. The EXPLICIT bin count
@@ -3543,7 +3556,26 @@ object CowTable {
         rewrite0(c).as(mapped.getOrElse(c, c))): _*)
     val partCols = partCols0.map(c => mapped.getOrElse(c, c))
     val sortCols = sortCols0.map(c => mapped.getOrElse(c, c))
-    if (partCols.isEmpty) {
+    val spark = rewrite.sparkSession
+    type LocalRelation =
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    // only a plan whose every leaf is a LocalRelation optimizes to one
+    // holding rows; any other plan (a scan, an RDD) skips an optimizer
+    // pass that its Spark write repeats anyway
+    val local =
+      if (split.nonEmpty || sortCols.nonEmpty || !rewrite.queryExecution
+          .analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation]))
+        None
+      else rewrite.queryExecution.optimizedPlan match {
+        case lr: LocalRelation
+            if lr.data.nonEmpty && lr.data.size <= driverManifestMaxRows =>
+          Some(lr.data)
+        case _ => None
+      }
+    if (local.nonEmpty)
+      writeRowsDriverSide(spark, local.get, rewrite.schema, batchDir,
+        partCols)
+    else if (partCols.isEmpty) {
       val shaped = split match {
         case Some((s, n)) => rewrite.repartitionByRange(n, col(s)).drop(s)
         case None => rewrite
@@ -3578,20 +3610,45 @@ object CowTable {
       sorted.write.mode("overwrite")
         .option("partitionOverwriteMode", "static")
         .partitionBy(gp: _*).parquet(batchDir)
-      // bucket-spec'd tables: tag the just-written files so the layout
-      // stays planner-declarable across EVERY write path (append, COW
-      // rewrite, compaction, optimize, stage — they all land here)
-      val i = batchDir.lastIndexOf(s"/$BatchPrefix")
-      if (i > 0) {
-        val root = batchDir.substring(0, i)
-        val spark = rewrite.sparkSession
-        bucketSpecOf(spark, root)
-          .filter(bs => partCols.contains(bs.partCol))
-          .foreach(bs => tagBucketFiles(spark, batchDir,
-            StructType(rewrite.schema.filterNot(f =>
-              f.name.startsWith("__gp_"))), bs))
-      }
     }
+    // bucket-spec'd tables: tag the just-written files so the layout
+    // stays planner-declarable across EVERY write path (append, COW
+    // rewrite, compaction, optimize, stage — they all land here)
+    val i = batchDir.lastIndexOf(s"/$BatchPrefix")
+    if (partCols.nonEmpty && i > 0) {
+      val root = batchDir.substring(0, i)
+      bucketSpecOf(spark, root)
+        .filter(bs => partCols.contains(bs.partCol))
+        .foreach(bs => tagBucketFiles(spark, batchDir,
+          StructType(rewrite.schema.filterNot(f =>
+            f.name.startsWith("__gp_"))), bs))
+    }
+  }
+
+  /** [[writeBatch]]'s driver branch: `rows` (of `schema`) grouped by
+    * partition directory, each value cast to string under the session
+    * time zone and escaped as Spark's writer names the dir, one Parquet
+    * file per directory, as one Spark write task writes it: NULL and ''
+    * share the default partition's file.
+    */
+  private def writeRowsDriverSide(
+      spark: SparkSession,
+      rows: Seq[org.apache.spark.sql.catalyst.InternalRow],
+      schema: StructType, batchDir: String, partCols: Seq[String]): Unit = {
+    val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
+    val dirOf = partCols.map { c =>
+      val i = schema.fieldIndex(c)
+      val cast = org.apache.spark.sql.catalyst.expressions.Cast(
+        org.apache.spark.sql.catalyst.expressions.BoundReference(
+          i, schema(i).dataType, schema(i).nullable), StringType, tz)
+      (r: org.apache.spark.sql.catalyst.InternalRow) =>
+        ExternalCatalogUtils.getPartitionPathString(s"__gp_$c",
+          Option(cast.eval(r)).map(_.toString).orNull)
+    }
+    val groups = rows.groupBy(r => dirOf.map(_(r)).mkString("/"))
+    org.apache.spark.sql.graftbridge.Bridge.writeParquetDirDriverSide(
+      spark, batchDir, schema,
+      groups.iterator.map { case (dir, rs) => dir -> rs.iterator })
   }
 
   /** `mapping` carries the snapshot's column mapping + retired set —
@@ -3674,20 +3731,16 @@ object CowTable {
     // `_SUCCESS`-last commit point; a giant full/checkpoint manifest
     // (above the threshold) keeps the distributed write.
     if (rows.size <= driverManifestMaxRows) {
-      val fs = hfs(spark, dir)
-      val p = new Path(dir)
-      if (fs.exists(p)) fs.delete(p, true)
-      fs.mkdirs(p)
-      val enc = manifestRowEncoder.createSerializer()
-      org.apache.spark.sql.graftbridge.Bridge.writeParquetDriverSide(
+      val enc = manifestRowSerializer.get()
+      org.apache.spark.sql.graftbridge.Bridge.writeParquetDirDriverSide(
         spark, dir, manifestRowEncoder.schema,
-        rows.iterator.map(enc.apply))
-      fs.create(new Path(p, "_SUCCESS"), true).close()
+        Iterator("" -> rows.iterator.map(enc.apply)))
     } else
       rows.toDS().repartition(1).write.mode("overwrite").parquet(dir)
   }
 
-  /** Manifest row-count ceiling for the driver-side single-file write;
+  /** Row-count ceiling for the driver-side writes — a manifest's
+    * single file, and a driver-resident data batch in [[writeBatch]];
     * above it the write stays a distributed Spark job (a full manifest
     * of millions of files should not serialize through one driver
     * thread). Spec/ops-tunable via system property.
@@ -3698,6 +3751,12 @@ object CowTable {
 
   private lazy val manifestRowEncoder =
     org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[CowManifestRow]()
+
+  /** One manifest row serializer per thread: building one generates
+    * its projection anew, and a serializer is not thread-safe.
+    */
+  private val manifestRowSerializer = ThreadLocal.withInitial(() =>
+    manifestRowEncoder.createSerializer())
 
   /** Does every live data file of `files` carry a bucket tag matching
     * its manifest partition value — the planner-declarable condition
@@ -4353,7 +4412,8 @@ object CowTable {
     *     id (an FS listing, no Spark job) — false when `id` is already
     *     committed;
     *  1. refuse an id whose `batch-<id>` a fresh `_retrykeep-<id>`
-    *     marker shields;
+    *     marker shields, unless `ownsRetryKeep` (the marker is the
+    *     caller's own, over its own staged batch);
     *  1. run `body` and act on its [[Leased]] outcome: under the
     *     table-wide manifest lock ([[acquireManifestLock]]) verify the
     *     head is still `basedOn` (the cross-id lost-update guard; on a
@@ -4371,7 +4431,8 @@ object CowTable {
     */
   private def leasedCommit(
       spark: SparkSession, root: String, id: Long,
-      base: Option[CowManifest], basedOn: Option[Long], keep: Option[Int])(
+      base: Option[CowManifest], basedOn: Option[Long], keep: Option[Int],
+      ownsRetryKeep: Boolean = false)(
       body: => Leased): Boolean = {
     val fs = hfs(spark, root)
     var vacuumKnown: Map[Long, Seq[String]] = Map.empty
@@ -4389,7 +4450,7 @@ object CowTable {
       // every retry attempt behind unrelated commits; the retry path's
       // own id-skip (appendWithRetryImpl avoids ids under foreign fresh
       // markers) keeps the window to a crash-then-reclaim race.
-      if (freshRetryKeep(fs, root, id))
+      if (!ownsRetryKeep && freshRetryKeep(fs, root, id))
         throw new CowConcurrentCommitException(
           s"commit $id at $root: an in-flight retry holds this id's " +
             "batch dir — commit under a different id")
@@ -4565,7 +4626,12 @@ object CowTable {
     * ingest, where [[commitPartitions]]' rewrite-the-touched-partition
     * contract would cost a partition rewrite per micro-batch for zero
     * benefit: an append costs exactly the batch's own bytes, whatever
-    * the table or partition size. The flip side, stated plainly:
+    * the table or partition size. In Spark jobs, a driver-resident
+    * batch (a local frame, see [[writeBatch]]) is written on the driver
+    * and entries come from the footers, so a plain append runs 0 jobs;
+    * a distributed batch runs 2 (a shuffle by partition value and the
+    * write); `bloomCols`, CHECK constraints and `changeLogKeys` each add
+    * their scans. The flip side, stated plainly:
     * appends never collapse duplicate keys (the table is a multiset —
     * use [[upsert]] for keyed tables), and repeated appends FRAGMENT
     * partitions into one file per batch — [[compactPartitions]] is the
@@ -4653,9 +4719,17 @@ object CowTable {
     val effSchema = effSchemaOf(Some(p), batch.schema)
     validateEvolution(p, effSchema, partCols)
     val commitMapping = mappingForAdds(Some(p), effSchema)
-    leasedCommit(spark, root, id, Some(p), Some(p.id), Some(keep)) {
+    val fs = hfs(spark, root)
+    // a retry whose next id is its own staged batch's (it lost the
+    // based-on check to a commit under a LOWER id) holds that id's fresh
+    // claim marker itself: adopting the files in place must not be
+    // refused as another retry's. Ours only while every staged file is
+    // still there — a stale marker may have been swept and re-claimed.
+    val ownsRetryKeep = protectStage && reuse.exists(s => s.batchId == id &&
+      s.fresh.forall(f => fs.exists(new Path(s"$root/${f.path}"))))
+    leasedCommit(spark, root, id, Some(p), Some(p.id), Some(keep),
+        ownsRetryKeep) {
       val batchDir = s"$root/$BatchPrefix$id"
-      val fs = hfs(spark, root)
       if (protectStage) {
         // a PENDING WAP STAGE parked on this very id: batch-<id> is
         // that stage's only data and the restage below would overwrite
@@ -4681,7 +4755,7 @@ object CowTable {
         def claim(): Boolean =
           try { fs.create(retryKeepPath(root, id), false).close(); true }
           catch { case _: java.io.IOException => false }
-        if (!claim()) {
+        if (!ownsRetryKeep && !claim()) {
           if (freshRetryKeep(fs, root, id))
             throw new CowConcurrentCommitException(
               s"commit $id at $root: another in-flight retry holds " +

@@ -94,13 +94,8 @@ object SnapshotTarget {
     df.queryExecution.optimizedPlan match {
       case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation
           if lr.data.size <= driverWriteMaxRows =>
-        val fs = hfs(df.sparkSession, root)
-        val p = new Path(dir)
-        if (fs.exists(p)) fs.delete(p, true)
-        fs.mkdirs(p)
-        org.apache.spark.sql.graftbridge.Bridge.writeParquetDriverSide(
-          df.sparkSession, dir, lr.schema, lr.data.iterator)
-        fs.create(new Path(p, "_SUCCESS"), true).close()
+        org.apache.spark.sql.graftbridge.Bridge.writeParquetDirDriverSide(
+          df.sparkSession, dir, lr.schema, Iterator("" -> lr.data.iterator))
       case _ =>
         df.write.mode("overwrite").parquet(dir)
     }

@@ -56,15 +56,16 @@ object Bridge {
     * Spark job. Built from `ParquetFileFormat.prepareWrite` — the exact
     * machinery `FileFormatWriter` hands its tasks — so the bytes are
     * byte-compatible with a `df.write.parquet` of the same schema
-    * (same `ParquetWriteSupport`, same session codec/config). Used for
-    * control-plane datasets of O(commit) rows (cow manifests): a
-    * 10-row manifest write must not pay a distributed job's scheduling
-    * + shuffle overhead per commit — the same reason Delta writes its
-    * commit log driver-side. The caller owns directory semantics
-    * (pre-clean, `_SUCCESS` marker AFTER this returns — the marker
-    * stays the commit point exactly as with the job-based write).
+    * (same `ParquetWriteSupport`, same session codec/config), and the
+    * name has the shape Spark's writer gives a task's first file
+    * (`part-00000-<uuid>.c000.snappy.parquet`), so a bucket tag lands
+    * where it lands on a Spark-written file. Used for datasets of
+    * O(commit) rows (cow manifests, driver-resident data batches): a
+    * 10-row write must not pay a distributed job's scheduling + shuffle
+    * overhead per commit — the same reason Delta writes its commit log
+    * driver-side. [[writeParquetDirDriverSide]] owns the directory.
     */
-  def writeParquetDriverSide(
+  private def writeParquetDriverSide(
       spark: org.apache.spark.sql.SparkSession,
       dir: String,
       schema: org.apache.spark.sql.types.StructType,
@@ -81,10 +82,35 @@ object Bridge {
           new org.apache.hadoop.mapreduce.TaskID(
             new org.apache.hadoop.mapreduce.JobID("graft-driver", 0),
             org.apache.hadoop.mapreduce.TaskType.MAP, 0), 0))
-    val file = s"$dir/part-00000-${java.util.UUID.randomUUID()}-c000" +
+    val file = s"$dir/part-00000-${java.util.UUID.randomUUID()}.c000" +
       factory.getFileExtension(attempt)
     val writer = factory.newInstance(file, schema, attempt)
     try rows.foreach(writer.write) finally writer.close()
+  }
+
+  /** Replace the directory `dir` whole with one parquet file per entry
+    * of `files`, written DRIVER-SIDE by [[writeParquetDriverSide]]: the
+    * directory is deleted (a no-op for a fresh one; the file creates
+    * make the directories), each `(subDir, rows)` lands in `dir/subDir`
+    * (`""` for `dir` itself), and `_SUCCESS` is created LAST, so the
+    * marker stays the commit point exactly as with the job-based write.
+    * A failure part-way leaves a directory without the marker, as a
+    * failed Spark write does.
+    */
+  def writeParquetDirDriverSide(
+      spark: org.apache.spark.sql.SparkSession,
+      dir: String,
+      schema: org.apache.spark.sql.types.StructType,
+      files: Iterator[(String, Iterator[org.apache.spark.sql.catalyst.InternalRow])])
+      : Unit = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    fs.delete(p, true)
+    files.foreach { case (sub, rows) =>
+      writeParquetDriverSide(spark, if (sub.isEmpty) dir else s"$dir/$sub",
+        schema, rows)
+    }
+    fs.create(new org.apache.hadoop.fs.Path(p, "_SUCCESS"), true).close()
   }
 
   /** Spark's OWN parquet row reader as a serializable function over

@@ -138,6 +138,45 @@ class AppendRetrySpec extends SparkSpec {
     assert(rows.where(col("v") === "racer").count() == 1)
   }
 
+  test("a retry whose next id is its own staged batch's adopts the " +
+      "files in place instead of refusing its own claim marker") {
+    import spark.implicits._
+    val root = s"${tmp()}/t"
+    CowTable.commitFull(Seq((0L, "base")).toDF("id", "v"), root, 1L, Nil)
+    val fs = new Path(root).getFileSystem(
+      spark.sessionState.newHadoopConf())
+    // another in-flight retry's fresh claim on id 2: ours stages as id 3
+    val foreign = new Path(s"$root/_retrykeep-2")
+    fs.create(foreign, false).close()
+    val competed = new java.util.concurrent.atomic.AtomicBoolean(false)
+    var stagedNames: Set[String] = Set.empty
+    val landed = CowTable.appendWithRetryImpl(
+      Seq((7L, "mine")).toDF("id", "v"), root, Nil,
+      keep = 5, sortCols = Nil, bloomCols = Nil, changeLogKeys = Nil,
+      changeLogRequired = false, maxAttempts = 3,
+      onStagedForTest = () => {
+        // that retry lands id 2, BELOW our stage: our based-on check
+        // fails, and the next id, head + 1 = 3, is our own stage's
+        if (competed.compareAndSet(false, true)) {
+          stagedNames = fs.listStatus(new Path(s"$root/batch-3")).toSeq
+            .map(_.getPath.getName).filter(_.endsWith(".parquet")).toSet
+          fs.delete(foreign, false)
+          assert(CowTable.commitAppend(
+            Seq((99L, "racer")).toDF("id", "v"), root, 2L, Nil, keep = 5))
+        }
+      },
+      waitMs = 100L)
+    assert(landed == 3L)
+    assert(stagedNames.nonEmpty)
+    assert(CowTable.manifest(spark, root, 3L).files
+      .filter(_.path.startsWith("batch-3/"))
+      .map(_.path.split("/").last).toSet == stagedNames)
+    assert(!fs.exists(new Path(s"$root/_retrykeep-3")))
+    val rows = CowTable.read(spark, root).get
+    assert(rows.count() == 3)
+    assert(rows.where(col("v") === "mine").count() == 1)
+  }
+
   test("a mapping-changing winner invalidates the staged batch: the " +
       "retry re-stages under the fresh physical mapping and still lands") {
     import spark.implicits._
